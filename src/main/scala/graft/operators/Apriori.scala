@@ -47,24 +47,17 @@ object Apriori {
     * plan runs unchanged — at 100 TB that is the only tier. */
   private val LocalRowLimit = 2L << 20
 
-  def frequentItemsets(rows: DataFrame, minSupportPct: Int, maxLen: Int): DataFrame =
-    frequentItemsets(rows, minSupportPct, maxLen, LocalRowLimit)
-
-  private[graft] def frequentItemsets(rows: DataFrame, minSupportPct: Int,
-      maxLen: Int, localRowLimit: Long): DataFrame = {
+  def frequentItemsets(rows: DataFrame, minSupportPct: Int, maxLen: Int): DataFrame = {
     require(minSupportPct >= 1 && minSupportPct <= 100,
       s"Apriori wants minSupportPct in [1, 100], got $minSupportPct")
     require(maxLen >= 1 && maxLen <= 6,
       s"Apriori wants maxLen in [1, 6] (the itemset grid is O(|items|^maxLen)), got $maxLen")
-    val b = graft.Q.persistOnce(
+    val gate = new LocalTier(LocalRowLimit, Seq(rows.schema("bid").dataType))
+    val b = gate.cache(
       rows.select(col("bid"), col("item").cast("string").as("item")).distinct())
-    if (b.count() <= math.min(localRowLimit, LocalRowLimit)) {
-      val arr = b.collect()
-      // null bid/item semantics stay with the distributed tier's
-      // join/groupBy null handling rather than being re-derived here
-      if (!arr.exists(r => r.isNullAt(0) || r.isNullAt(1)))
-        return runLocal(rows.sparkSession,
-          arr.map(r => (r.get(0), r.getString(1))), minSupportPct, maxLen)
+    gate.collect(b).foreach { case Seq(arr) =>
+      return runLocal(rows.sparkSession,
+        arr.map(r => (r.get(0), r.getString(1))), minSupportPct, maxLen)
     }
     val minsup = graft.Q.persistOnce(b.agg(
       expr(s"(count(distinct bid) * $minSupportPct + 99) div 100").as("minsup")))

@@ -36,35 +36,24 @@ object Bfs {
     * list inside the bound walks on the driver at zero per-round job
     * cost. Without it each round's frontier join RE-COMPUTES the
     * caller's (possibly expensive — q162's is a 4-table join) edge
-    * derivation; the persistOnce below fixes that for the distributed
+    * derivation; the gate cache below fixes that for the distributed
     * tier too. Local ≡ distributed pinned in LocalTierSpec. */
   private val LocalEdgeLimit = 4L << 20
 
-  def hops(edges: DataFrame, src: Long, rounds: Int): DataFrame =
-    hops(edges, src, rounds, LocalEdgeLimit)
-
-  private[graft] def hops(edges: DataFrame, src: Long, rounds: Int,
-      localEdgeLimit: Long): DataFrame = {
+  def hops(edges: DataFrame, src: Long, rounds: Int): DataFrame = {
     val spark = edges.sparkSession
-    // persistOnce BEFORE the rounds: each round's frontier join otherwise
-    // recomputes the caller's edge derivation from scratch. Ownership
-    // guard (the r16 CC posture): release only a cache this call created.
-    val eP = edges.select(col("src"), col("dst"))
-    val eOurs = eP.storageLevel == org.apache.spark.storage.StorageLevel.NONE
-    val e = graft.Q.persistOnce(eP)
-    val integral = Seq(edges.schema("src").dataType, edges.schema("dst").dataType)
-      .forall(t => t == org.apache.spark.sql.types.LongType ||
-        t == org.apache.spark.sql.types.IntegerType ||
-        t == org.apache.spark.sql.types.ShortType)
-    if (integral && e.count() <= math.min(localEdgeLimit, LocalEdgeLimit)) {
-      val arr = e.collect()
-      // the gate cache stays pinned on the local route (bounded, and
-      // repeat evaluations re-read it for free — releasing measured the
-      // warm-pass benefit away, r16 IsoBench A/B)
-      if (!arr.exists(r => r.isNullAt(0) || r.isNullAt(1)))
-        return runLocal(spark,
-          arr.map(r => (r.getAs[Number](0).longValue, r.getAs[Number](1).longValue)),
-          src, rounds)
+    // cache BEFORE the rounds: each round's frontier join otherwise
+    // recomputes the caller's edge derivation from scratch. The driver
+    // tier widens integral endpoints to long, exactly like the union
+    // coercion.
+    val gate = new LocalTier(LocalEdgeLimit,
+      Seq(edges.schema("src").dataType, edges.schema("dst").dataType),
+      supported = LocalTier.integral(edges.schema("src").dataType))
+    val e = gate.cache(edges.select(col("src"), col("dst")))
+    gate.collect(e).foreach { case Seq(arr) =>
+      return runLocal(spark,
+        arr.map(r => (r.getAs[Number](0).longValue, r.getAs[Number](1).longValue)),
+        src, rounds)
     }
     var dist = graft.Q.persistOnce(spark.range(1)
       .select(lit(src).as("node"), lit(0).cast("int").as("hops")))
@@ -87,7 +76,7 @@ object Bfs {
     // the returned O(|V|) state is cache-backed and materialized; the
     // O(|E|) edge cache is only a recompute fallback now — release it
     // (guide §5: |E| >> |V| at scale)
-    if (eOurs) e.unpersist()
+    gate.release()
     dist
   }
 

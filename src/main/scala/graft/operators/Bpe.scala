@@ -80,18 +80,19 @@ object Bpe {
   /** Run `iters` merge rounds; returns the learned merge table
     * (iteration, left, right, pair count) and the final vocab.
     *
-    * Size-guarded routing (the PageRank pattern, `PageRank.scala:61`):
+    * Size-guarded routing (the PageRank pattern):
     * the merge loop's state is the distinct-WORD dictionary, which is
     * bounded (~10^6 entries) however large the corpus — natural-language
     * vocabulary grows ~O(corpus^0.5) (Heaps' law), so even a 100 TB
-    * corpus's dict fits the driver. When it does (≤ `localWordLimit`
-    * words), the dictionary is collected ONCE after the one corpus-wide
-    * `initVocab` pass and the merge loop runs in memory with incremental
-    * pair-count maintenance — each round costs O(words containing the
-    * merged pair), not O(dict), and zero Spark jobs. That is what lets
-    * training reach production merge counts (30k+): the distributed loop
-    * costs one argmax job + one materialization PER MERGE, which is
-    * correct but scheduler-bound past a few hundred rounds.
+    * corpus's dict fits the driver. When it does (≤ 2M words, gated by
+    * [[LocalTier]]), the dictionary is collected ONCE after the one
+    * corpus-wide `initVocab` pass and the merge loop runs in memory with
+    * incremental pair-count maintenance — each round costs O(words
+    * containing the merged pair), not O(dict), and zero Spark jobs. That
+    * is what lets training reach production merge counts (30k+): the
+    * distributed loop costs one argmax job + one materialization PER
+    * MERGE, which is correct but scheduler-bound past a few hundred
+    * rounds.
     *
     * Dictionaries past the driver budget (synthetic/adversarial key
     * spaces) run the distributed loop. Both routes compute the identical
@@ -103,28 +104,18 @@ object Bpe {
     * route (so downstream dictionary joins broadcast for free) and a
     * persisted distributed frame otherwise; `unpersist()` on the local
     * result is a harmless no-op. */
-  def train(
-      vocab0: DataFrame,
-      iters: Int,
-      localWordLimit: Long = 1L << 21): (Seq[(Int, String, String, Long)], DataFrame) = {
-    val v = vocab0.persist()
-    val n = v.count()
-    if (n <= localWordLimit) {
-      val rows = v.select("word", "freq", "toks").collect()
-        .map(r => (r.getString(0), r.getLong(1), r.getSeq[String](2).toVector))
-      v.unpersist()
+  def train(vocab0: DataFrame, iters: Int): (Seq[(Int, String, String, Long)], DataFrame) = {
+    val gate = new LocalTier(LocalWordLimit)
+    val v = gate.cache(vocab0)
+    gate.collect(v.select("word", "freq", "toks")).foreach { case Seq(collected) =>
+      val rows = collected.map(r => (r.getString(0), r.getLong(1), r.getSeq[String](2).toVector))
       val (merges, fin) = trainLocalRows(rows, iters)
       val spark = vocab0.sparkSession
       import spark.implicits._
-      (merges, fin.toSeq.toDF("word", "freq", "toks"))
-    } else trainDistributed(v, iters)
-  }
-
-  /** Distributed merge loop — one pair-count + argmax + merge round per
-    * iteration over the (already persisted) vocab frame. */
-  private[graft] def trainDistributed(
-      vocab0: DataFrame, iters: Int): (Seq[(Int, String, String, Long)], DataFrame) = {
-    var vocab = vocab0
+      return (merges, fin.toSeq.toDF("word", "freq", "toks"))
+    }
+    // distributed: one pair-count + argmax + merge round per iteration
+    var vocab = v
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
     var it = 1
     while (it <= iters) {
@@ -137,7 +128,7 @@ object Bpe {
         merges += ((it, a, b, cnt))
         val next = applyMerge(ex, a, b).persist()
         next.count() // materialize before dropping the previous round
-        vocab.unpersist()
+        if (vocab eq v) gate.release() else vocab.unpersist()
         vocab = next
       } else {
         it = iters // no pairs left (all words are single symbols)
@@ -146,6 +137,8 @@ object Bpe {
     }
     (merges.toSeq, vocab)
   }
+
+  private val LocalWordLimit = 1L << 21
 
   /** Driver-side merge loop over a collected (word, freq, toks)
     * dictionary. Pair counts are maintained incrementally: a pair→words

@@ -49,61 +49,40 @@ object ConnectedComponents {
       nodes: DataFrame,
       edges: DataFrame,
       idCol: String,
-      maxIter: Int = 20): DataFrame =
-    components(nodes, edges, idCol, maxIter, LocalEdgeLimit)
-
-  private[graft] def components(
-      nodes: DataFrame,
-      edges: DataFrame,
-      idCol: String,
-      maxIter: Int,
-      localEdgeLimit: Long): DataFrame = {
+      maxIter: Int = 20): DataFrame = {
     val spark = nodes.sparkSession
-    val limit = math.min(localEdgeLimit, LocalEdgeLimit)
-    // persistOnce the (possibly expensive — q133/q274's edges are exact
+    // Cache the (possibly expensive — q133/q274's edges are exact
     // similarity self-joins) pair derivation so the gate count, the
     // local-tier collect AND the distributed sym all read ONE cache entry.
     // Spark cache matching is exact-subtree, so sym MUST be built from this
     // very frame (building it from raw `edges` would recompute the pair
-    // derivation big-side — the Hits/Coverage hazard from r15).
-    val typedLong = nodes.schema(idCol).dataType == LongType &&
-      edges.schema("a").dataType == LongType &&
-      edges.schema("b").dataType == LongType
-    // ownership guard: unpersist ONLY what this call persisted (a caller
-    // may already cache an identical pair plan — q274 persists its pairs)
-    val pe0 = edges.select(col("a"), col("b"))
-    val peOurs = typedLong &&
-      pe0.storageLevel == org.apache.spark.storage.StorageLevel.NONE
-    val pe = if (typedLong) graft.Q.persistOnce(pe0) else pe0
-    if (typedLong && pe.count() <= limit) {
-      val pn = graft.Q.persistOnce(nodes.select(col(idCol)))
-      if (pn.count() <= limit) {
-        val nodeArr = pn.collect()
-        val edgeArr = pe.collect()
-        pn.unpersist()
-        // null or duplicate node ids keep the distributed tier's join
-        // semantics (duplicates multiply rows through the jump join)
-        if (!nodeArr.exists(_.isNullAt(0)) &&
-            !edgeArr.exists(r => r.isNullAt(0) || r.isNullAt(1)) &&
-            nodeArr.map(_.getLong(0)).distinct.length == nodeArr.length) {
-          if (peOurs) pe.unpersist() // routing local: cache not read again
-          return runLocal(spark, nodeArr.map(_.getLong(0)),
-            edgeArr.map(r => (r.getLong(0), r.getLong(1))), idCol, maxIter)
-        }
-      } else pn.unpersist() // distributed labels scan `nodes` directly
+    // derivation big-side — the Hits/Coverage hazard from r15); the
+    // distributed labels likewise start from the node gate frame. The
+    // driver tier is Long-specialized.
+    val idType = nodes.schema(idCol).dataType
+    val gate = new LocalTier(LocalEdgeLimit,
+      Seq(idType, edges.schema("a").dataType, edges.schema("b").dataType),
+      supported = idType == LongType)
+    val pe = gate.cache(edges.select(col("a"), col("b")))
+    val pn = gate.cache(nodes.select(col(idCol)))
+    gate.collect(pe, pn).foreach { case Seq(edgeArr, nodeArr) =>
+      // duplicate node ids keep the distributed tier's join semantics
+      // (duplicates multiply rows through the jump join)
+      if (nodeArr.map(_.getLong(0)).distinct.length == nodeArr.length)
+        return runLocal(spark, nodeArr.map(_.getLong(0)),
+          edgeArr.map(r => (r.getLong(0), r.getLong(1))), idCol, maxIter)
     }
     // symmetrize in ONE pass over the CACHED pair frame: each pair fans
     // out to both directions scan-stage, and the scan is the InMemoryTable
     // the gate count already materialized — the expensive edge derivation
     // runs exactly once on either routing outcome.
-    val sym = pe.select(explode(array(
+    val sym = gate.cache(pe.select(explode(array(
         struct(col("a").as("src"), col("b").as("dst")),
         struct(col("b").as("src"), col("a").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .persist()
+      .select(col("e.src").as("src"), col("e.dst").as("dst")))
     def labelSum(df: DataFrame): java.math.BigDecimal =
       df.agg(sum(col("comp").cast(DecimalType(38, 0)))).head().getDecimal(0)
-    var labels = nodes.select(col(idCol).as("id"), col(idCol).as("comp"))
+    var labels = pn.select(col(idCol).as("id"), col(idCol).as("comp"))
       .localCheckpoint()
     var prevSum = labelSum(labels)
     var iter = 0
@@ -134,8 +113,7 @@ object ConnectedComponents {
       labels = next
       iter += 1
     }
-    sym.unpersist()
-    if (peOurs) pe.unpersist() // gate cache done: labels are checkpointed
+    gate.release() // labels are checkpointed
     labels.withColumnRenamed("id", idCol)
   }
 

@@ -54,12 +54,6 @@ object Coverage {
     run(pairs, idCol, elemCol, rounds, None)
   }
 
-  /** Test hook: force the distributed tier (localRowLimit = 0) so the
-    * LocalTierSpec equality pin has both sides. */
-  private[graft] def greedySelectForced(pairs: DataFrame, idCol: String, elemCol: String,
-      rounds: Int, samplePpm: Option[Long], localRowLimit: Long): DataFrame =
-    run(pairs, idCol, elemCol, rounds, samplePpm, localRowLimit)
-
   /** The sampled tier — see object doc. `samplePpm` is the per-round
     * candidate sampling rate in parts-per-million (0..10^6; 10^6 keeps
     * every candidate and is plan-identical to the exact tier). */
@@ -91,27 +85,24 @@ object Coverage {
   private val LocalRowLimit = 2L << 20
 
   private def run(pairs: DataFrame, idCol: String, elemCol: String,
-      rounds: Int, samplePpm: Option[Long],
-      localRowLimit: Long = LocalRowLimit): DataFrame = {
+      rounds: Int, samplePpm: Option[Long]): DataFrame = {
     val spark = pairs.sparkSession
     val idType = pairs.schema(idCol).dataType
     // The gate must not add a pass at scale: round 0's eager checkpoint
     // of the deduped membership existed anyway, so checkpoint FIRST (one
-    // materialization, exactly as before), then count the materialized
-    // blocks to route; both the local-tier collect and the distributed
-    // rounds read the same blocks. (The first cut persistOnce'd +
-    // counted pre-checkpoint — an extra cold materialization of the 6M
-    // string rows at the 10x point: q226 big_s 9.6 -> 13.2s. Restored.)
+    // materialization, exactly as before), then gate on the materialized
+    // blocks; both the local-tier collect and the distributed rounds
+    // read the same blocks. (The first cut persistOnce'd + counted
+    // pre-checkpoint — an extra cold materialization of the 6M string
+    // rows at the 10x point: q226 big_s 9.6 -> 13.2s. Restored.)
     var uncovered = pairs.select(col(idCol).as("id"), col(elemCol).as("elem"))
       .distinct().localCheckpoint(true)
-    if (idType == LongType &&
-        uncovered.count() <= math.min(localRowLimit, LocalRowLimit)) {
-      val arr = uncovered.collect()
-      // null ids/elems keep the distributed filter/join null semantics
-      if (!arr.exists(r => r.isNullAt(0) || r.isNullAt(1)))
-        return runLocal(spark, arr.map(r => (r.getLong(0), r.get(1))),
-          rounds, samplePpm)
-    }
+    // the driver tier keys elements in hash maps and is Long-id-specialized
+    new LocalTier(LocalRowLimit, Seq(pairs.schema(elemCol).dataType),
+      supported = idType == LongType)
+      .collect(uncovered).foreach { case Seq(arr) =>
+        return runLocal(spark, arr.map(r => (r.getLong(0), r.get(1))), rounds, samplePpm)
+      }
     val picks = scala.collection.mutable.ArrayBuffer.empty[Row]
     var total = 0L
     var exhausted = false

@@ -51,27 +51,21 @@ object Hits {
     * only tier. */
   private val LocalEdgeLimit = 4L << 20
 
-  def run(edges: DataFrame, iters: Int): DataFrame =
-    run(edges, iters, LocalEdgeLimit)
-
-  private[graft] def run(edges: DataFrame, iters: Int, localEdgeLimit: Long): DataFrame = {
+  def run(edges: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1 && iters <= 8, s"Hits wants 1..8 iterations, got $iters")
     // The gate MUST NOT add a pass at scale: the distributed tier eagerly
     // checkpointed the distinct anyway, so checkpoint FIRST (one
-    // materialization, exactly as before), then count the materialized
-    // blocks (cheap) to route — the local-tier collect also reads blocks.
+    // materialization, exactly as before), then gate on the materialized
+    // blocks (cheap) — the local-tier collect also reads blocks.
     // (The first cut persistOnce'd + counted pre-checkpoint, which cost
     // the 10x probe an extra cold materialization of the 4.5M-row
     // distinct: q239 big_s 9.5 -> 14.4s. This shape restores it.)
     val e = edges.select(col("src"), col("dst")).distinct().localCheckpoint(true)
-    val sameType = edges.schema("src").dataType == edges.schema("dst").dataType
-    if (sameType && e.count() <= math.min(localEdgeLimit, LocalEdgeLimit)) {
-      val arr = e.collect()
-      // null endpoints keep the distributed tier's join null semantics
-      if (!arr.exists(r => r.isNullAt(0) || r.isNullAt(1)))
-        return runLocal(edges.sparkSession, arr.map(r => (r.get(0), r.get(1))),
-          edges.schema("src").dataType, iters)
-    }
+    val nodeType = edges.schema("src").dataType
+    new LocalTier(LocalEdgeLimit, Seq(nodeType, edges.schema("dst").dataType))
+      .collect(e).foreach { case Seq(arr) =>
+        return runLocal(edges.sparkSession, arr.map(r => (r.get(0), r.get(1))), nodeType, iters)
+      }
     val nodes = e.select(col("src").as("node"))
       .unionByName(e.select(col("dst").as("node"))).distinct()
       .localCheckpoint(true)

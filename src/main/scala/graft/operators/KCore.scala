@@ -47,40 +47,24 @@ object KCore {
   // ~4x below ~600k. The bound is the measured crossover.
   private val LocalEdgeLimit = 1L << 20
 
-  def peel(edges: DataFrame, k: Long, rounds: Int): DataFrame =
-    peel(edges, k, rounds, LocalEdgeLimit)
-
-  private[graft] def peel(edges: DataFrame, k: Long, rounds: Int,
-      localEdgeLimit: Long): DataFrame = {
+  def peel(edges: DataFrame, k: Long, rounds: Int): DataFrame = {
     require(rounds >= 1 && rounds <= 16, s"KCore.peel wants 1..16 rounds, got $rounds")
     require(k >= 1L, s"KCore.peel wants k >= 1, got $k")
-    // identical non-floating endpoint types only: `ab` is never distinct'd,
-    // so -0.0/0.0 float keys would reach the local boxed-Any maps
-    // unnormalized and split degrees where the distributed groupBy/semi-
-    // joins normalize them (NormalizeFloatingNumbers)
+    // `ab` is never distinct'd, so the key rule matters here: -0.0/0.0
+    // float keys would reach the local boxed-Any maps unnormalized and
+    // split degrees where the distributed groupBy/semi-joins normalize
+    // them. The projection is cached once: the gate count, the local-tier
+    // collect and the distributed symmetrize all read it.
     val aType = edges.schema("a").dataType
-    val sameType = aType == edges.schema("b").dataType &&
-      aType != org.apache.spark.sql.types.FloatType &&
-      aType != org.apache.spark.sql.types.DoubleType
-    // persistOnce before the count/collect pair (the Louvain.localMoves
-    // posture): the projection is computed once, the gate count, the
-    // local-tier collect and the distributed symmetrize all read the cache
-    val ab0 = edges.select(col("a"), col("b"))
-    val abOurs = ab0.storageLevel == org.apache.spark.storage.StorageLevel.NONE
-    val ab = graft.Q.persistOnce(ab0)
-    if (sameType && ab.count() <= math.min(localEdgeLimit, LocalEdgeLimit)) {
-      val arr = ab.collect()
-      // null endpoints keep the distributed tier's join null semantics
-      if (!arr.exists(r => r.isNullAt(0) || r.isNullAt(1))) {
-        if (abOurs) ab.unpersist() // routing local: cache not read again
-        return runLocal(edges.sparkSession, arr.map(r => (r.get(0), r.get(1))),
-          aType, k, rounds)
-      }
+    val gate = new LocalTier(LocalEdgeLimit, Seq(aType, edges.schema("b").dataType))
+    val ab = gate.cache(edges.select(col("a"), col("b")))
+    gate.collect(ab).foreach { case Seq(arr) =>
+      return runLocal(edges.sparkSession, arr.map(r => (r.get(0), r.get(1))), aType, k, rounds)
     }
     var sym = ab.select(col("a").as("src"), col("b").as("dst"))
       .unionByName(ab.select(col("b").as("src"), col("a").as("dst")))
       .localCheckpoint(true)
-    if (abOurs) ab.unpersist() // sym is materialized (eager checkpoint)
+    gate.release() // sym is materialized (eager checkpoint)
     for (_ <- 1 to rounds) {
       val keep = sym.groupBy("src").agg(count(lit(1)).as("c"))
         .filter(col("c") >= k).select(col("src").as("node"))

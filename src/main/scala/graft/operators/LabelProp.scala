@@ -47,66 +47,36 @@ object LabelProp {
   // below ~600k. The bound is the measured crossover, not host tuning.
   private val LocalEdgeLimit = 1L << 20
 
-  def propagate(nodes: DataFrame, edges: DataFrame, seeds: DataFrame, iters: Int): DataFrame =
-    propagate(nodes, edges, seeds, iters, LocalEdgeLimit)
-
-  private[graft] def propagate(nodes: DataFrame, edges: DataFrame, seeds: DataFrame,
-      iters: Int, localEdgeLimit: Long): DataFrame = {
-    val limit = math.min(localEdgeLimit, LocalEdgeLimit)
-    // The local tier keys boxed Any values by Java equals, so it is only
-    // safe when the node-key dtypes of nodes, edges and seeds are
-    // IDENTICAL (the distributed joins would silently coerce, e.g. Integer
-    // edges against Long nodes — boxed Integer never equals boxed Long)
-    // and non-floating (boxed -0.0 != 0.0 where SQL normalizes them).
-    val keyType = nodes.schema("node").dataType
-    val localSafe = seeds.schema("lbl").dataType == LongType &&
-      edges.schema("a").dataType == keyType &&
-      edges.schema("b").dataType == keyType &&
-      seeds.schema("node").dataType == keyType &&
-      keyType != org.apache.spark.sql.types.FloatType &&
-      keyType != org.apache.spark.sql.types.DoubleType
-    // persist-then-count-then-reuse (the Hits/Bfs/KCore gate shape): the
-    // gate count fills the cache that BOTH routing outcomes read — the
-    // local-tier collects, or the distributed sym/state derivations — so
-    // the gate adds no extra pass over a possibly expensive edge/node
-    // derivation in either outcome. nodes is typically a derived frame
-    // (union+distinct over the edges) and seeds usually builds ON the
-    // same nodes plan, so the pn entry serves the seeds lineage too
-    // (measured: q179's local route spent more re-deriving nodes than
-    // propagating).
-    // release handles: unpersist ONLY what THIS call persisted — callers
-    // routinely pass an already-persisted edge frame (q182's LSH pairs
-    // feed Triangles too) and dropping THEIR cache forces a re-derivation
-    val peOurs = localSafe && edges.storageLevel == org.apache.spark.storage.StorageLevel.NONE
-    val pnOurs = localSafe && nodes.storageLevel == org.apache.spark.storage.StorageLevel.NONE
-    val pe = if (localSafe) graft.Q.persistOnce(edges) else edges
-    val pn = if (localSafe) graft.Q.persistOnce(nodes) else nodes
-    if (localSafe) {
-      if (pe.count() <= limit && pn.count() <= limit) {
-        val nodeArr = pn.collect()
-        val edgeArr = pe.collect()
-        val seedArr = seeds.collect()
-        val wellFormed =
-          !nodeArr.exists(_.isNullAt(0)) &&
-            !edgeArr.exists(r => r.isNullAt(0) || r.isNullAt(1)) &&
-            !seedArr.exists(_.isNullAt(0)) &&
-            nodeArr.map(_.get(0)).distinct.length == nodeArr.length &&
-            seedArr.map(_.get(0)).distinct.length == seedArr.length
-        if (wellFormed) {
-          if (peOurs) pe.unpersist()
-          if (pnOurs) pn.unpersist()
-          return runLocal(nodes.sparkSession, nodeArr.map(_.get(0)),
-            edgeArr.map(r => (r.get(0), r.get(1))),
-            seedArr.map(r => (r.get(0),
-              if (r.isNullAt(1)) null else java.lang.Long.valueOf(r.getLong(1)))),
-            keyType, iters)
-        }
-      }
+  def propagate(nodes: DataFrame, edges: DataFrame, seeds: DataFrame, iters: Int): DataFrame = {
+    // The key rule covers the node keys of nodes, edges and seeds (the
+    // distributed joins would silently coerce, e.g. Integer edges against
+    // Long nodes); the driver tier votes LONG labels only.
+    val gate = new LocalTier(LocalEdgeLimit,
+      Seq(nodes.schema("node").dataType, edges.schema("a").dataType,
+        edges.schema("b").dataType, seeds.schema("node").dataType),
+      supported = seeds.schema("lbl").dataType == LongType)
+    // The gate frames are cached once and read by BOTH routing outcomes —
+    // the local-tier collects, or the distributed sym/state derivations.
+    // nodes is typically a derived frame (union+distinct over the edges)
+    // and seeds usually builds ON the same nodes plan, so the pn entry
+    // serves the seeds lineage too (measured: q179's local route spent
+    // more re-deriving nodes than propagating).
+    val pe = gate.cache(edges.select(col("a"), col("b")))
+    val pn = gate.cache(nodes.select(col("node")))
+    val ps = gate.cache(seeds.select(col("node"), col("lbl")))
+    gate.collect(pe, pn, ps).foreach { case Seq(edgeArr, nodeArr, seedArr) =>
+      // duplicate node or seed keys keep the distributed joins' semantics
+      if (nodeArr.map(_.get(0)).distinct.length == nodeArr.length &&
+          seedArr.map(_.get(0)).distinct.length == seedArr.length)
+        return runLocal(nodes.sparkSession, nodeArr.map(_.get(0)),
+          edgeArr.map(r => (r.get(0), r.get(1))),
+          seedArr.map(r => (r.get(0), java.lang.Long.valueOf(r.getLong(1)))),
+          pn.schema("node").dataType, iters)
     }
     // one-pass symmetrize from the CACHED pair frame (same idiom as
     // ConnectedComponents: don't run a possibly-expensive edge derivation
     // twice for the two directions — or a third time after the gate count)
-    val sym = graft.Q.persistOnce(pe.select(explode(array(
+    val sym = gate.cache(pe.select(explode(array(
         struct(col("a").as("src"), col("b").as("dst")),
         struct(col("b").as("src"), col("a").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst")))
@@ -119,7 +89,7 @@ object LabelProp {
     // to compute the same partitions concurrently, doing each round's
     // work twice and landing duplicate block-puts. One driver-blocking
     // job per round buys single evaluation.
-    var state = pn.join(seeds, Seq("node"), "left")
+    var state = pn.join(ps, Seq("node"), "left")
       .select(col("node"), col("lbl").as("seed_lbl"), col("lbl"))
       .localCheckpoint(true)
     // The fast single-aggregate tie-break (max(struct(c, -lbl))) only
@@ -166,9 +136,7 @@ object LabelProp {
     }
     // every state round is an eager checkpoint, so nothing downstream
     // re-reads sym or the gate caches — release them (guide §5)
-    sym.unpersist()
-    if (peOurs) pe.unpersist()
-    if (pnOurs) pn.unpersist()
+    gate.release()
     state.select(col("node"), col("lbl"))
   }
 

@@ -105,7 +105,8 @@ object Louvain {
   def communities(edges: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 0 && rounds <= 16,
       s"Louvain wants a fixed round count in [0, 16], got $rounds")
-    localMoves(intake(edges), rounds)._1
+    val gate = new LocalTier(LocalEdgeLimit)
+    localMoves(intake(edges, gate), rounds, gate)._1
   }
 
   /** Full Louvain: up to `levels` rounds of (local moves to
@@ -114,11 +115,7 @@ object Louvain {
     * final super-community and converged says every level's local
     * moves reached a two-direction fixed point within its budget. */
   def communitiesMultiLevel(
-      edges: DataFrame, maxRoundsPerLevel: Int, levels: Int = 2): DataFrame =
-    communitiesMultiLevel(edges, maxRoundsPerLevel, levels, LocalEdgeLimit)
-
-  private[graft] def communitiesMultiLevel(edges: DataFrame,
-      maxRoundsPerLevel: Int, levels: Int, localEdgeLimit: Long): DataFrame = {
+      edges: DataFrame, maxRoundsPerLevel: Int, levels: Int = 2): DataFrame = {
     require(maxRoundsPerLevel >= 1 && maxRoundsPerLevel <= 16,
       s"Louvain wants maxRoundsPerLevel in [1, 16], got $maxRoundsPerLevel")
     require(levels >= 1 && levels <= 4,
@@ -129,16 +126,12 @@ object Louvain {
     // one collect instead of a per-level count/collect/contraction-join/
     // mapping-join round trip. Identical recurrence (GraphSpec pins the
     // tiers; the q268 oracle replays both levels as weighted CTEs).
-    val (ein, ownedInner) = intakeOwned(edges)
-    val e0Ours = ein.storageLevel == org.apache.spark.storage.StorageLevel.NONE
-    val e0 = graft.Q.persistOnce(ein)
-    if (e0.count() <= math.min(localEdgeLimit, LocalEdgeLimit)) {
+    val gate = new LocalTier(LocalEdgeLimit)
+    val e0 = gate.cache(intake(edges, gate))
+    gate.collect(e0).foreach { case Seq(arr) =>
       // collecting evaluates the intake guard columns — refusals fire
       // exactly as under distributed consumption
-      var rows = e0.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      // the gate caches stay pinned on the local route: bounded by the
-      // routing limit, and repeat evaluations re-read them for free
-      // (releasing here measured the warm-pass benefit away — r16 A/B)
+      var rows = arr.map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       var mapping: Map[Long, Long] = null
       var allConverged = true
       for (lvl <- 1 to levels) {
@@ -168,7 +161,7 @@ object Louvain {
     var mapping: DataFrame = null
     var allConverged = true
     for (lvl <- 1 to levels) {
-      val (st, conv) = localMoves(ew, maxRoundsPerLevel, localEdgeLimit)
+      val (st, conv) = localMoves(ew, maxRoundsPerLevel)
       allConverged = allConverged && conv
       mapping =
         if (lvl == 1) st.localCheckpoint(true)
@@ -188,23 +181,18 @@ object Louvain {
     // mapping is an eager checkpoint per level and the last contraction
     // has been consumed by the final localMoves — the level-1 caches are
     // never read again (guide §5)
-    if (e0Ours) e0.unpersist()
-    ownedInner.foreach(_.unpersist())
+    gate.release()
     mapping.select(col("node"), col("com"), lit(allConverged).as("converged"))
   }
 
   /** Level-1 intake: cast, refuse self-loops on the consumed b column,
     * refuse duplicates through the weight column (w = 1 guarded by one
-    * raw-vs-distinct-canonical-pair count audit on a 1-row broadcast). */
-  private[graft] def intake(edges: DataFrame): DataFrame = intakeOwned(edges)._1
-
-  /** [[intake]] plus the release handle of the cache it created (None
-    * when the caller's plan was already persisted): the audited frame
-    * reads the inner cache only until the CONSUMER's own cache or
-    * checkpoint materializes, after which the owner must unpersist it —
-    * the r16 cache-lifecycle posture (guide §5). */
-  private[graft] def intakeOwned(edges: DataFrame): (DataFrame, Option[DataFrame]) = {
-    val ep = edges.select(
+    * raw-vs-distinct-canonical-pair count audit on a 1-row broadcast).
+    * The audited frame reads the inner cache `gate` owns only until the
+    * consumer's own cache or checkpoint materializes. */
+  private[graft] def intake(edges: DataFrame,
+      gate: LocalTier = new LocalTier(LocalEdgeLimit)): DataFrame = {
+    val e = gate.cache(edges.select(
       col("a").cast("long").as("a"),
       Guards(col("b").cast("long") =!= col("a").cast("long"),
         col("b").cast("long"),
@@ -212,13 +200,11 @@ object Louvain {
           lit("self-loop edge ("), col("a").cast("string"), lit(", "),
           col("b").cast("string"),
           lit(") - input must be distinct undirected pairs with a != b")))
-        .as("b"))
-    val eOurs = ep.storageLevel == org.apache.spark.storage.StorageLevel.NONE
-    val e = graft.Q.persistOnce(ep)
+        .as("b")))
     val audit = e.agg(count(lit(1)).as("__c"),
       countDistinct(least(col("a"), col("b")),
         greatest(col("a"), col("b"))).as("__d"))
-    val out = e.crossJoin(broadcast(audit))
+    e.crossJoin(broadcast(audit))
       .select(col("a"), col("b"),
         Guards(col("__c") === col("__d"), lit(1L),
           Guards.msg("louvain",
@@ -226,7 +212,6 @@ object Louvain {
             lit(" rows, "), col("__d").cast("string"),
             lit(" distinct pairs) - duplicates silently skew m, degrees "),
             lit("and every gain; distinct the edge list first"))).as("w"))
-    (out, if (eOurs) Some(e) else None)
   }
 
   /** Size-guarded routing bound (the PageRank.runLocal posture): a
@@ -246,34 +231,26 @@ object Louvain {
     * canonical pairs, self-loops allowed. Returns (state, converged):
     * one (node, com) row per endpoint, and whether two consecutive
     * moveless rounds were observed within the budget. */
-  private[graft] def localMoves(
-      ew: DataFrame, maxRounds: Int,
-      localEdgeLimit: Long = LocalEdgeLimit): (DataFrame, Boolean) = {
-    val eOurs = ew.storageLevel == org.apache.spark.storage.StorageLevel.NONE
-    val e = graft.Q.persistOnce(ew)
-    // the driver tier leaves the (bounded) gate cache pinned: repeat
-    // evaluations re-read it for free, and releasing it measured the
-    // warm-pass benefit away (r16 IsoBench A/B)
-    if (e.count() <= localEdgeLimit) return localMovesDriver(e, maxRounds)
+  private[graft] def localMoves(ew: DataFrame, maxRounds: Int,
+      gate: LocalTier = new LocalTier(LocalEdgeLimit)): (DataFrame, Boolean) = {
+    val e = gate.cache(ew)
+    gate.collect(e).foreach { case Seq(arr) =>
+      return localMovesDriver(e.sparkSession, arr, maxRounds)
+    }
     val m = e.agg(
       Guards(sum("w") <= lit(1L << 30), sum("w"),
         "[louvain] total edge weight exceeds 2^30: the 2m-scaled gain " +
           "would overflow int64 - shard the graph").as("m"))
-    val none = org.apache.spark.storage.StorageLevel.NONE
     val nonSelf = e.filter(col("a") =!= col("b"))
-    val symP = nonSelf.select(explode(array(
+    val sym = gate.cache(nonSelf.select(explode(array(
         struct(col("a").as("src"), col("b").as("dst"), col("w")),
         struct(col("b").as("src"), col("a").as("dst"), col("w")))).as("p"))
-      .select(col("p.src").as("src"), col("p.dst").as("dst"), col("p.w").as("w"))
-    val symOurs = symP.storageLevel == none
-    val sym = graft.Q.persistOnce(symP)
+      .select(col("p.src").as("src"), col("p.dst").as("dst"), col("p.w").as("w")))
     // weighted degree: non-self edges once per endpoint, self-loops twice
-    val degP = sym.select(col("dst").as("node"), col("w"))
+    val deg = gate.cache(sym.select(col("dst").as("node"), col("w"))
       .unionByName(e.filter(col("a") === col("b"))
         .select(col("a").as("node"), (col("w") * 2).as("w")))
-      .groupBy("node").agg(sum("w").as("k"))
-    val degOurs = degP.storageLevel == none
-    val deg = graft.Q.persistOnce(degP)
+      .groupBy("node").agg(sum("w").as("k")))
 
     var state = deg.select(col("node"), col("node").as("com"))
       .localCheckpoint(true)
@@ -333,9 +310,7 @@ object Louvain {
     }
     // every round's state is an eager checkpoint — the returned frame
     // never re-reads the edge/adjacency/degree caches (guide §5)
-    if (symOurs) sym.unpersist()
-    if (degOurs) deg.unpersist()
-    if (eOurs) e.unpersist()
+    gate.release()
     (state.select(col("node"), col("com")), converged)
   }
 
@@ -343,9 +318,9 @@ object Louvain {
     * collecting evaluates the intake guard columns, so self-loop /
     * duplicate refusals fire identically. Pure Long arithmetic, no
     * division anywhere, so the two tiers are bit-identical. */
-  private def localMovesDriver(e: DataFrame, maxRounds: Int): (DataFrame, Boolean) = {
-    val spark = e.sparkSession
-    val rows = e.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+  private def localMovesDriver(spark: org.apache.spark.sql.SparkSession,
+      collected: Array[org.apache.spark.sql.Row], maxRounds: Int): (DataFrame, Boolean) = {
+    val rows = collected.map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     val (com, converged) = localMovesArr(rows, maxRounds)
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{LongType, StructField, StructType}

@@ -66,24 +66,16 @@ object PrefixSpan {
       s"PrefixSpan wants maxLen in [1, 6] (the pattern grid is O(|items|^maxLen)), got $maxLen")
   }
 
-  /** Normalized, persisted (sid, e, pos) rows — shared by both tiers:
+  /** Normalized (sid, e, pos) rows, cached and shared by both tiers:
     * the local tier collects this frame once; the distributed tier's
-    * minsup/f1/evf derivations each re-reference it. */
-  private def normalized(ev: DataFrame): DataFrame = graft.Q.persistOnce(
-    ev.select(col("sid"), col("e"), col("pos").cast("long").as("pos")))
-
-  /** Local-tier routing: Some(collected rows) iff the pattern algebra is
-    * replicable on the driver (string items — the concat the pattern
-    * strings ride), the frame is inside [[LocalRowLimit]], and no
-    * null sid/e/pos reaches the miner (the distributed tier's null
-    * semantics flow through join/groupBy null handling; rather than
-    * replicate those, a null routes to the distributed tier). */
-  private def localRows(rows: DataFrame, limit: Long): Option[Array[(Any, String, Long)]] = {
-    if (rows.schema("e").dataType != StringType) return None
-    if (rows.count() > limit) return None
-    val arr = rows.collect()
-    if (arr.exists(r => r.isNullAt(0) || r.isNullAt(1) || r.isNullAt(2))) None
-    else Some(arr.map(r => (r.get(0), r.getString(1), r.getLong(2))))
+    * minsup/f1/evf derivations each re-reference it. The gate keys on
+    * `sid`; the driver tier replicates the pattern algebra only for
+    * string items (the concat the pattern strings ride). */
+  private def normalized(ev: DataFrame): (DataFrame, Option[Array[(Any, String, Long)]]) = {
+    val gate = new LocalTier(LocalRowLimit, Seq(ev.schema("sid").dataType),
+      supported = ev.schema("e").dataType == StringType)
+    val rows = gate.cache(ev.select(col("sid"), col("e"), col("pos").cast("long").as("pos")))
+    (rows, gate.collect(rows).map(_.head.map(r => (r.get(0), r.getString(1), r.getLong(2)))))
   }
 
   /** Distributed prologue: the 1-row broadcast minsup and the
@@ -99,16 +91,11 @@ object PrefixSpan {
     (ms, evf)
   }
 
-  def frequentPatterns(ev: DataFrame, minSupportPct: Int, maxLen: Int): DataFrame =
-    frequentPatterns(ev, minSupportPct, maxLen, LocalRowLimit)
-
-  private[graft] def frequentPatterns(ev: DataFrame, minSupportPct: Int,
-      maxLen: Int, localRowLimit: Long): DataFrame = {
+  def frequentPatterns(ev: DataFrame, minSupportPct: Int, maxLen: Int): DataFrame = {
     require0(minSupportPct, maxLen)
-    val rows = normalized(ev)
-    localRows(rows, math.min(localRowLimit, LocalRowLimit)).foreach { arr =>
-      return runLocal(ev.sparkSession, arr, minSupportPct, maxLen, maxGap = 0L)
-    }
+    val (rows, local) = normalized(ev)
+    local.foreach(arr =>
+      return runLocal(ev.sparkSession, arr, minSupportPct, maxLen, maxGap = 0L))
     val (ms, evf) = prep(rows, minSupportPct)
     def support(occ: DataFrame, k: Int): DataFrame =
       occ.groupBy("pat").agg(count(lit(1)).as("support"))
@@ -148,18 +135,13 @@ object PrefixSpan {
     * key on sid. The unconstrained tier keeps the O(1)-per-(sid,
     * pattern) earliest-occurrence frame — use it when gaps are free. */
   def frequentPatternsMaxGap(ev: DataFrame, minSupportPct: Int, maxLen: Int,
-      maxGap: Int): DataFrame =
-    frequentPatternsMaxGap(ev, minSupportPct, maxLen, maxGap, LocalRowLimit)
-
-  private[graft] def frequentPatternsMaxGap(ev: DataFrame, minSupportPct: Int,
-      maxLen: Int, maxGap: Int, localRowLimit: Long): DataFrame = {
+      maxGap: Int): DataFrame = {
     require0(minSupportPct, maxLen)
     require(maxGap >= 1 && maxGap <= 64,
       s"PrefixSpan wants maxGap in [1, 64] (fanout is O(maxGap) per level), got $maxGap")
-    val rows = normalized(ev)
-    localRows(rows, math.min(localRowLimit, LocalRowLimit)).foreach { arr =>
-      return runLocal(ev.sparkSession, arr, minSupportPct, maxLen, maxGap = maxGap.toLong)
-    }
+    val (rows, local) = normalized(ev)
+    local.foreach(arr =>
+      return runLocal(ev.sparkSession, arr, minSupportPct, maxLen, maxGap = maxGap.toLong))
     val (ms, evf) = prep(rows, minSupportPct)
     def support(occ: DataFrame, k: Int): DataFrame =
       occ.groupBy("pat").agg(countDistinct("sid").as("support"))

@@ -56,11 +56,7 @@ object RandomWalk {
     * unchanged — at 100 TB that is the only tier. */
   private val LocalEdgeLimit = 4L << 20
 
-  def walks(edges: DataFrame, walksPerNode: Int, steps: Int, seed: String): DataFrame =
-    walks(edges, walksPerNode, steps, seed, LocalEdgeLimit)
-
-  private[graft] def walks(edges: DataFrame, walksPerNode: Int, steps: Int,
-      seed: String, localEdgeLimit: Long): DataFrame = {
+  def walks(edges: DataFrame, walksPerNode: Int, steps: Int, seed: String): DataFrame = {
     require(walksPerNode >= 1 && walksPerNode <= 16,
       s"RandomWalk wants walksPerNode in [1, 16], got $walksPerNode")
     require(steps >= 1 && steps <= 16,
@@ -70,23 +66,20 @@ object RandomWalk {
     val spark = edges.sparkSession
     // intake: cast + the Louvain refusals (self-loop on the consumed b,
     // duplicates through a 1-row broadcast audit riding the w column).
-    // Ownership guard (the r16 CC posture): release ONLY caches this
-    // call created — a caller may have persisted an identical plan.
-    val none = org.apache.spark.storage.StorageLevel.NONE
-    val e0p = edges.select(
+    // Keys are cast to long, so the gate needs no key rule.
+    val gate = new LocalTier(LocalEdgeLimit)
+    val e0 = gate.cache(edges.select(
       col("a").cast("long").as("a"),
       Guards(col("b").cast("long") =!= col("a").cast("long"),
         col("b").cast("long"),
         Guards.msg("randomwalk",
           lit("self-loop edge ("), col("a").cast("string"), lit(", "),
           col("b").cast("string"), lit(") - input must be distinct "),
-          lit("undirected pairs with a != b"))).as("b"))
-    val e0Ours = e0p.storageLevel == none
-    val e0 = graft.Q.persistOnce(e0p)
+          lit("undirected pairs with a != b"))).as("b")))
     val audit = e0.agg(count(lit(1)).as("__c"),
       countDistinct(least(col("a"), col("b")),
         greatest(col("a"), col("b"))).as("__d"))
-    val symP = e0.crossJoin(broadcast(audit))
+    val sym = gate.cache(e0.crossJoin(broadcast(audit))
       .select(col("a"), col("b"),
         Guards(col("__c") === col("__d"), lit(1L),
           Guards.msg("randomwalk",
@@ -96,25 +89,13 @@ object RandomWalk {
       .select(explode(array(
         struct(col("a").as("src"), col("b").as("dst"), col("__w")),
         struct(col("b").as("src"), col("a").as("dst"), col("__w")))).as("p"))
-      .select(col("p.src").as("src"), col("p.dst").as("dst"))
-    val symOurs = symP.storageLevel == none
-    val sym = graft.Q.persistOnce(symP)
-
-    if (sym.count() <= math.min(localEdgeLimit, LocalEdgeLimit)) {
-      // collecting sym evaluates the intake guard columns it was built
-      // from, so self-loop/duplicate refusals fire exactly as they do
-      // under the distributed consumption
-      val arr = sym.collect().map(r => (r.getLong(0), r.getLong(1)))
-      // the gate caches stay pinned on the local route: they are bounded
-      // by the routing limit, and repeat evaluations (Bench min-of-2,
-      // Verify after tests) re-read them for free — releasing here
-      // measured the whole warm-pass benefit away (r16 IsoBench A/B)
-      return runLocal(spark, arr, walksPerNode, steps, seed)
+      .select(col("p.src").as("src"), col("p.dst").as("dst")))
+    // collecting sym evaluates the intake guard columns it was built
+    // from, so self-loop/duplicate refusals fire exactly as they do
+    // under the distributed consumption
+    gate.collect(sym).foreach { case Seq(arr) =>
+      return runLocal(spark, arr.map(r => (r.getLong(0), r.getLong(1))), walksPerNode, steps, seed)
     }
-    // distributed route: sym's cache is filled (the gate count) and the
-    // intake cache below it is never read again — at 100 TB an |E|-sized
-    // frame must not stay resident behind the 2x|E| adjacency (guide §5)
-    if (e0Ours) e0.unpersist()
 
     val nodes = sym.select(col("src").as("start")).distinct()
     val walkIds = (0 until walksPerNode).map(lit(_))
@@ -141,8 +122,8 @@ object RandomWalk {
       frontier = next
     }
     // every step is an eager checkpoint, so the result lineage never
-    // re-reads the adjacency cache — release it (guide §5)
-    if (symOurs) sym.unpersist()
+    // re-reads the intake or adjacency caches — release them (guide §5)
+    gate.release()
     out
   }
 

@@ -45,35 +45,24 @@ object Sssp {
     */
   /** Size-guarded routing bound (the Bfs.hops posture): an edge list
     * inside the bound relaxes on the driver at zero per-round job cost;
-    * the persistOnce below also stops each distributed round's frontier
+    * the gate cache below also stops each distributed round's frontier
     * join from re-computing the caller's edge derivation (q247's is a
     * 4-table join). Local ≡ distributed pinned in LocalTierSpec. */
   private val LocalEdgeLimit = 4L << 20
 
-  def distances(edges: DataFrame, src: Long, rounds: Int): DataFrame =
-    distances(edges, src, rounds, LocalEdgeLimit)
-
-  private[graft] def distances(edges: DataFrame, src: Long, rounds: Int,
-      localEdgeLimit: Long): DataFrame = {
+  def distances(edges: DataFrame, src: Long, rounds: Int): DataFrame = {
     val spark = edges.sparkSession
-    val eP = edges.select(col("src"), col("dst"), col("w"))
-    // ownership guard (the r16 CC posture): release only our own cache
-    val eOurs = eP.storageLevel == org.apache.spark.storage.StorageLevel.NONE
-    val e = graft.Q.persistOnce(eP)
-    val integral = Seq(edges.schema("src").dataType, edges.schema("dst").dataType)
-      .forall(t => t == org.apache.spark.sql.types.LongType ||
-        t == org.apache.spark.sql.types.IntegerType ||
-        t == org.apache.spark.sql.types.ShortType)
-    if (integral && edges.schema("w").dataType == org.apache.spark.sql.types.LongType &&
-        e.count() <= math.min(localEdgeLimit, LocalEdgeLimit)) {
-      val arr = e.collect()
-      // the gate cache stays pinned on the local route (bounded, and
-      // repeat evaluations re-read it for free — releasing measured the
-      // warm-pass benefit away, r16 IsoBench A/B)
-      if (!arr.exists(r => r.isNullAt(0) || r.isNullAt(1) || r.isNullAt(2)))
-        return runLocal(spark,
-          arr.map(r => (r.getAs[Number](0).longValue, r.getAs[Number](1).longValue,
-            r.getLong(2))), src, rounds)
+    // the driver tier widens integral endpoints to long (the Bfs.hops
+    // posture) and relaxes Long weights
+    val gate = new LocalTier(LocalEdgeLimit,
+      Seq(edges.schema("src").dataType, edges.schema("dst").dataType),
+      supported = LocalTier.integral(edges.schema("src").dataType) &&
+        edges.schema("w").dataType == org.apache.spark.sql.types.LongType)
+    val e = gate.cache(edges.select(col("src"), col("dst"), col("w")))
+    gate.collect(e).foreach { case Seq(arr) =>
+      return runLocal(spark,
+        arr.map(r => (r.getAs[Number](0).longValue, r.getAs[Number](1).longValue,
+          r.getLong(2))), src, rounds)
     }
     val relaxed = Guards(
       col("w") >= 0L && col("dist") <= lit(Long.MaxValue) - col("w"),
@@ -110,7 +99,7 @@ object Sssp {
     // the returned O(|V|) state is cache-backed and materialized; the
     // O(|E|) edge cache is only a recompute fallback now — release it
     // (guide §5: |E| >> |V| at scale)
-    if (eOurs) e.unpersist()
+    gate.release()
     dist.select("node", "dist")
   }
 

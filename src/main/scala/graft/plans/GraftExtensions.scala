@@ -1,10 +1,12 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.SparkStrategy
 
 /** Session extension registering the graft native expressions so they are
   * callable from SQL and via `call_function` (the (c) tier:
@@ -15,19 +17,9 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(GraftExtensions.dotFunction)
-    ext.injectFunction(GraftExtensions.dotI8Function)
-    ext.injectFunction(GraftExtensions.topKFunction)
-    ext.injectFunction(GraftExtensions.hllFunction)
-    ext.injectFunction(GraftExtensions.cappedCollectFunction)
-    ext.injectFunction(GraftExtensions.simhashFunction)
-    ext.injectFunction(GraftExtensions.tdigestFunction)
-    ext.injectFunction(GraftExtensions.bottomKFunction)
-    ext.injectFunction(GraftExtensions.bloomFunction)
-    ext.injectOptimizerRule(_ => RewriteDotProduct)
-    ext.injectOptimizerRule(_ => RewriteIntersectOverlap)
-    ext.injectOptimizerRule(_ => PushAggThroughJoin)
-    ext.injectPlannerStrategy(_ => AsOfJoinStrategy)
+    GraftExtensions.functions.foreach(ext.injectFunction)
+    GraftExtensions.rules.foreach(r => ext.injectOptimizerRule(_ => r))
+    GraftExtensions.strategies.foreach(s => ext.injectPlannerStrategy(_ => s))
   }
 }
 
@@ -146,55 +138,24 @@ object GraftExtensions {
       HllRegisters(children.head).toAggregateExpression()
     })
 
-  /** Idempotent late registration into an already-built session: the
-    * graft_dot function plus the HOF-dot rewrite rule (via the public
-    * `experimental.extraOptimizations` hook, since extensions can only be
-    * installed at session build time). */
+  /** Every native function, optimizer rule and planner strategy, listed
+    * once in registration order. */
+  private val functions = Seq(dotFunction, dotI8Function, topKFunction, hllFunction,
+    cappedCollectFunction, simhashFunction, tdigestFunction, bottomKFunction, bloomFunction)
+  private val rules: Seq[Rule[LogicalPlan]] =
+    Seq(RewriteDotProduct, RewriteIntersectOverlap, PushAggThroughJoin)
+  private val strategies: Seq[SparkStrategy] = Seq(AsOfJoinStrategy)
+
+  /** Idempotent late registration into an already-built session, via the
+    * public `experimental` hooks for the rules and the strategy (since
+    * extensions can only be installed at session build time). */
   def ensureRegistered(spark: SparkSession): Unit = {
     val registry: FunctionRegistry = spark.sessionState.functionRegistry
-    if (!registry.functionExists(FunctionIdentifier("graft_dot"))) {
-      registry.registerFunction(dotFunction._1, dotFunction._2, dotFunction._3)
+    functions.foreach { case (id, info, builder) =>
+      if (!registry.functionExists(id)) registry.registerFunction(id, info, builder)
     }
-    if (!registry.functionExists(FunctionIdentifier("graft_dot_i8"))) {
-      registry.registerFunction(dotI8Function._1, dotI8Function._2, dotI8Function._3)
-    }
-    if (!registry.functionExists(FunctionIdentifier("graft_top_k"))) {
-      registry.registerFunction(topKFunction._1, topKFunction._2, topKFunction._3)
-    }
-    if (!registry.functionExists(FunctionIdentifier("graft_hll"))) {
-      registry.registerFunction(hllFunction._1, hllFunction._2, hllFunction._3)
-    }
-    if (!registry.functionExists(FunctionIdentifier("graft_capped_collect"))) {
-      registry.registerFunction(
-        cappedCollectFunction._1, cappedCollectFunction._2, cappedCollectFunction._3)
-    }
-    if (!registry.functionExists(FunctionIdentifier("graft_simhash"))) {
-      registry.registerFunction(simhashFunction._1, simhashFunction._2, simhashFunction._3)
-    }
-    if (!registry.functionExists(FunctionIdentifier("graft_tdigest"))) {
-      registry.registerFunction(tdigestFunction._1, tdigestFunction._2, tdigestFunction._3)
-    }
-    if (!registry.functionExists(FunctionIdentifier("graft_bottom_k"))) {
-      registry.registerFunction(bottomKFunction._1, bottomKFunction._2, bottomKFunction._3)
-    }
-    if (!registry.functionExists(FunctionIdentifier("graft_bloom"))) {
-      registry.registerFunction(bloomFunction._1, bloomFunction._2, bloomFunction._3)
-    }
-    if (!spark.experimental.extraOptimizations.contains(RewriteDotProduct)) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ RewriteDotProduct
-    }
-    if (!spark.experimental.extraOptimizations.contains(RewriteIntersectOverlap)) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ RewriteIntersectOverlap
-    }
-    if (!spark.experimental.extraOptimizations.contains(PushAggThroughJoin)) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ PushAggThroughJoin
-    }
-    if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsOfJoinStrategy
-    }
+    val exp = spark.experimental
+    rules.foreach(r => if (!exp.extraOptimizations.contains(r)) exp.extraOptimizations :+= r)
+    strategies.foreach(s => if (!exp.extraStrategies.contains(s)) exp.extraStrategies :+= s)
   }
 }

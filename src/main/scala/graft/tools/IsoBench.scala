@@ -4,8 +4,10 @@ object IsoBench {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = args.drop(1)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
+    // cores as graft.Bench takes them, so an A/B matches the bench's session
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = SparkSession.builder().master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")

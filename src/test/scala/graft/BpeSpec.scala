@@ -100,8 +100,8 @@ class BpeSpec extends SparkSpec {
       val iters = 5
       val vLocal = Bpe.initVocab(docs)
       val (mLocal, dLocal) = Bpe.train(vLocal, iters) // under the limit -> local
-      val vDist = Bpe.initVocab(docs).persist()
-      val (mDist, dDist) = Bpe.trainDistributed(vDist, iters)
+      val vDist = Bpe.initVocab(docs)
+      val (mDist, dDist) = graft.operators.LocalTier.forcingDistributed(Bpe.train(vDist, iters))
       assert(mLocal == mDist, s"corpus $ci merge tables diverge")
       val fl = dLocal.select("word", "freq", "toks")
         .as[(String, Long, Seq[String])].collect().toSet

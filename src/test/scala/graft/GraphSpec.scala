@@ -170,13 +170,13 @@ class GraphSpec extends SparkSpec {
     assert(left != right, s"bridge not cut: $got")
   }
 
-  /** The DISTRIBUTED local-move tier, forced past the driver-routing
-    * bound (localEdgeLimit = 0) — the plan/job pins below target the
-    * distributed loop's properties; small graphs otherwise route to
-    * the driver tier (whose equivalence is pinned separately). */
+  /** The DISTRIBUTED local-move tier, forced with the LocalTier test
+    * hook — the plan/job pins below target the distributed loop's
+    * properties; small graphs otherwise route to the driver tier (whose
+    * equivalence is pinned separately). */
   private def distMoves(edges: org.apache.spark.sql.DataFrame, rounds: Int) =
-    operators.Louvain.localMoves(
-      operators.Louvain.intake(edges), rounds, localEdgeLimit = 0L)._1
+    operators.LocalTier.forcingDistributed(operators.Louvain.localMoves(
+      operators.Louvain.intake(edges), rounds))._1
 
   test("louvain: no raw-row window sort anywhere; per-round work is checkpoint-bounded") {
     // localCheckpoint cuts lineage per round, so the returned frame's
@@ -220,8 +220,8 @@ class GraphSpec extends SparkSpec {
         val rounds = 1 + rng.nextInt(4)
         val (locSt, locConv) = operators.Louvain.localMoves(
           operators.Louvain.intake(df), rounds)
-        val (dstSt, dstConv) = operators.Louvain.localMoves(
-          operators.Louvain.intake(df), rounds, localEdgeLimit = 0L)
+        val (dstSt, dstConv) = operators.LocalTier.forcingDistributed(
+          operators.Louvain.localMoves(operators.Louvain.intake(df), rounds))
         assert(locConv == dstConv, s"trial $trial converged flags differ")
         assert(locSt.as[(Long, Long)].collect().toMap ==
           dstSt.as[(Long, Long)].collect().toMap, s"trial $trial states differ")

@@ -4,18 +4,20 @@ import org.apache.spark.sql.DataFrame
 
 import scala.util.Random
 
-/** r15 optimization pins: the driver-local tiers added to the
-  * fixed-round iterative operators (PrefixSpan, Apriori, Hits,
-  * LabelProp, KCore — the PageRank.runLocal / Louvain.localMoves
-  * posture) must be BIT-IDENTICAL to the distributed join plans they
-  * route around. Each test runs the same randomized input through both
-  * tiers (the local route via the public entry point, the distributed
-  * route forced past the routing bound with localEdgeLimit = 0) and
-  * compares the full result sets exactly — values AND schema dtypes,
-  * since the driver's oracle hash is type-sensitive.
+/** The driver-local tiers of the size-gated operators (every one routes
+  * through operators.LocalTier) must be BIT-IDENTICAL to the distributed
+  * join plans they route around. Each test runs the same randomized
+  * input through both tiers (the local route via the public entry
+  * point, the distributed route forced with LocalTier.forcingDistributed)
+  * and compares the full result sets exactly — values AND schema dtypes,
+  * since the driver's oracle hash is type-sensitive. Floating keys (NaN,
+  * -0.0) are among the inputs: Spark's grouping collapses them where a
+  * driver-side hash map would not, so the key rule must route them to
+  * the distributed plan.
   */
 class LocalTierSpec extends SparkSpec {
   import spark.implicits._
+  import operators.LocalTier.forcingDistributed
 
   private val rng = new Random(1715)
 
@@ -35,11 +37,18 @@ class LocalTierSpec extends SparkSpec {
       (1 to len).map(p => (s"s$sid", items(rng.nextInt(items.length)), p.toLong))
     }.toDF("sid", "e", "pos")
     val local = operators.PrefixSpan.frequentPatterns(ev, 40, 4)
-    val dist = operators.PrefixSpan.frequentPatterns(ev, 40, 4, localRowLimit = 0L)
+    val dist = forcingDistributed(operators.PrefixSpan.frequentPatterns(ev, 40, 4))
     assertSame(local, dist, "PrefixSpan free-gap")
     val localG = operators.PrefixSpan.frequentPatternsMaxGap(ev, 25, 4, 2)
-    val distG = operators.PrefixSpan.frequentPatternsMaxGap(ev, 25, 4, 2, localRowLimit = 0L)
+    val distG = forcingDistributed(operators.PrefixSpan.frequentPatternsMaxGap(ev, 25, 4, 2))
     assertSame(localG, distG, "PrefixSpan bounded-gap")
+    // Double sids: Spark sees three sequences (NaN, ±0.0, 1.0); a
+    // driver-side map keeps the three NaN rows apart
+    val fev = Seq((Double.NaN, "a", 1L), (Double.NaN, "b", 2L), (Double.NaN, "a", 3L),
+      (-0.0, "a", 1L), (0.0, "b", 2L), (1.0, "b", 1L)).toDF("sid", "e", "pos")
+    assertSame(operators.PrefixSpan.frequentPatterns(fev, 60, 3),
+      forcingDistributed(operators.PrefixSpan.frequentPatterns(fev, 60, 3)),
+      "PrefixSpan floating sids")
   }
 
   test("Apriori local tier == distributed tier") {
@@ -48,8 +57,14 @@ class LocalTierSpec extends SparkSpec {
       (1 to 2 + rng.nextInt(5)).map(_ => (s"b$bid", items(rng.nextInt(items.length))))
     }.toDF("bid", "item")
     val local = operators.Apriori.frequentItemsets(rows, 10, 4)
-    val dist = operators.Apriori.frequentItemsets(rows, 10, 4, localRowLimit = 0L)
+    val dist = forcingDistributed(operators.Apriori.frequentItemsets(rows, 10, 4))
     assertSame(local, dist, "Apriori")
+    // Double bids: the NaN rows and the -0.0/0.0 rows are one basket each
+    val frows = Seq((Double.NaN, "x"), (Double.NaN, "y"), (-0.0, "x"), (0.0, "y"),
+      (1.0, "x")).toDF("bid", "item")
+    assertSame(operators.Apriori.frequentItemsets(frows, 60, 3),
+      forcingDistributed(operators.Apriori.frequentItemsets(frows, 60, 3)),
+      "Apriori floating bids")
   }
 
   test("Hits local tier == distributed tier") {
@@ -57,8 +72,13 @@ class LocalTierSpec extends SparkSpec {
       .map(_ => (rng.nextInt(15).toLong, 100L + rng.nextInt(20)))
       .toDF("src", "dst")
     val local = operators.Hits.run(edges, 3)
-    val dist = operators.Hits.run(edges, 3, localEdgeLimit = 0L)
+    val dist = forcingDistributed(operators.Hits.run(edges, 3))
     assertSame(local, dist, "Hits")
+    // Double endpoints: NaN and -0.0/0.0 are one node each to Spark
+    val fedges = Seq((Double.NaN, 1.0), (Double.NaN, 2.0), (-0.0, 1.0), (0.0, 2.0),
+      (1.0, Double.NaN)).toDF("src", "dst")
+    assertSame(operators.Hits.run(fedges, 2),
+      forcingDistributed(operators.Hits.run(fedges, 2)), "Hits floating nodes")
   }
 
   test("LabelProp local tier == distributed tier (long labels, clamped seeds)") {
@@ -69,8 +89,7 @@ class LocalTierSpec extends SparkSpec {
     val seeds = nodes.filter($"node" % 7 === 0)
       .select($"node", ($"node" % 3).as("lbl"))
     val local = operators.LabelProp.propagate(nodes, edges, seeds, iters = 3)
-    val dist = operators.LabelProp.propagate(nodes, edges, seeds, iters = 3,
-      localEdgeLimit = 0L)
+    val dist = forcingDistributed(operators.LabelProp.propagate(nodes, edges, seeds, iters = 3))
     assertSame(local, dist, "LabelProp")
   }
 
@@ -82,7 +101,7 @@ class LocalTierSpec extends SparkSpec {
       .distinct
     val edges = pairs.toDF("a", "b")
     val local = operators.Louvain.communitiesMultiLevel(edges, 4, 2)
-    val dist = operators.Louvain.communitiesMultiLevel(edges, 4, 2, localEdgeLimit = 0L)
+    val dist = forcingDistributed(operators.Louvain.communitiesMultiLevel(edges, 4, 2))
     assertSame(local, dist, "Louvain multilevel")
   }
 
@@ -91,16 +110,16 @@ class LocalTierSpec extends SparkSpec {
       .map(_ => (rng.nextInt(120).toLong, rng.nextInt(120).toLong)).toDF("a", "b")
     val nodes = spark.range(120).selectExpr("id as doc_id")
     val local = operators.ConnectedComponents.components(nodes, edges, "doc_id")
-    val dist = operators.ConnectedComponents.components(nodes, edges, "doc_id",
-      maxIter = 20, localEdgeLimit = 0L)
+    val dist = forcingDistributed(
+      operators.ConnectedComponents.components(nodes, edges, "doc_id", maxIter = 20))
     assertSame(local, dist, "ConnectedComponents")
     // truncated, NOT-converged state must also match: a 40-path at
     // maxIter 2 stops mid-propagation in both tiers
     val path = (0L until 39L).map(i => (i, i + 1)).toDF("a", "b")
     val pn = spark.range(40).selectExpr("id as doc_id")
     val localT = operators.ConnectedComponents.components(pn, path, "doc_id", maxIter = 2)
-    val distT = operators.ConnectedComponents.components(pn, path, "doc_id",
-      maxIter = 2, localEdgeLimit = 0L)
+    val distT = forcingDistributed(
+      operators.ConnectedComponents.components(pn, path, "doc_id", maxIter = 2))
     assertSame(localT, distT, "ConnectedComponents truncated")
   }
 
@@ -136,11 +155,11 @@ class LocalTierSpec extends SparkSpec {
     val pairs = (1 to 400)
       .map(_ => (rng.nextInt(25).toLong, s"e${rng.nextInt(120)}")).toDF("doc_id", "sh")
     for (ppm <- Seq(None, Some(600000L))) {
-      val local = operators.Coverage.greedySelectForced(
-        pairs, "doc_id", "sh", 5, ppm, localRowLimit = Long.MaxValue)
-      val dist = operators.Coverage.greedySelectForced(
-        pairs, "doc_id", "sh", 5, ppm, localRowLimit = 0L)
-      assertSame(local, dist, s"Coverage ppm=$ppm")
+      def select() = ppm match {
+        case None => operators.Coverage.greedySelect(pairs, "doc_id", "sh", 5)
+        case Some(p) => operators.Coverage.greedySelectStochastic(pairs, "doc_id", "sh", 5, p)
+      }
+      assertSame(select(), forcingDistributed(select()), s"Coverage ppm=$ppm")
     }
   }
 
@@ -150,7 +169,7 @@ class LocalTierSpec extends SparkSpec {
       .filter { case (a, b) => a != b }.distinct.toDF("src", "dst")
     for (rounds <- Seq(2, 6)) {
       val local = operators.Bfs.hops(edges, 0L, rounds)
-      val dist = operators.Bfs.hops(edges, 0L, rounds, localEdgeLimit = 0L)
+      val dist = forcingDistributed(operators.Bfs.hops(edges, 0L, rounds))
       assertSame(local, dist, s"Bfs rounds=$rounds")
     }
     val wedges = (1 to 200)
@@ -158,7 +177,7 @@ class LocalTierSpec extends SparkSpec {
       .filter { case (a, b, _) => a != b }.distinct.toDF("src", "dst", "w")
     for (rounds <- Seq(2, 5)) {
       val local = operators.Sssp.distances(wedges, 0L, rounds)
-      val dist = operators.Sssp.distances(wedges, 0L, rounds, localEdgeLimit = 0L)
+      val dist = forcingDistributed(operators.Sssp.distances(wedges, 0L, rounds))
       assertSame(local, dist, s"Sssp rounds=$rounds")
     }
   }
@@ -181,7 +200,7 @@ class LocalTierSpec extends SparkSpec {
       .distinct
     val edges = pairs.toDF("a", "b")
     val local = operators.RandomWalk.walks(edges, 2, 3, "ltspin")
-    val dist = operators.RandomWalk.walks(edges, 2, 3, "ltspin", localEdgeLimit = 0L)
+    val dist = forcingDistributed(operators.RandomWalk.walks(edges, 2, 3, "ltspin"))
     assertSame(local, dist, "RandomWalk")
   }
 
@@ -191,7 +210,7 @@ class LocalTierSpec extends SparkSpec {
     // a few deliberate duplicates: the degree multiset must match too
     val edges = (base ++ base.take(15)).toDF("a", "b")
     val local = operators.KCore.peel(edges, 3L, 4)
-    val dist = operators.KCore.peel(edges, 3L, 4, localEdgeLimit = 0L)
+    val dist = forcingDistributed(operators.KCore.peel(edges, 3L, 4))
     assertSame(local, dist, "KCore")
   }
 }

@@ -56,7 +56,8 @@ class PageRankSpec extends SparkSpec {
       if s != d && (s + d) % 3 != 1
     } yield (s, d)).distinct
     val local = run(edges, 3)
-    val dist = PageRank.run(edges.toDF("s", "d"), "s", "d", 3, localEdgeLimit = 0)
+    val dist = graft.operators.LocalTier.forcingDistributed(
+      PageRank.run(edges.toDF("s", "d"), "s", "d", 3))
       .as[(Long, Long)].collect().toMap
     assert(local === dist)
   }
@@ -98,10 +99,9 @@ class PageRankSpec extends SparkSpec {
     score
   }
 
-  private def runSeeded(edges: Seq[(Long, Long)], seeds: Set[Long], iters: Int,
-      localEdgeLimit: Long = 4L << 20): Map[Long, Long] =
+  private def runSeeded(edges: Seq[(Long, Long)], seeds: Set[Long], iters: Int): Map[Long, Long] =
     PageRank.runPersonalized(edges.toDF("s", "d"), "s", "d",
-        seeds.toSeq.toDF("node"), "node", iters, localEdgeLimit = localEdgeLimit)
+        seeds.toSeq.toDF("node"), "node", iters)
       .as[(Long, Long)].collect().toMap
 
   test("personalized matches the seeded integer reference on random graphs") {
@@ -128,7 +128,8 @@ class PageRankSpec extends SparkSpec {
       if s != d && (s + d) % 3 != 1
     } yield (s, d)).distinct
     val seeds = Set(0L, 4L, 7L)
-    assert(runSeeded(edges, seeds, 3) === runSeeded(edges, seeds, 3, localEdgeLimit = 0))
+    assert(runSeeded(edges, seeds, 3) ===
+      graft.operators.LocalTier.forcingDistributed(runSeeded(edges, seeds, 3)))
   }
 
   test("personalized: restart mass never lands outside the walk from the seeds") {

@@ -404,15 +404,15 @@ class PlanQualitySpec extends SparkSpec {
     // local relation behind the total order — pin the route + no
     // cartesian on the query, and pin the distributed loop contract
     // (every join sid-keyed equi, aggregates partial'd) on the operator
-    // directly, forced past the routing bound.
+    // directly, forced distributed with LocalTier.forcingDistributed.
     val ps = plan("q244_seq_patterns")
     assert(!ps.contains("CartesianProduct"), s"q244 went cartesian:\n$ps")
     assert(ps.contains("LocalTableScan"), s"q244 lost the driver-tier route:\n$ps")
     val evSyn = spark.range(400).selectExpr(
       "cast(id % 40 as string) as sid", "cast(id % 5 as string) as e",
       "cast(id div 40 + 1 as long) as pos")
-    val psQe = graft.operators.PrefixSpan
-      .frequentPatterns(evSyn, 30, 3, localRowLimit = 0L).queryExecution
+    val psQe = graft.operators.LocalTier.forcingDistributed(graft.operators.PrefixSpan
+      .frequentPatterns(evSyn, 30, 3)).queryExecution
     val psDist = psQe.executedPlan.toString + cachedFinalText(psQe)
     assert(!psDist.contains("CartesianProduct"),
       s"PrefixSpan distributed tier went cartesian:\n$psDist")
@@ -439,13 +439,13 @@ class PlanQualitySpec extends SparkSpec {
       s"q245 reads unused documents columns:\n$ds")
     // q246: routes to the driver tier like q244; the distributed
     // occurrence-LIST loop contract (sid-keyed equi joins, partial'd
-    // distinct/support aggregates) pins on the operator, forced past
-    // the routing bound.
+    // distinct/support aggregates) pins on the operator, forced
+    // distributed.
     val pg = plan("q246_seq_patterns_gap")
     assert(!pg.contains("CartesianProduct"), s"q246 went cartesian:\n$pg")
     assert(pg.contains("LocalTableScan"), s"q246 lost the driver-tier route:\n$pg")
-    val pgQe = graft.operators.PrefixSpan
-      .frequentPatternsMaxGap(evSyn, 25, 3, 2, localRowLimit = 0L).queryExecution
+    val pgQe = graft.operators.LocalTier.forcingDistributed(graft.operators.PrefixSpan
+      .frequentPatternsMaxGap(evSyn, 25, 3, 2)).queryExecution
     val pgDist = pgQe.executedPlan.toString + cachedFinalText(pgQe)
     assert(!pgDist.contains("CartesianProduct"),
       s"PrefixSpan gap tier went cartesian:\n$pgDist")
@@ -457,15 +457,15 @@ class PlanQualitySpec extends SparkSpec {
     // q247 (r15): routes to the driver tier below the edge bound
     // (LocalTierSpec pins tier equality); the distributed Bellman–Ford
     // contract (frontier-keyed equi join + partial-agg'd min(struct)
-    // fold, no cartesian) pins on the operator, forced past the bound.
+    // fold, no cartesian) pins on the operator, forced distributed.
     val sp = plan("q247_sssp_cheapest_route")
     assert(!sp.contains("CartesianProduct"), s"q247 went cartesian:\n$sp")
     assert(sp.contains("LocalTableScan"), s"q247 lost the driver-tier route:\n$sp")
     val spSyn = spark.range(300).selectExpr(
       "id % 40 as src", "(id * 7) % 40 as dst", "1L + id % 9 as w")
       .filter("src <> dst")
-    val spQe = graft.operators.Sssp
-      .distances(spSyn, 0L, 3, localEdgeLimit = 0L).queryExecution
+    val spQe = graft.operators.LocalTier.forcingDistributed(graft.operators.Sssp
+      .distances(spSyn, 0L, 3)).queryExecution
     val spDist = spQe.executedPlan.toString + cachedFinalText(spQe)
     assert(!spDist.contains("CartesianProduct"),
       s"Sssp distributed tier went cartesian:\n$spDist")
@@ -500,14 +500,14 @@ class PlanQualitySpec extends SparkSpec {
     assert(fs.contains("partial_count"), s"q250 value counts not partial-agg'd:\n$fs")
     // q251 (r15): routes to the driver tier below the row bound
     // (LocalTierSpec pins tier equality); the distributed bid-keyed
-    // level loop pins on the operator, forced past the routing bound.
+    // level loop pins on the operator, forced distributed.
     val ap = plan("q251_itemsets_apriori")
     assert(!ap.contains("CartesianProduct"), s"q251 went cartesian:\n$ap")
     assert(ap.contains("LocalTableScan"), s"q251 lost the driver-tier route:\n$ap")
     val apSyn = spark.range(300).selectExpr(
       "cast(id % 60 as string) as bid", "cast(id % 6 as string) as item")
-    val apQe = graft.operators.Apriori
-      .frequentItemsets(apSyn, 10, 3, localRowLimit = 0L).queryExecution
+    val apQe = graft.operators.LocalTier.forcingDistributed(graft.operators.Apriori
+      .frequentItemsets(apSyn, 10, 3)).queryExecution
     val apDist = apQe.executedPlan.toString + cachedFinalText(apQe)
     assert(!apDist.contains("CartesianProduct"),
       s"Apriori distributed tier went cartesian:\n$apDist")
@@ -702,32 +702,89 @@ class PlanQualitySpec extends SparkSpec {
       p.contains("BroadcastHashJoin"), s"no equi-join found:\n$p")
   }
 
-  test("CC forced-distributed evaluates the pair derivation exactly once") {
-    // r16: when the size gate FAILS (the only regime that matters at
-    // 100 TB), the distributed symmetrize must read the SAME cache entry
-    // the gate count materialized — q133/q274's edges are exact
-    // similarity self-joins, and building sym from the raw edge frame
-    // would compute that derivation twice big-side (cache lookup is by
-    // canonicalized subtree, and a raw edge frame with any extra column
-    // does not match the cached narrowing Project(a, b)). Count
-    // evaluations with an accumulator-bearing projection in the edge
-    // lineage: exactly one pass over 200 rows. The payload column makes
-    // the pair projection NARROWING — with exactly (a, b) columns a
-    // trivial Project canonicalizes away and even the broken shape
-    // accidentally cache-matches, which is what hid this in r15.
+  test("every size-gated operator evaluates its input exactly once on both routes") {
+    // The LocalTier gate must add no pass over the input on either route:
+    // the gate count fills the cache (or eager checkpoint) that the
+    // local-tier collect AND the distributed plan read. A distributed
+    // plan built from the raw input instead of the gate frame would
+    // compute a possibly expensive derivation twice big-side (q133/q274's
+    // edges are exact similarity self-joins; cache lookup is by
+    // canonicalized subtree, and a raw frame with any extra column does
+    // not match the cached narrowing projection). Count evaluations with
+    // an accumulator-bearing filter in each operator's input: exactly
+    // one per input row, per call, on each route. The payload column
+    // makes every operator projection NARROWING — with exactly the
+    // projected columns a trivial Project canonicalizes away and even a
+    // broken shape accidentally cache-matches, which is what hid this in
+    // r15. It also differs per call, so no call reads another call's
+    // pinned gate cache.
+    import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.functions.{col, udf}
-    val evals = spark.sparkContext.longAccumulator("cc_pair_evals")
-    val tick = udf { (a: Long) => evals.add(1L); a }
-    val edges = spark.range(200)
-      .selectExpr("id % 50 as a0", "(id * 13) % 50 as b", "id as payload")
-      .select(tick(col("a0")).as("a"), col("b"), col("payload"))
-    val nodes = spark.range(50).selectExpr("id as doc_id")
-    val out = graft.operators.ConnectedComponents
-      .components(nodes, edges, "doc_id", maxIter = 20, localEdgeLimit = 0L)
-    out.count() // drive the full distributed iteration to completion
-    assert(evals.value === 200L,
-      s"pair derivation ran ${evals.value / 200.0} times for one call — " +
-        "the gate cache is not shared with the distributed sym")
+    import graft.operators._
+    val n = 200L
+    val evals = spark.sparkContext.longAccumulator("gated_input_evals")
+    // a FILTER, so no plan can prune it (a gate count that the cache
+    // does not serve evaluates it too), and nondeterministic, so the
+    // optimizer never copies it as an inferred constraint onto the other
+    // side of a join over a checkpoint of the input
+    val tick = udf { (a: Long) => evals.add(1L); a >= 0L }.asNondeterministic()
+    var tag = 0L
+    def input(ticked: String, exprs: String*)(): DataFrame = {
+      tag += 1
+      spark.range(n).selectExpr(exprs :+ s"id + $tag as payload": _*)
+        .filter(tick(col(ticked)))
+    }
+    val events = input("sid", "id % 40 as sid", "cast(id % 5 as string) as e",
+      "id div 40 + 1 as pos") _
+    val edges = input("a", "id % 40 as a", "(id * 13) % 40 as b") _
+    val pairs = input("a", "id div 20 as a", "20 + id % 20 as b") _ // distinct, a != b
+    val arcs = input("src", "id % 40 as src", "(id * 7 + 1) % 40 as dst") _
+    val nodes = spark.range(40).selectExpr("id as node")
+    val seeds = nodes.selectExpr("node", "node % 3 as lbl").filter("node % 7 = 0")
+    val cases = Seq[(String, () => DataFrame, DataFrame => DataFrame)](
+      ("PrefixSpan", events, PrefixSpan.frequentPatterns(_, 30, 3)),
+      ("PrefixSpan max-gap", events, PrefixSpan.frequentPatternsMaxGap(_, 25, 3, 2)),
+      ("Apriori", input("bid", "id % 60 as bid", "cast(id % 6 as string) as item"),
+        Apriori.frequentItemsets(_, 10, 3)),
+      ("Hits", arcs, Hits.run(_, 2)),
+      ("LabelProp", edges, LabelProp.propagate(nodes, _, seeds, 2)),
+      ("KCore", edges, KCore.peel(_, 2L, 3)),
+      ("RandomWalk", pairs, RandomWalk.walks(_, 1, 2, "pin")),
+      ("Louvain", pairs, Louvain.communities(_, 2)),
+      ("Louvain multi-level", pairs, Louvain.communitiesMultiLevel(_, 2, 2)),
+      ("ConnectedComponents", edges,
+        ConnectedComponents.components(nodes.selectExpr("node as doc_id"), _, "doc_id")),
+      ("Coverage", input("doc", "id % 25 as doc", "cast(id % 120 as string) as el"),
+        Coverage.greedySelect(_, "doc", "el", 3)),
+      ("Bfs", arcs, Bfs.hops(_, 0L, 3)),
+      ("Sssp", input("src", "id % 40 as src", "(id * 7 + 1) % 40 as dst", "1 + id % 9 as w"),
+        Sssp.distances(_, 0L, 3)),
+      ("PageRank", arcs, PageRank.run(_, "src", "dst", 2)),
+      ("PageRank personalized", arcs,
+        PageRank.runPersonalized(_, "src", "dst", nodes.filter("node < 3"), "node", 2)),
+      ("Bpe", input("freq", "concat('ab', cast(id % 7 as string), cast(id as string)) as word",
+          "1 + id % 5 as freq",
+          "transform(sequence(1, length(word)), i -> substring(word, i, 1)) as toks"),
+        Bpe.train(_, 3)._2))
+    def evaluations(out: => DataFrame): Long = {
+      evals.reset()
+      out.collect()
+      evals.value
+    }
+    cases.foreach { case (name, mk, op) =>
+      val local = evaluations(op(mk()))
+      assert(local === n, s"$name: the local route evaluated its input ${local / n.toDouble} times")
+      val dist = evaluations(LocalTier.forcingDistributed(op(mk())))
+      assert(dist === n,
+        s"$name: the distributed route evaluated its input ${dist / n.toDouble} times")
+      val mine = mk().persist()
+      try {
+        op(mine).collect()
+        LocalTier.forcingDistributed(op(mine)).collect()
+        assert(mine.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
+          s"$name dropped the caller's persisted input")
+      } finally mine.unpersist()
+    }
   }
 
   test("no registered query cartesian-joins two unbounded sides") {
