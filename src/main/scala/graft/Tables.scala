@@ -2,6 +2,7 @@ package graft
 
 import java.util.concurrent.ConcurrentHashMap
 
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -9,9 +10,22 @@ import org.apache.spark.sql.types._
 /** Typed loaders for the driver-generated testdata tables (TESTDATA.md).
   *
   * All loads are plain parquet scans so Catalyst keeps full freedom for
-  * predicate pushdown, column pruning and partition pruning. Nothing is
+  * predicate pushdown, column pruning and partition pruning. No data is
   * cached here — at the 100 TB design point every query must be able to
   * prune at the source, and caching a full scan would defeat that.
+  *
+  * == Schema memo ==
+  * A bare `spark.read.parquet(path)` runs a one-task Spark job to infer
+  * the schema from the parquet footers, on every load. Each path's
+  * inferred schema is therefore memoized together with a [[Fingerprint]]
+  * of what it was inferred from: every leaf file's (name, length, mtime)
+  * and the session confs that change parquet schema inference. A load
+  * whose fingerprint matches scans with `.schema(memo)` and runs no job;
+  * any mismatch (a rewrite at the same path, a session with other confs)
+  * re-infers and replaces the entry, so the memo holds one schema per
+  * path. The memoized schema is the physical one, so the adaptive
+  * decodes below still branch on the type actually stored. The `ts`
+  * epoch-unit sniff is memoized on the same fingerprint.
   *
   * == Encoding drift ==
   * The testdata is regenerated between rounds and its physical parquet
@@ -31,7 +45,47 @@ object Tables {
   def path(dir: String, name: String): String = s"$dir/$name.parquet"
 
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(path(dir, name))
+    scan(spark, path(dir, name))._1
+
+  /** What a path's inferred schema (and `ts` unit) depends on: its leaf
+    * files and the inference confs of the reading session. */
+  private final case class Fingerprint(files: Seq[(String, Long, Long)], confs: Seq[Boolean])
+
+  private def fingerprint(spark: SparkSession, file: String): Fingerprint = {
+    val root = new Path(file)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def leaves(s: FileStatus): Seq[FileStatus] =
+      if (s.isDirectory) fs.listStatus(s.getPath).toSeq.flatMap(leaves) else Seq(s)
+    // a missing path fingerprints as empty; the inference then raises
+    // Spark's own not-found error and nothing is memoized
+    val files = (if (fs.exists(root)) leaves(fs.getFileStatus(root)) else Nil)
+      .map(s => (s.getPath.toString, s.getLen, s.getModificationTime)).sortBy(_._1)
+    val c = spark.sessionState.conf
+    Fingerprint(files, Seq(c.legacyParquetNanosAsLong, c.isParquetBinaryAsString,
+      c.isParquetINT96AsTimestamp, c.parquetInferTimestampNTZEnabled, c.caseSensitiveAnalysis,
+      c.isParquetSchemaMergingEnabled))
+  }
+
+  /** The memoized value for `file` if it was computed under `fp`, else
+    * `compute` (outside any map lock: it may run a Spark job), stored in
+    * place of the stale entry. */
+  private def memoized[T](memo: ConcurrentHashMap[String, (Fingerprint, T)], file: String,
+      fp: Fingerprint)(compute: => T): T =
+    Option(memo.get(file)).collect { case (`fp`, v) => v }.getOrElse {
+      val v = compute
+      memo.put(file, (fp, v))
+      v
+    }
+
+  private val schemas = new ConcurrentHashMap[String, (Fingerprint, StructType)]()
+
+  /** A parquet scan of `file` with its footer schema memoized, and the
+    * fingerprint that schema was checked against. */
+  private def scan(spark: SparkSession, file: String): (DataFrame, Fingerprint) = {
+    val fp = fingerprint(spark, file)
+    val schema = memoized(schemas, file, fp)(spark.read.parquet(file).schema)
+    (spark.read.schema(schema).parquet(file), fp)
+  }
 
   def region(spark: SparkSession, dir: String): DataFrame   = table(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame   = table(spark, dir, "nation")
@@ -85,7 +139,8 @@ object Tables {
     * result).
     */
   def events(spark: SparkSession, dir: String): DataFrame = {
-    val df = eventsTs(table(spark, dir, "events"), path(dir, "events"))
+    val (scanned, fp) = scan(spark, path(dir, "events"))
+    val df = eventsTs(scanned, path(dir, "events"), fp)
     if (!df.columns.contains("props")) df
     else df.schema("props").dataType match {
       case StringType => df
@@ -103,9 +158,9 @@ object Tables {
     *
     *  - `LongType`: a bare epoch long is ambiguous (nanos? micros?
     *    millis? seconds?), so the unit is decided ONCE PER LOAD from the
-    *    column's min/max (one tiny agg, memoized per file path for the
-    *    JVM lifetime — and free entirely when the physical type is a real
-    *    timestamp, i.e. the current testdata). Magnitude bands are
+    *    column's min/max (one tiny agg, memoized per file fingerprint
+    *    like the schema — and free entirely when the physical type is a
+    *    real timestamp, i.e. the current testdata). Magnitude bands are
     *    unambiguous for instants in [1973, 2281): nanos > 1e16, micros >
     *    1e13, millis > 1e10, else seconds. Min and max must land in the
     *    SAME band and both must decode inside [1973-01-01, 2281-01-01) —
@@ -120,10 +175,10 @@ object Tables {
     *    session-TZ `TimestampType`. Sessions pin UTC, so the NTZ cast is
     *    value-preserving and keeps `date_format`/`window` oracle parity.
     */
-  private def eventsTs(df: DataFrame, file: String): DataFrame =
+  private def eventsTs(df: DataFrame, file: String, fp: Fingerprint): DataFrame =
     df.schema("ts").dataType match {
       case LongType =>
-        val decode = epochUnitCache.computeIfAbsent(file, _ => sniffEpochUnit(df, file)) match {
+        val decode = memoized(epochUnits, file, fp)(sniffEpochUnit(df, file)) match {
           case "ns" => expr("timestamp_micros(ts div 1000)")
           case "us" => expr("timestamp_micros(ts)")
           case "ms" => expr("timestamp_millis(ts)")
@@ -134,7 +189,7 @@ object Tables {
         df.withColumn("ts", col("ts").cast(TimestampType))
     }
 
-  private val epochUnitCache = new ConcurrentHashMap[String, String]()
+  private val epochUnits = new ConcurrentHashMap[String, (Fingerprint, String)]()
 
   // The supported instant range, in micros. Above 2281 the nanos and
   // micros bands overlap (1e16 us ≈ year 2286); below 1973 the bands

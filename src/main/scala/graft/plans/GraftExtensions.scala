@@ -7,6 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.SparkStrategy
+import org.apache.spark.sql.internal.StaticSQLConf
 
 /** Session extension registering the graft native expressions so they are
   * callable from SQL and via `call_function` (the (c) tier:
@@ -14,6 +15,15 @@ import org.apache.spark.sql.execution.SparkStrategy
   * `.withExtensions(new GraftExtensions)` at session build time, or call
   * [[GraftExtensions.ensureRegistered]] on an existing session (operators
   * do this on entry so they work under any driver-created session).
+  *
+  * `ensureRegistered` also sizes Spark's generated-class cache
+  * (`spark.sql.codegen.cache.maxEntries`, an LRU of 100 entries by
+  * default) to `CodegenCacheEntries` (4096): one pass of the
+  * registry compiles far more than 100 distinct classes, so at the
+  * default every repeat pass recompiles them all. A value set in the
+  * SparkContext conf wins. Spark reads the key once, when its
+  * `CodeGenerator` first initializes, so the sizing has no effect in a
+  * JVM that compiled generated code before the hook first ran.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -146,10 +156,21 @@ object GraftExtensions {
     Seq(RewriteDotProduct, RewriteIntersectOverlap, PushAggThroughJoin)
   private val strategies: Seq[SparkStrategy] = Seq(AsOfJoinStrategy)
 
+  /** Generated-class cache entries: one pass of the whole registry
+    * compiles ~2900 distinct classes (at sf0.01 and at sf0.1), plus
+    * headroom for the ~200-350 classes per pass whose code embeds a
+    * per-run literal and never hits. */
+  private val CodegenCacheEntries = 4096
+
   /** Idempotent late registration into an already-built session, via the
     * public `experimental` hooks for the rules and the strategy (since
-    * extensions can only be installed at session build time). */
+    * extensions can only be installed at session build time), plus the
+    * generated-class cache sizing. */
   def ensureRegistered(spark: SparkSession): Unit = {
+    val cacheKey = StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key
+    // a static key set in the SparkContext conf is copied into every session conf
+    if (!spark.sessionState.conf.contains(cacheKey))
+      spark.sessionState.conf.setConfString(cacheKey, CodegenCacheEntries.toString)
     val registry: FunctionRegistry = spark.sessionState.functionRegistry
     functions.foreach { case (id, info, builder) =>
       if (!registry.functionExists(id)) registry.registerFunction(id, info, builder)

@@ -4,7 +4,9 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (one JVM-wide session — Spark
-  * startup dominates test wall-clock otherwise). */
+  * startup dominates test wall-clock otherwise). The graft extensions are
+  * registered before any suite runs, so the generated-class cache is
+  * sized the same whatever order the suites run in. */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
 }
@@ -20,6 +22,7 @@ object SparkSpec {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    graft.plans.GraftExtensions.ensureRegistered(s)
     s
   }
 }
