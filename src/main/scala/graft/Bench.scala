@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
 
   /** Fold N timed passes into (per-query min over successful passes,
@@ -28,36 +27,14 @@ object Bench {
   }
 
   def main(args: Array[String]): Unit = {
-    graft.tools.HarnessLog.quietUnavoidableStreamingWarns()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Optional conf overrides for A/B runs, e.g.
-    // SPARK_GRAFT_EXTRA_CONF="spark.graft.eagerAgg.enabled=false"
-    val extra = sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq
-      .flatMap(_.split(',')).map(_.trim).filter(_.contains("="))
-      .map { kv => val Array(k, v) = kv.split("=", 2); (k, v) }
-    val spark = extra.foldLeft(SparkSession.builder()
-      .master(s"local[$cpus]"))((b, kv) => b.config(kv._1, kv._2))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.ts encoding drifts between testdata regenerations; this
-      // keeps the TIMESTAMP(NANOS) variant readable (as long) while
-      // Tables.events adapts to whichever encoding is live.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // re-assert: setLogLevel resets the root level these loggers inherit
-    graft.tools.HarnessLog.quietUnavoidableStreamingWarns()
-    // Local-iteration subset (the Verify SPARK_GRAFT_ONLY convention,
-    // prefix match). Unset = every registered query — the driver's
-    // contract. Added r14 for the carried-query drift attribution: run
+    val spark = Session.harness()
+    // Unset SPARK_GRAFT_ONLY = every registered query, as SparkEntry
+    // promises. Added r14 for the carried-query drift attribution: run
     // an older round's exact query set ALONE to separate suite-
     // cumulative session pressure from per-plan cost.
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSeq)
-    val selected = SparkEntry.queries.filter { case (name, _) =>
-      only.forall(_.exists(name.startsWith))
-    }
+    val selects = QueryRegistry.selects(sys.env.get("SPARK_GRAFT_ONLY"))
+    val selected = SparkEntry.queries.filter { case (name, _) => selects(name) }
     // Steady-state methodology: one untimed pass first, then the timed
     // passes. A single cold run charges JVM tiered-compilation (C2 only
     // kicks in at volume: measured 12.6s cold vs 1.7s steady on the

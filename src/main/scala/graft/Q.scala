@@ -108,4 +108,12 @@ object QueryRegistry {
     qs
   }
   lazy val byName: Map[String, Q] = all.map(q => q.name -> q).toMap
+
+  /** The `SPARK_GRAFT_ONLY` selection Bench and Verify share: a
+    * comma-separated list of name prefixes, each trimmed
+    * (`"q01, q02"` selects q01_* and q02_*); unset selects every query. */
+  def selects(only: Option[String]): String => Boolean = {
+    val prefixes = only.map(_.split(',').map(_.trim).toSeq)
+    name => prefixes.forall(_.exists(name.startsWith))
+  }
 }

@@ -1,33 +1,16 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    graft.tools.HarnessLog.quietUnavoidableStreamingWarns()
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.ts encoding drifts between testdata regenerations; this
-      // keeps the TIMESTAMP(NANOS) variant readable (as long) while
-      // Tables.events adapts to whichever encoding is live.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // re-assert: setLogLevel resets the root level these loggers inherit
-    graft.tools.HarnessLog.quietUnavoidableStreamingWarns()
+    val spark = Session.harness()
     new java.io.File(outDir).mkdirs()
-    // Local-iteration filter: SPARK_GRAFT_ONLY=q145,q146 runs just those
-    // (prefix match). Unset = everything — the driver's contract.
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq)
-    val selected = SparkEntry.queries.filter { case (name, _) =>
-      only.forall(_.exists(name.startsWith))
-    }
+    // Local-iteration filter: SPARK_GRAFT_ONLY=q145,q146 runs just those.
+    // Unset = everything, as SparkEntry promises.
+    val selects = QueryRegistry.selects(sys.env.get("SPARK_GRAFT_ONLY"))
+    val selected = SparkEntry.queries.filter { case (name, _) => selects(name) }
     // A failed query must surface as a RED row, never a missing one: r7's
     // 18-row regression shipped invisibly because failures were only
     // stderr lines and the driver omits absent outputs. On failure we

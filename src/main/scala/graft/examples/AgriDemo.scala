@@ -68,13 +68,7 @@ object AgriDemo {
     val n = if (args.nonEmpty) args(0).toLong else 100000L
     val out = if (args.length > 1) args(1)
       else java.nio.file.Files.createTempDirectory("agri_corpus").toString
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.harness()
     val t0 = System.nanoTime()
     val corpus = harvest(spark, n, out)
     val landed = corpus.count()

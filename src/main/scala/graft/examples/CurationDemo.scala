@@ -1,6 +1,6 @@
 package graft.examples
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.GraftFunctions.{hash60, tokens}
@@ -79,12 +79,7 @@ object CurationDemo {
   /** Runnable demo over the driver testdata. */
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.harness()
     val curated = curate(graft.Tables.documents(spark, sfDir))
     val perShard = curated.groupBy("shard").count().orderBy("shard").collect()
     println(s"CURATED ROWS=${curated.count()} SHARDS=${perShard.length}")

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.QueryRegistry
 
 /** Output-row counts for a query subset at several scale dirs — the
@@ -12,21 +10,17 @@ import graft.QueryRegistry
   * its time exponent must be read against its output exponent.
   *
   * Usage: runMain graft.tools.CountRows q59_simhash_pairs,q130_editdist_join dir1 dir2 ...
+  *
+  * `CountRows q01_pricing_summary <sf0.001 dir>` is also the entry smoke
+  * check: `SparkEntry.entry` is that query at that scale, and its count
+  * must be > 0.
   */
 object CountRows {
 
   def main(args: Array[String]): Unit = {
     val names = args(0).split(',').map(_.trim).toSeq
     val dirs = args.drop(1).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.harness()
     val body = names.map { n =>
       val per = dirs.map { d =>
         val c = QueryRegistry.byName(n).run(spark, d).count()

@@ -1,28 +1,31 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.FormattedMode
 
 import graft.QueryRegistry
 
-/** Plan inspection for any registry query:
-  * `sbt "runMain graft.tools.Explain q147_weighted_subset_es /root/testdata/sf0.01"`
-  * prints the formatted physical plan (the .explain("formatted") the
-  * scale review reads: shuffle count, pushed filters, codegen spans).
+/** Plan inspection for registry queries, all in one session:
+  * `sbt "runMain graft.tools.Explain q147_weighted_subset_es q210_weighted_median"`
+  * (data dir from `SPARK_GRAFT_SF_DIR`, default sf0.01) prints, per
+  * query, a `==== <name> ====` header, the formatted physical plan (the
+  * view the scale review reads: shuffle count, pushed filters, codegen
+  * spans) and then the executed plan (the text PlanQualitySpec pins
+  * against). A query whose plan fails prints `EXPLAIN FAILED: ...`
+  * and the run goes on. An optimization round's evidence file is one
+  * redirect: `... Explain q1 q2 > plans/rN/before.txt`.
   */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val name = args(0)
-    val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    QueryRegistry.byName(name).run(spark, dir).explain("formatted")
+    val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
+    val spark = graft.Session.harness()
+    args.foreach { name =>
+      println(s"==== $name ====")
+      println(
+        try {
+          val qe = QueryRegistry.byName(name).run(spark, dir).queryExecution
+          qe.explainString(FormattedMode) + "\n" + qe.executedPlan
+        } catch { case e: Throwable => s"EXPLAIN FAILED: ${e.getMessage}" })
+    }
     spark.stop()
   }
 }

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -79,13 +79,7 @@ object FloatMargin {
   def main(args: Array[String]): Unit = {
     val dirs = if (args.nonEmpty) args.toSeq
                else Seq("/root/testdata/sf0.01", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master(
-        s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.harness()
     import graft.functions.GraftFunctions.tokens
 
     for (dir <- dirs) {

@@ -1,6 +1,6 @@
 package graft.tools
 
-/** Harness-only log hygiene for the Bench/Verify/ScaleBench forks.
+/** Log hygiene for the harness session (`graft.Session`).
   *
   * Two Spark loggers WARN unavoidably whenever AQE meets a stateful
   * stream (ResolveWriteToStream re-planning note, MicroBatchExecution's

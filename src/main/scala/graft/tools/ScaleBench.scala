@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.QueryRegistry
 
 /** The 10× scale probe: run the heaviest registry queries at sf0.1 and
@@ -11,7 +9,7 @@ import graft.QueryRegistry
   * quadratic blowup the plans are designed to avoid. Emits ONE JSON line
   * (same contract as graft.Bench) for BENCH_scale.json.
   *
-  * Usage:
+  * Usage (BENCH_scale.json's runs set SPARK_GRAFT_CPUS=32; see graft.Session):
   *   runMain graft.tools.ScaleGen /root/testdata/sf0.1 /tmp/sf1x 10
   *   runMain graft.tools.ScaleBench /root/testdata/sf0.1 /tmp/sf1x 10
   */
@@ -156,7 +154,6 @@ object ScaleBench {
     "q275_trigram_search")
 
   def main(args: Array[String]): Unit = {
-    graft.tools.HarnessLog.quietUnavoidableStreamingWarns()
     val small = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val big = args.lift(1).getOrElse("/tmp/sf1x")
     val factor = args.lift(2).map(_.toInt).getOrElse(10)
@@ -164,24 +161,7 @@ object ScaleBench {
     // specific pair at an extra factor (e.g. the 30x confirmation points)
     // without paying for the whole Heavy list.
     val subset = args.lift(3).map(_.split(',').map(_.trim).toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // A/B conf overrides (the Bench hook), applied AFTER the defaults so
-    // an experiment can move spark.sql.shuffle.partitions etc. — added
-    // r15 for the 100x exponent-substrate attribution runs.
-    val extra = sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq
-      .flatMap(_.split(',')).map(_.trim).filter(_.contains("="))
-      .map { kv => val Array(k, v) = kv.split("=", 2); (k, v) }
-    val spark = extra.foldLeft(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true"))(
-      (b, kv) => b.config(kv._1, kv._2))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // re-assert: setLogLevel resets the root level these loggers inherit
-    graft.tools.HarnessLog.quietUnavoidableStreamingWarns()
+    val spark = graft.Session.harness()
 
     val names = Heavy.filter(QueryRegistry.byName.contains)
       .filter(n => subset.forall(_.contains(n)))

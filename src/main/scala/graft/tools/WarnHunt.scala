@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.QueryRegistry
 
 /** Bench-tail hygiene diagnostic: run every registry query 3x (Bench's
@@ -17,14 +15,7 @@ import graft.QueryRegistry
 object WarnHunt {
   def main(args: Array[String]): Unit = {
     val dir = args.lift(0).getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.harness()
     QueryRegistry.all.foreach { q =>
       (1 to 3).foreach { pass =>
         System.err.println(s"### MARK ${q.name} pass $pass")

@@ -116,4 +116,12 @@ class RegistrySpec extends SparkSpec {
     assert(names.distinct.size === names.size)
     assert(names.forall(_.matches("q\\d+_[a-z0-9_]+")))
   }
+
+  test("SPARK_GRAFT_ONLY selects by trimmed name prefix; unset selects all") {
+    def picked(only: Option[String]) =
+      QueryRegistry.all.map(_.name).filter(QueryRegistry.selects(only))
+    assert(picked(Some("q01, q02")) === Seq("q01_pricing_summary", "q02_filter_predicates"))
+    assert(picked(Some("q01,q02")) === picked(Some(" q01 ,\tq02 ")))
+    assert(picked(None) === QueryRegistry.all.map(_.name))
+  }
 }
