@@ -26,6 +26,16 @@ object AgriQueries {
 
   private val CropsGlob = "/root/reference/data/crops/*.csv"
 
+  /** Where the reference's harvested CSVs live. They are not part of this
+    * repo, so every entry in [[qs]] needs them put there first. */
+  private[graft] val CropsDir: String = new java.io.File(CropsGlob).getParent
+
+  /** True when [[CropsDir]] holds at least one `.csv`, which is what
+    * [[CropsGlob]] needs to match. */
+  private[graft] def corpusPresent: Boolean =
+    Option(new java.io.File(CropsDir).listFiles()).exists(
+      _.exists(f => f.isFile && f.getName.endsWith(".csv")))
+
   /** Per-JVM memo of the cleaned corpus as pruned parquet: the four
     * registry queries (and Bench's warmup+timed double pass) share one
     * normalization of the 122 MB CSV corpus instead of re-parsing it per
@@ -44,6 +54,10 @@ object AgriQueries {
     def apply(spark: SparkSession): DataFrame = {
       val d = synchronized {
         dir.getOrElse {
+          if (!corpusPresent)
+            throw new java.io.FileNotFoundException(
+              s"no .csv under $CropsDir: it holds the reference's harvested " +
+                "agmarknet CSVs, which are not in this repo")
           // Retry-transparent: a first-attempt transient (temp-dir or
           // listing race under a loaded host — seen once in the r7 bench
           // tail) gets one structured warning and a clean rebuild into a

@@ -4,7 +4,7 @@ package graft
   * properties that make the queries scale (pushdown, pruning, broadcast,
   * top-k) so a refactor that silently regresses one fails loudly.
   */
-class PlanQualitySpec extends SparkSpec {
+class PlanQualitySpec extends SparkSpec with RegistrySweep {
 
   private val dir = "/root/testdata/sf0.001"
 
@@ -802,10 +802,11 @@ class PlanQualitySpec extends SparkSpec {
       case _: CollectLimitExec => ()
       case _: LocalTableScanExec => ()
     }.isDefined
-    QueryRegistry.all.foreach { q =>
-      // sparkPlan = the pre-AQE physical plan (node types visible without
-      // executing); building it runs any driver-side prep some queries do
-      val p = q.run(spark, dir).queryExecution.sparkPlan
+    // sparkPlan = the pre-AQE physical plan (node types visible without
+    // executing); building it runs any driver-side prep some queries do
+    val (plans, failures) = eachEntry(sweepEntries())(q => q.run(spark, dir).queryExecution.sparkPlan)
+    assert(failures.isEmpty, s"entries failing to plan at $dir:\n${failures.mkString("\n")}")
+    plans.foreach { case (q, p) =>
       p.foreach {
         case j: joins.CartesianProductExec =>
           assert(j.children.forall(bounded),

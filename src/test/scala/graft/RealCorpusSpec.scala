@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 
 import graft.ingest.AgriPipeline
+import graft.queries.AgriQueries
 import org.apache.spark.sql.functions._
 
 /** Layer-A parity proof over the ACTUAL harvested corpus
@@ -18,10 +19,10 @@ import org.apache.spark.sql.functions._
   */
 class RealCorpusSpec extends SparkSpec {
 
-  private val crops = "/root/reference/data/crops"
+  private val crops = AgriQueries.CropsDir
 
   test("Layer A end-to-end over the real corpus matches BASELINE §B") {
-    assume(new java.io.File(crops).isDirectory, s"$crops not present")
+    assume(AgriQueries.corpusPresent, s"no .csv under $crops")
 
     val raw = AgriPipeline.readCsv(spark, s"$crops/*.csv")
     val norm = AgriPipeline.normalize(raw).persist()
@@ -62,7 +63,7 @@ class RealCorpusSpec extends SparkSpec {
   }
 
   test("AgriDemo analytics over the real corpus (values pinned via DuckDB)") {
-    assume(new java.io.File(crops).isDirectory, s"$crops not present")
+    assume(AgriQueries.corpusPresent, s"no .csv under $crops")
     val corpus = AgriPipeline.dropInvalid(
       AgriPipeline.normalize(AgriPipeline.readCsv(spark, s"$crops/*.csv"))).persist()
 

@@ -5,7 +5,7 @@ package graft
   * returns a single aggregate row). Cheap insurance against a future
   * entry silently breaking the driver's t2 gate.
   */
-class RegistrySpec extends SparkSpec {
+class RegistrySpec extends SparkSpec with RegistrySweep {
 
   private val dir = "/root/testdata/sf0.001"
 
@@ -40,25 +40,16 @@ class RegistrySpec extends SparkSpec {
     // those at full cost on top of the execution sweep below — accepted,
     // because skipping them here would leave exactly the entries with
     // the most moving parts outside the drift guard.
-    val failures = QueryRegistry.all.flatMap { q =>
-      try { q.run(spark, dir).queryExecution.analyzed; None }
-      catch { case e: Throwable =>
-        Some(q.name -> Option(e.getMessage).getOrElse(e.getClass.getName).take(200)) }
-    }
+    val (_, failures) = eachEntry(sweepEntries())(_.run(spark, dir).queryExecution.analyzed)
     assert(failures.isEmpty,
       s"entries failing analysis against $dir:\n${failures.mkString("\n")}")
   }
 
   test("every registered query executes and yields a schema") {
-    val failures = QueryRegistry.all.flatMap { q =>
-      try {
-        val df = q.run(spark, dir)
-        assert(df.schema.fields.nonEmpty)
-        df.count() // force full execution
-        None
-      } catch {
-        case e: Throwable => Some(q.name -> e.getMessage.take(200))
-      }
+    val (_, failures) = eachEntry(sweepEntries()) { q =>
+      val df = q.run(spark, dir)
+      assert(df.schema.fields.nonEmpty)
+      df.count() // force full execution
     }
     assert(failures.isEmpty, s"queries failed at sf0.001:\n${failures.mkString("\n")}")
   }
@@ -82,8 +73,11 @@ class RegistrySpec extends SparkSpec {
       case TimestampType | TimestampNTZType => false
       case _ => true
     }
-    val offenders = QueryRegistry.all.filter(_.oracle.isDefined).flatMap { q =>
-      val bad = q.run(spark, dir).schema.fields.filterNot(f => scalarOk(f.dataType))
+    val (schemas, failures) =
+      eachEntry(sweepEntries().filter(_.oracle.isDefined))(q => q.run(spark, dir).schema)
+    assert(failures.isEmpty, s"oracle-checked queries failing at $dir:\n${failures.mkString("\n")}")
+    val offenders = schemas.flatMap { case (q, schema) =>
+      val bad = schema.fields.filterNot(f => scalarOk(f.dataType))
       if (bad.isEmpty) None
       else Some(s"${q.name}: ${bad.map(f => s"${f.name}:${f.dataType.simpleString}").mkString(", ")}")
     }
@@ -98,17 +92,29 @@ class RegistrySpec extends SparkSpec {
     // the shapes the rule was designed against. Oracle-checked entries
     // are deterministic by contract, so a sorted row-string comparison is
     // exact.
-    def sweep(on: Boolean): Map[String, Seq[String]] = {
+    val checked = sweepEntries().filter(_.oracle.isDefined)
+    def sweep(on: Boolean): (Map[String, Seq[String]], Seq[String]) = {
       spark.conf.set("spark.graft.eagerAgg.enabled", on.toString)
-      try QueryRegistry.all.filter(_.oracle.isDefined).map { q =>
-        q.name -> q.run(spark, dir).collect().map(_.toString).sorted.toSeq
-      }.toMap
-      finally spark.conf.set("spark.graft.eagerAgg.enabled", "true")
+      try {
+        val (rows, failures) =
+          eachEntry(checked)(q => q.run(spark, dir).collect().map(_.toString).sorted.toSeq)
+        (rows.map { case (q, r) => q.name -> r }.toMap, failures)
+      } finally spark.conf.set("spark.graft.eagerAgg.enabled", "true")
     }
-    val off = sweep(on = false)
-    val on = sweep(on = true)
+    val (off, offFailures) = sweep(on = false)
+    val (on, onFailures) = sweep(on = true)
+    val failures = (offFailures ++ onFailures).distinct
+    assert(failures.isEmpty, s"oracle-checked queries failing at $dir:\n${failures.mkString("\n")}")
     val diffs = off.keys.filter(k => on(k) != off(k)).toSeq.sorted
     assert(diffs.isEmpty, s"eager-agg rule changed results for: ${diffs.mkString(", ")}")
+  }
+
+  test("the sweeps leave out the corpus entries only when the corpus is absent") {
+    val (all, noneLeft) = RegistrySweep.entries(corpusPresent = true)
+    assert(all === QueryRegistry.all && noneLeft.isEmpty)
+    val (kept, left) = RegistrySweep.entries(corpusPresent = false)
+    assert(left === queries.AgriQueries.qs.map(_.name) && left.size === 8)
+    assert(kept.map(_.name) === QueryRegistry.all.map(_.name).filterNot(left.toSet))
   }
 
   test("query names are unique and well-formed") {
