@@ -95,13 +95,9 @@ object Dedup {
   /** Affine family parameters (a_i in [1, P-1], b_i in [0, P-1]), derived
     * from md5 so the oracle can inline the identical constants. */
   def minhashParams(n: Int): Seq[(Long, Long)] = {
-    def h60(s: String): Long = {
-      val md = java.security.MessageDigest.getInstance("MD5")
-      val hex = md.digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-      java.lang.Long.parseLong(hex.substring(0, 15), 16)
-    }
+    val md = java.security.MessageDigest.getInstance("MD5")
     (0 until n).map(i =>
-      (h60(s"mha:$i") % (MinhashPrime - 1) + 1, h60(s"mhb:$i") % MinhashPrime))
+      (hash60Local(md, s"mha:$i") % (MinhashPrime - 1) + 1, hash60Local(md, s"mhb:$i") % MinhashPrime))
   }
 
   /** MinHash signature: one row per doc, columns mh_0..mh_{numHashes-1}.
@@ -133,14 +129,8 @@ object Dedup {
   }
 
   /** Candidate pairs (a < b) with the number of bands they collide in. */
-  def lshCandidates(bandsDf: DataFrame, idCol: String): DataFrame = {
-    val x = bandsDf.select(col(idCol).as("a"), col("band"), col("key"))
-    val y = bandsDf.select(col(idCol).as("b"), col("band"), col("key"))
-    x.join(y, Seq("band", "key"))
-      .filter(col("a") < col("b"))
-      .groupBy(col("a"), col("b"))
-      .agg(countDistinct(col("band")).as("n_shared_bands"))
-  }
+  def lshCandidates(bandsDf: DataFrame, idCol: String): DataFrame =
+    bandPairs(bandsDf, bandsDf, idCol, self = true)
 
   /** Cross-corpus candidate pairs — the decontamination shape: find
     * documents of corpus A (e.g. a training crawl) near-duplicating any
@@ -149,13 +139,14 @@ object Dedup {
     * is driven by true cross-corpus collisions, never |A|×|B|. At 100 TB
     * the benchmark side is tiny and its band table broadcasts.
     */
-  def lshCrossCandidates(bandsA: DataFrame, bandsB: DataFrame, idCol: String): DataFrame = {
-    val x = bandsA.select(col(idCol).as("a"), col("band"), col("key"))
-    val y = bandsB.select(col(idCol).as("b"), col("band"), col("key"))
-    x.join(y, Seq("band", "key"))
-      .groupBy(col("a"), col("b"))
-      .agg(countDistinct(col("band")).as("n_shared_bands"))
-  }
+  def lshCrossCandidates(bandsA: DataFrame, bandsB: DataFrame, idCol: String): DataFrame =
+    bandPairs(bandsA, bandsB, idCol, self = false)
+
+  private def bandPairs(bandsA: DataFrame, bandsB: DataFrame, idCol: String, self: Boolean): DataFrame =
+    CandidateJoin.pairs(
+      bandsA.select(col(idCol).as("a"), col("band"), col("key")),
+      bandsB.select(col(idCol).as("b"), col("band"), col("key")),
+      Seq("band", "key"), self, CandidateJoin.DistinctKeys("band", "n_shared_bands"))
 
   /** Exact n-gram cross-corpus contamination — the PRECISION complement
     * of [[lshCrossCandidates]] and the standard eval-decontamination
@@ -197,12 +188,10 @@ object Dedup {
     if (maxDf == Long.MaxValue) {
       // uncapped exact path: inverted-index self-join
       val counts = index.groupBy(col(idCol)).agg(count(lit(1)).as("n_sh"))
-      val x = index.select(col(idCol).as("a"), col("shingle"))
-      val y = index.select(col(idCol).as("b"), col("shingle"))
-      x.join(y, "shingle")
-        .filter(col("a") < col("b"))
-        .groupBy(col("a"), col("b"))
-        .agg(count(lit(1)).as("inter"))
+      CandidateJoin.pairs(
+          index.select(col(idCol).as("a"), col("shingle")),
+          index.select(col(idCol).as("b"), col("shingle")),
+          Seq("shingle"), self = true, CandidateJoin.AllKeys("inter"))
         .join(counts.select(col(idCol).as("a"), col("n_sh").as("ca")), "a")
         .join(counts.select(col(idCol).as("b"), col("n_sh").as("cb")), "b")
         .withColumn("jacc",
@@ -275,7 +264,13 @@ object Dedup {
   }
 
   /** Hamming distance between two simhash values. */
-  def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
+  def hamming(a: Column, b: Column): Column = CandidateJoin.hamming(a, b)
+
+  /** Default routing threshold for [[simhashTopPairs]]: 4M sketches
+    * ≈ 64 MB of (id, hash) pairs — comfortably broadcastable; above it
+    * the driver-collect path is replaced by [[simhashBandedTopPairs]].
+    */
+  val SimhashBroadcastLimit: Long = 4L * 1000 * 1000
 
   /** Top-k closest simhash pairs (a < b) by Hamming distance, ties broken
     * on (a, b).
@@ -287,16 +282,10 @@ object Dedup {
     * global top-k. Replaces a JoinedRow-materializing cross join
     * (measured ~4s -> sub-second on 5k docs / 12.5M pairs). A pair that
     * is globally top-k is necessarily within its left row's top-k, so
-    * the two-phase select is exact. At sketch sizes beyond driver memory
-    * the banding candidates of [[lshCandidates]] are the scale path.
-    */
-  /** Default routing threshold for [[simhashTopPairs]]: 4M sketches
-    * ≈ 64 MB of (id, hash) pairs — comfortably broadcastable; above it
-    * the driver-collect path is replaced by [[simhashBandedTopPairs]].
-    */
-  val SimhashBroadcastLimit: Long = 4L * 1000 * 1000
-
-  /** @param sizeHint caller-known sketch count; when provided the guard
+    * the two-phase select is exact. Past `broadcastLimit` sketches the
+    * banded candidates of [[simhashBandedTopPairs]] are the scale path.
+    *
+    * @param sizeHint caller-known sketch count; when provided the guard
     *   skips its bounded probe job (`limit(budget+1).count`) entirely.
     *   NOTE the above-budget result is NOT an exact top-k: the banded
     *   route only finds pairs at Hamming distance < bands (pigeonhole
@@ -354,14 +343,11 @@ object Dedup {
   }
 
   /** Distributed top-k simhash pairs via banding — the scale path of
-    * [[simhashTopPairs]]. The sketch is split into `bands` sub-keys of
-    * `bitsPerBand` bits; by pigeonhole, any pair at Hamming distance
-    * < bands agrees on at least one band, so the band-key equi-join finds
-    * every such pair exactly (recall is exact for dist ≤ bands-1; more
-    * distant pairs — which near-dup dedup doesn't want anyway — may be
-    * missed). Shape: explode to bands rows/doc, shuffle on (band, key),
-    * per-bucket join, exact Hamming verify, global top-k. No collect, no
-    * cross join.
+    * [[simhashTopPairs]]: the candidates of [[CandidateJoin.sketchPairs]]
+    * over `bands` sub-keys of `bitsPerBand` bits (recall is exact for
+    * dist ≤ bands-1; more distant pairs, which near-dup dedup doesn't want
+    * anyway, may be missed), exact Hamming verify, global top-k. No
+    * collect, no cross join.
     *
     * Key-space sizing is what makes this scale: with [[simhash60]] and
     * the default 4×15-bit bands there are 2^15 keys per band, so band
@@ -377,23 +363,9 @@ object Dedup {
       k: Int,
       bands: Int = 4,
       bitsPerBand: Int = 15): DataFrame = {
-    require(bands * bitsPerBand <= 64, s"bands*bitsPerBand must fit 64 bits")
-    val width = bitsPerBand
-    val mask = (1L << width) - 1
     val s = sketches.select(col(idCol).cast("long").as("__id"), col(hashCol).cast("long").as("__h"))
-    val bandStructs = (0 until bands).map { b =>
-      struct(lit(b).as("band"),
-        shiftright(col("__h"), b * width).bitwiseAND(lit(mask)).as("key"))
-    }
-    val banded = s
-      .select(col("__id"), col("__h"), explode(array(bandStructs: _*)).as("bk"))
-      .select(col("__id"), col("__h"), col("bk.band").as("band"), col("bk.key").as("key"))
-    val x = banded.select(col("__id").as("a"), col("__h").as("ha"), col("band"), col("key"))
-    val y = banded.select(col("__id").as("b"), col("__h").as("hb"), col("band"), col("key"))
-    x.join(y, Seq("band", "key"))
-      .filter(col("a") < col("b"))
+    CandidateJoin.sketchPairs(s, "__id", "__h", bands, bitsPerBand)
       .select(col("a"), col("b"), hamming(col("ha"), col("hb")).cast("int").as("dist"))
-      .distinct()
       .orderBy(col("dist"), col("a"), col("b"))
       .limit(k)
   }

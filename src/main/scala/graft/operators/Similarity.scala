@@ -3,9 +3,9 @@ package graft.operators
 import java.security.MessageDigest
 
 import graft.functions.GraftFunctions._
+import graft.operators.CandidateJoin.{exactCosine, firstK, probes, topKNeighbors}
 import graft.plans.GraftExtensions
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Vector similarity search (SURVEY.md B7/B43): brute-force cosine top-k
@@ -16,8 +16,10 @@ import org.apache.spark.sql.functions._
   * the candidate table once — a linear scan, the right baseline even on a
   * 1000-executor cluster. The LSH variant assigns every vector a bucket
   * from deterministic hyperplane signs, so the candidate join is
-  * bucket-equi-partitioned (shuffle on a 4-bit key instead of a cross
-  * join); recall is tunable via planes/probes.
+  * bucket-equi-partitioned (shuffle on a bucket key of 4 to 24 plane bits,
+  * [[adaptivePlanes]], instead of a cross join); recall is tunable via
+  * planes/probes. The candidate joins, multi-probe, re-attach and exact
+  * score are [[CandidateJoin]]'s.
   */
 object Similarity {
 
@@ -29,11 +31,7 @@ object Similarity {
     */
   def hyperplanes(planes: Int, dims: Int): Array[Array[Double]] = {
     val md = MessageDigest.getInstance("MD5")
-    def h60(s: String): Long = {
-      val hex = md.digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-      java.lang.Long.parseLong(hex.substring(0, 15), 16)
-    }
-    Array.tabulate(planes, dims)((p, d) => ((h60(s"hp:$p:$d") % 2001) - 1000) / 1000.0)
+    Array.tabulate(planes, dims)((p, d) => ((hash60Local(md, s"hp:$p:$d") % 2001) - 1000) / 1000.0)
   }
 
   /** Scale-adaptive LSH plane count: the smallest p in [minPlanes,
@@ -121,13 +119,8 @@ object Similarity {
     val c = candidates.withColumn("nrm", l2norm(col("vec")))
     val joined = c.crossJoin(broadcast(q))
       .filter(col("vec_id") =!= col("qid"))
-      .withColumn("cos_r",
-        round(cosinePre(call_function("graft_dot", col("qvec"), col("vec")), col("qnrm"), col("nrm")), 6))
-    val w = Window.partitionBy(col("qid")).orderBy(col("cos_r").desc, col("vec_id"))
-    joined
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("rank"), col("vec_id").as("neighbor"), col("cos_r"))
+      .withColumn("cos_r", exactCosine(col("qvec"), col("vec"), col("qnrm"), col("nrm")))
+    topKNeighbors(joined, k)
   }
 
   /** Per-vector int8 quantization scale: max(|x|)/127 (floored away from
@@ -181,23 +174,14 @@ object Similarity {
         col("qs") * col("cs") *
           call_function("graft_dot_i8", col("qq"), col("cq")) /
           (col("qnrm") * col("nrm")))
-    val wa = Window.partitionBy(col("qid")).orderBy(col("approx_cos").desc, col("vec_id"))
-    val cands = scored
-      .withColumn("__r", row_number().over(wa))
-      .filter(col("__r") <= k * oversample)
+    val cands = firstK(scored, "qid", Seq(col("approx_cos").desc, col("vec_id")), k * oversample, "__r")
       .select("qid", "vec_id")
     val rerank = cands
       .join(candidates, "vec_id")
       .join(broadcast(queries), "qid")
       .withColumn("cos_r",
-        round(cosinePre(
-          call_function("graft_dot", col("qvec"), col("vec")),
-          l2norm(col("qvec")), l2norm(col("vec"))), 6))
-    val we = Window.partitionBy(col("qid")).orderBy(col("cos_r").desc, col("vec_id"))
-    rerank
-      .withColumn("rank", row_number().over(we))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("rank"), col("vec_id").as("neighbor"), col("cos_r"))
+        exactCosine(col("qvec"), col("vec"), l2norm(col("qvec")), l2norm(col("vec"))))
+    topKNeighbors(rerank, k)
   }
 
   /** LSH-bucketed top-k with multi-probe: each query scans its own bucket
@@ -212,21 +196,14 @@ object Similarity {
       planes: Array[Array[Double]],
       k: Int): DataFrame = {
     GraftExtensions.ensureRegistered(candidates.sparkSession)
-    val masks = 0 +: planes.indices.map(1 << _)
     val qb = queries.withColumn("bucket", lshBucket(col("qvec"), planes))
-      .withColumn("bucket",
-        explode(array(masks.map(m => col("bucket").bitwiseXOR(lit(m))): _*)))
+      .withColumn("bucket", probes(col("bucket"), planes.length))
     val cb = candidates.withColumn("bucket", lshBucket(col("vec"), planes))
       .withColumn("nrm", l2norm(col("vec")))
     val joined = cb.join(broadcast(qb.withColumn("qnrm", l2norm(col("qvec")))), "bucket")
       .filter(col("vec_id") =!= col("qid"))
-      .withColumn("cos_r",
-        round(cosinePre(call_function("graft_dot", col("qvec"), col("vec")), col("qnrm"), col("nrm")), 6))
-    val w = Window.partitionBy(col("qid")).orderBy(col("cos_r").desc, col("vec_id"))
-    joined
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("rank"), col("vec_id").as("neighbor"), col("cos_r"))
+      .withColumn("cos_r", exactCosine(col("qvec"), col("vec"), col("qnrm"), col("nrm")))
+    topKNeighbors(joined, k)
   }
 
   /** IVF-style bucketed ANN (the coarse-quantizer scale path): every
@@ -251,12 +228,8 @@ object Similarity {
     GraftExtensions.ensureRegistered(candidates.sparkSession)
     def cells(df: DataFrame, vec: String, id: String, keep: Int): DataFrame = {
       val scored = df.crossJoin(broadcast(centroids))
-        .withColumn("ccos",
-          round(cosinePre(call_function("graft_dot", col(vec), col("cvec")),
-            l2norm(col(vec)), l2norm(col("cvec"))), 6))
-      val w = Window.partitionBy(col(id)).orderBy(col("ccos").desc, col("cid"))
-      scored.withColumn("crank", row_number().over(w))
-        .filter(col("crank") <= keep)
+        .withColumn("ccos", exactCosine(col(vec), col("cvec"), l2norm(col(vec)), l2norm(col("cvec"))))
+      firstK(scored, id, Seq(col("ccos").desc, col("cid")), keep, "crank")
         .drop("cvec", "ccos", "crank")
     }
     val cCells = cells(candidates, "vec", "vec_id", keep = 1)
@@ -267,13 +240,8 @@ object Similarity {
       .withColumn("qnrm", l2norm(col("qvec")))
     val joined = cCells.join(broadcast(qCells), "cell")
       .filter(col("vec_id") =!= col("qid"))
-      .withColumn("cos_r",
-        round(cosinePre(call_function("graft_dot", col("qvec"), col("vec")), col("qnrm"), col("nrm")), 6))
-    val w = Window.partitionBy(col("qid")).orderBy(col("cos_r").desc, col("vec_id"))
-    joined
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("rank"), col("vec_id").as("neighbor"), col("cos_r"))
+      .withColumn("cos_r", exactCosine(col("qvec"), col("vec"), col("qnrm"), col("nrm")))
+    topKNeighbors(joined, k)
   }
 
   /** All near-duplicate pairs (a<b) by cosine, with precomputed norms so
@@ -314,8 +282,7 @@ object Similarity {
     val b = v.select(col(idCol).as("b"), col(vecCol).as("vb"), col("nrm").as("nb"))
     a.crossJoin(b)
       .filter(col("a") < col("b"))
-      .select(col("a"), col("b"),
-        round(cosinePre(call_function("graft_dot", col("va"), col("vb")), col("na"), col("nb")), 6).as("cos_r"))
+      .select(col("a"), col("b"), exactCosine(col("va"), col("vb"), col("na"), col("nb")).as("cos_r"))
   }
 
   /** Candidate-pruned near-dup pairs — the scale path of [[cosinePairs]].
@@ -331,7 +298,10 @@ object Similarity {
     * ids only (no vectors travel through the candidate join), distinct on
     * (a,b), then two id-equi joins to re-attach vectors+norms. No cross
     * join anywhere — candidate volume is sum over buckets of |bucket|²
-    * instead of n².
+    * instead of n². Pass `hashReattach` =
+    * [[reattachPastBroadcast]] for a vector table past broadcast size (q96
+    * does, with the n it already counts for [[adaptivePlanes]]); see
+    * [[CandidateJoin.reattached]]. The self form of [[crossCosineLsh]].
     */
   def cosinePairsLsh(
       vectors: DataFrame,
@@ -340,63 +310,23 @@ object Similarity {
       planes: Array[Array[Double]],
       hashReattach: Boolean = false): DataFrame = {
     GraftExtensions.ensureRegistered(vectors.sparkSession)
-    // The bucketed projection feeds four plan branches (probes, bucket
-    // partners, two vector re-attaches). It is NOT persisted: each branch
-    // recomputes a narrow scan + per-row arithmetic, which parallelizes
-    // and costs no memory — at corpus scale the projection is corpus-
-    // sized and caching it would either evict or spill, and a long-lived
-    // session calling this repeatedly would accumulate cached blocks the
-    // lazy result can never safely release.
-    val v = vectors.select(
-      col(idCol).as("__id"), col(vecCol).as("__v"),
-      l2norm(col(vecCol)).as("__nrm"),
-      lshBucket(col(vecCol), planes).as("__bucket"))
-    val masks = 0 +: planes.indices.map(1 << _)
-    val probes = v.select(col("__id").as("a"),
-      explode(array(masks.map(m => col("__bucket").bitwiseXOR(lit(m))): _*)).as("__bucket"))
-    val others = v.select(col("__id").as("b"), col("__bucket"))
-    // Re-attach strategy (r14): past the broadcast threshold the vector
-    // table sides must be SHUFFLED HASH joins, not the sort-merge
-    // default — SMJ SORTS the candidate frame (the big side, (p+1)·
-    // occupancy·n rows) on each id once per re-attach, and the 30×/100×
-    // probes measured exactly that: time exponent 1.16/1.24 against a
-    // candidate-count exponent ~1.0–1.17; the hints cut the 30× wall
-    // 57.6 s → 16.6 s and the 100× wall 314 s → 72.6 s. But a
-    // shuffle_hash HINT also overrides the broadcast choice Spark would
-    // make below the threshold (measured +1 s at sf0.1's 2000 vectors),
-    // so the caller gates it: pass hashReattach = true when the vector
-    // table is past broadcast size (q96 uses n > 32768 — it already
-    // counts n for adaptivePlanes). The per-partition hash build is a
-    // slice of the vector table, bounded at any corpus size.
-    def side(d: DataFrame): DataFrame = if (hashReattach) d.hint("shuffle_hash") else d
-    val cand = probes.join(side(others), "__bucket")
-      .filter(col("a") < col("b"))
-      .select("a", "b")
-      .distinct()
-    cand
-      .join(side(v.select(col("__id").as("a"), col("__v").as("va"), col("__nrm").as("na"))), "a")
-      .join(side(v.select(col("__id").as("b"), col("__v").as("vb"), col("__nrm").as("nb"))), "b")
-      .select(col("a"), col("b"),
-        round(cosinePre(call_function("graft_dot", col("va"), col("vb")), col("na"), col("nb")), 6).as("cos_r"))
+    val v = vectors.select(col(idCol).as("__id"), col(vecCol).as("__v"))
+    lshCosinePairs(v, "__id", v, "__id", self = true, planes, hashReattach)
   }
 
   /** Cross-corpus SEMANTIC decontamination candidates — the embedding
-    * tier next to the n-gram tiers (Dedup.decontaminate's recall path /
-    * ngramDecontaminate's precision path): for each LEFT (benchmark /
-    * eval) vector, the RIGHT (train) vectors sharing an LSH bucket under
-    * multi-probe (Hamming-1 neighbors probed from the left side), scored
-    * with the exact cosine. A train document paraphrasing an eval item
-    * shares no 13-gram but sits at high cosine — this is the join that
-    * catches it.
+    * tier next to the n-gram tiers ([[Dedup.lshCrossCandidates]]' recall
+    * path / [[Dedup.ngramContamination]]'s precision path): for each LEFT
+    * (benchmark / eval) vector, the RIGHT (train) vectors sharing an LSH
+    * bucket under multi-probe (Hamming-1 neighbors probed from the left
+    * side), scored with the exact cosine. A train document paraphrasing
+    * an eval item shares no 13-gram but sits at high cosine — this is the
+    * join that catches it.
     *
-    * Plan shape mirrors [[cosinePairsLsh]]: both sides bucket in their
-    * scan stage, candidates meet on a bucket equi-join over IDS ONLY,
-    * vectors re-attach by id equi-join, exact cosine last. The
-    * benchmark side is small by nature, so its probe fan-out
+    * Plan shape and exactness are [[cosinePairsLsh]]'s without the a < b
+    * rule. The benchmark side is small by nature, so its probe fan-out
     * (planes + 1 buckets per eval vector) broadcasts; candidate volume
-    * tracks true bucket collisions, never |eval| × |train|. Any pair
-    * emitted carries the identical cos_r the exact cross join would —
-    * bucketing affects recall of DISSIMILAR pairs only.
+    * tracks true bucket collisions, never |eval| × |train|.
     * Output: (leftId, rightId, cos_r), one row per candidate pair.
     */
   def crossCosineLsh(
@@ -411,35 +341,37 @@ object Similarity {
     require(Seq(leftId, leftVec, rightId, rightVec).distinct.size == 4,
       "leftId/leftVec/rightId/rightVec must be four distinct column names")
     GraftExtensions.ensureRegistered(left.sparkSession)
-    // Unpersisted on purpose — same recompute-over-cache reasoning as
-    // [[cosinePairsLsh]]: the train side is corpus-sized (uncacheable at
-    // target scale) and a lazy result cannot release a cache it still
-    // depends on, so persisting here leaked blocks per call.
-    val l = left.select(
-      col(leftId), col(leftVec).as("__lv"),
-      l2norm(col(leftVec)).as("__ln"),
-      lshBucket(col(leftVec), planes).as("__bucket"))
-    val r = right.select(
-      col(rightId), col(rightVec).as("__rv"),
-      l2norm(col(rightVec)).as("__rn"),
-      lshBucket(col(rightVec), planes).as("__bucket"))
-    val masks = 0 +: planes.indices.map(1 << _)
-    val probes = l.select(col(leftId),
-      explode(array(masks.map(m => col("__bucket").bitwiseXOR(lit(m))): _*)).as("__bucket"))
-    // same r14 re-attach posture as cosinePairsLsh: when the caller says
-    // the train side is past broadcast size, the vector sides hash, so
-    // the candidate frame streams unsorted instead of being SMJ-sorted
-    // once per re-attach; below it the broadcast default stays
-    def side(d: DataFrame): DataFrame = if (hashReattach) d.hint("shuffle_hash") else d
-    val cand = probes.join(side(r.select(col(rightId), col("__bucket"))), "__bucket")
-      .select(leftId, rightId)
-      .distinct()
-    cand
-      .join(side(l.select(col(leftId), col("__lv"), col("__ln"))), leftId)
-      .join(side(r.select(col(rightId), col("__rv"), col("__rn"))), rightId)
-      .select(col(leftId), col(rightId),
-        round(cosinePre(call_function("graft_dot", col("__lv"), col("__rv")),
-          col("__ln"), col("__rn")), 6).as("cos_r"))
+    lshCosinePairs(left.select(col(leftId).as("a"), col(leftVec).as("__v")), "a",
+        right.select(col(rightId).as("b"), col(rightVec).as("__v")), "b", self = false,
+        planes, hashReattach)
+      .select(col("a").as(leftId), col("b").as(rightId), col("cos_r"))
+  }
+
+  /** The LSH cosine pair join of `left` (leftId, __v) and `right`
+    * (rightId, __v), the same frame for a self join; (a, b, cos_r).
+    *
+    * The bucketed projection feeds four plan branches (probes, bucket
+    * partners, two vector re-attaches) and is NOT persisted: a branch
+    * recomputes a narrow scan, while a corpus-sized cache would evict or
+    * spill, and a lazy result cannot release a cache it still depends on.
+    */
+  private def lshCosinePairs(left: DataFrame, leftId: String, right: DataFrame, rightId: String,
+      self: Boolean, planes: Array[Array[Double]], hashReattach: Boolean): DataFrame = {
+    def bucketed(d: DataFrame, id: String): DataFrame = d.select(
+      col(id), col("__v"),
+      l2norm(col("__v")).as("__nrm"),
+      lshBucket(col("__v"), planes).as("__bucket"))
+    val l = bucketed(left, leftId)
+    val r = if (self) l else bucketed(right, rightId)
+    CandidateJoin
+      .reattached(
+        l.select(col(leftId).as("a"), probes(col("__bucket"), planes.length).as("__bucket")),
+        r.select(col(rightId).as("b"), col("__bucket")),
+        Seq("__bucket"), self,
+        l.select(col(leftId).as("a"), col("__v").as("va"), col("__nrm").as("na")),
+        r.select(col(rightId).as("b"), col("__v").as("vb"), col("__nrm").as("nb")),
+        hashReattach)
+      .select(col("a"), col("b"), exactCosine(col("va"), col("vb"), col("na"), col("nb")).as("cos_r"))
   }
 
   // ---------------------------------------------------------------------

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.{Q, Tables}
 import graft.functions.GraftFunctions._
-import graft.operators.TextAnalysis
+import graft.operators.{CandidateJoin, TextAnalysis}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -236,19 +236,8 @@ object SketchQueries {
           .filter(col("lang") === "en" && length(col("text")) > 0)
           .select(col("doc_id"),
             graft.multimodal.Multimodal.dhash56(col("text")).as("h"))
-        val bands = hashed.select(col("doc_id"), col("h"),
-          explode(array((0 until 8).map(i =>
-            struct(lit(i).as("bi"),
-              shiftright(col("h"), 7 * i).bitwiseAND(lit(127L)).as("bv"))): _*)).as("bd"))
-          .select(col("doc_id"), col("h"), col("bd.bi"), col("bd.bv"))
-        val cand = bands.as("x").join(bands.as("y"),
-            col("x.bi") === col("y.bi") && col("x.bv") === col("y.bv") &&
-              col("x.doc_id") < col("y.doc_id"))
-          .select(col("x.doc_id").as("a"), col("x.h").as("ha"),
-            col("y.doc_id").as("b"), col("y.h").as("hb"))
-          .distinct()
-        cand
-          .withColumn("hamming", bit_count(col("ha").bitwiseXOR(col("hb"))))
+        CandidateJoin.sketchPairs(hashed, "doc_id", "h", bands = 8, width = 7)
+          .withColumn("hamming", CandidateJoin.hamming(col("ha"), col("hb")))
           .filter(col("hamming") <= 4)
           .select(col("a"), col("b"), col("hamming"))
           .orderBy("a", "b")

@@ -1,7 +1,6 @@
 package graft
 
 import graft.functions.GraftFunctions._
-import graft.plans.GraftExtensions
 import org.apache.spark.sql.functions._
 
 /** Native DotProduct expression: agreement with the HOF and UDF
@@ -17,7 +16,6 @@ class DotProductSpec extends SparkSpec {
     .toDF("id", "a", "b")
 
   test("native graft_dot equals HOF and UDF folds bit-exactly") {
-    GraftExtensions.ensureRegistered(spark)
     val out = vecs.select(
       call_function("graft_dot", col("a"), col("b")).as("native"),
       dot(col("a"), col("b")).as("hof"),
@@ -32,7 +30,6 @@ class DotProductSpec extends SparkSpec {
   }
 
   test("graft_dot callable from SQL after registration") {
-    GraftExtensions.ensureRegistered(spark)
     vecs.createOrReplaceTempView("dot_vecs")
     val r = spark.sql("SELECT id, graft_dot(a, b) AS d FROM dot_vecs ORDER BY id")
       .as[(Long, Double)].collect()
@@ -40,7 +37,6 @@ class DotProductSpec extends SparkSpec {
   }
 
   test("graft_dot stays inside whole-stage codegen") {
-    GraftExtensions.ensureRegistered(spark)
     // a local relation constant-folds to LocalTableScan, so check the plan
     // over a real parquet scan
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
@@ -54,7 +50,6 @@ class DotProductSpec extends SparkSpec {
   }
 
   test("optimizer rule rewrites the HOF aggregate/zip_with dot to native") {
-    GraftExtensions.ensureRegistered(spark)
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
       .select(col("vec_id"), asDouble(col("embedding")).as("v"))
     val hof = emb.select(col("vec_id"), dot(col("v"), col("v")).as("d"))
@@ -70,7 +65,6 @@ class DotProductSpec extends SparkSpec {
   }
 
   test("graft_dot rejects non-double-array inputs at analysis") {
-    GraftExtensions.ensureRegistered(spark)
     val bad = Seq((1, "x")).toDF("id", "s")
     val e = intercept[Exception] {
       bad.select(call_function("graft_dot", col("s"), col("s"))).collect()
@@ -79,7 +73,6 @@ class DotProductSpec extends SparkSpec {
   }
 
   test("graft_dot_i8 matches a reference int dot and stays in codegen") {
-    GraftExtensions.ensureRegistered(spark)
     // Seq[Byte], not Array[Byte] — the latter encodes as `binary`
     val rows = Seq(
       (Seq[Byte](1, -2, 3, 127), Seq[Byte](4, 5, -6, 127)),

@@ -12,8 +12,6 @@ import org.apache.spark.sql.functions._
 class EagerAggSpec extends SparkSpec {
   import spark.implicits._
 
-  graft.plans.GraftExtensions.ensureRegistered(spark)
-
   // d = exact decimal twin of x; double sums are excluded from the push
   // by policy (re-associated IEEE-754 addition), so the push tests
   // aggregate d and the guard tests prove x does NOT push.

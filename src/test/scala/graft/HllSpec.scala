@@ -1,7 +1,6 @@
 package graft
 
 import graft.functions.GraftFunctions.hash60
-import graft.plans.GraftExtensions
 import org.apache.spark.sql.functions._
 
 /** HyperLogLog TypedImperativeAggregate: register exactness vs a driver
@@ -12,7 +11,6 @@ class HllSpec extends SparkSpec {
   import spark.implicits._
 
   private def hllRegs(ids: org.apache.spark.sql.DataFrame): Array[Int] = {
-    GraftExtensions.ensureRegistered(spark)
     ids.agg(call_function("graft_hll", hash60("hll", col("id"))).as("regs"))
       .head().getSeq[Int](0).toArray
   }

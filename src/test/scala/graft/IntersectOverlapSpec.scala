@@ -1,6 +1,5 @@
 package graft
 
-import graft.plans.GraftExtensions
 import org.apache.spark.sql.functions._
 
 /** RewriteIntersectOverlap optimizer rule: size(array_intersect) > 0
@@ -19,7 +18,6 @@ class IntersectOverlapSpec extends SparkSpec {
       split(col("source"), "_").as("y"))
 
   test("rule rewrites the intersection-emptiness idiom to arrays_overlap") {
-    GraftExtensions.ensureRegistered(spark)
     val df = tokensDf.select(expr("size(array_intersect(x, y)) > 0").as("hit"))
     val optimized = df.queryExecution.optimizedPlan.toString
     assert(optimized.contains("arrays_overlap"), s"not rewritten:\n$optimized")
@@ -27,7 +25,6 @@ class IntersectOverlapSpec extends SparkSpec {
   }
 
   test("rewritten predicate returns the same answers") {
-    GraftExtensions.ensureRegistered(spark)
     val viaIdiom = tokensDf
       .select(col("doc_id"), expr("size(array_intersect(x, y)) > 0").as("hit"))
       .as[(Long, Boolean)].collect().sortBy(_._1).toSeq
@@ -39,7 +36,6 @@ class IntersectOverlapSpec extends SparkSpec {
   }
 
   test("null-admitting element arrays are NOT rewritten (semantics differ)") {
-    GraftExtensions.ensureRegistered(spark)
     // transform(.., when(..)) has containsNull=true elements
     val df = tokensDf
       .select(

@@ -269,21 +269,60 @@ class OperatorsSpec extends SparkSpec {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       val v = Tables.embeddings(spark, "/root/testdata/sf0.001")
         .select(col("vec_id"), asDouble(col("embedding")).as("vec"))
-      val plan = Similarity
-        .cosinePairsLsh(v, "vec_id", "vec", Similarity.hyperplanes(4, 64),
-          hashReattach = true)
-        .queryExecution.executedPlan.toString
-      assert(!plan.contains("SortMergeJoin"),
-        s"re-attach fell back to sort-merge past the broadcast threshold:\n$plan")
-      assert(plan.contains("ShuffledHashJoin"), s"expected hash joins:\n$plan")
+      val planes = Similarity.hyperplanes(4, 64)
+      // the self form and the cross form (q152's eval/train split) share
+      // one re-attach rule, so both are pinned
+      def plans(hashReattach: Boolean): Seq[(String, String)] = Seq(
+        "cosinePairsLsh" -> Similarity
+          .cosinePairsLsh(v, "vec_id", "vec", planes, hashReattach = hashReattach),
+        "crossCosineLsh" -> Similarity.crossCosineLsh(
+          v.filter(col("vec_id") < 64).select(col("vec_id").as("eval_id"), col("vec").as("evec")),
+          "eval_id", "evec",
+          v.filter(col("vec_id") >= 64).select(col("vec_id").as("train_id"), col("vec").as("tvec")),
+          "train_id", "tvec", planes, hashReattach = hashReattach)
+      ).map { case (op, df) => op -> df.queryExecution.executedPlan.toString }
+      plans(hashReattach = true).foreach { case (op, plan) =>
+        assert(!plan.contains("SortMergeJoin"),
+          s"$op: re-attach fell back to sort-merge past the broadcast threshold:\n$plan")
+        assert(plan.contains("ShuffledHashJoin"), s"$op: expected hash joins:\n$plan")
+      }
       // and WITHOUT the flag the broadcast default is untouched at small n
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-      val planSmall = Similarity
-        .cosinePairsLsh(v, "vec_id", "vec", Similarity.hyperplanes(4, 64))
-        .queryExecution.executedPlan.toString
-      assert(planSmall.contains("BroadcastHashJoin"),
-        s"small-n path lost its broadcasts:\n$planSmall")
+      plans(hashReattach = false).foreach { case (op, planSmall) =>
+        assert(planSmall.contains("BroadcastHashJoin"),
+          s"$op: small-n path lost its broadcasts:\n$planSmall")
+      }
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+  }
+
+  test("candidate joins: the self form equals the cross form on one frame restricted to a < b") {
+    def sameRows(self: org.apache.spark.sql.DataFrame, cross: org.apache.spark.sql.DataFrame): Unit = {
+      val kept = cross.filter(col("a") < col("b"))
+      assert(self.dtypes.toSeq === kept.dtypes.toSeq)
+      val rows = self.collect().map(_.toSeq).sortBy(_.mkString(","))
+      assert(rows.nonEmpty)
+      assert(rows === kept.collect().map(_.toSeq).sortBy(_.mkString(",")))
+    }
+    val docs = Tables.documents(spark, "/root/testdata/sf0.001")
+    val bands = Dedup.lshBands(Dedup.minhashSignatures(
+      Dedup.shingleIndex(docs, "doc_id", "text", 3), "doc_id", 12), "doc_id", 4, 3)
+    sameRows(Dedup.lshCandidates(bands, "doc_id"), Dedup.lshCrossCandidates(bands, bands, "doc_id"))
+    val v = Tables.embeddings(spark, "/root/testdata/sf0.001")
+      .select(col("vec_id"), asDouble(col("embedding")).as("vec"))
+    val planes = Similarity.hyperplanes(4, 64)
+    val cross = Similarity.crossCosineLsh(
+        v.select(col("vec_id").as("l_id"), col("vec").as("l_vec")), "l_id", "l_vec",
+        v.select(col("vec_id").as("r_id"), col("vec").as("r_vec")), "r_id", "r_vec", planes)
+      .select(col("l_id").as("a"), col("r_id").as("b"), col("cos_r"))
+    sameRows(Similarity.cosinePairsLsh(v, "vec_id", "vec", planes), cross)
+  }
+
+  test("minhash and hyperplane constants are pinned to their md5 derivation") {
+    // the registry oracles inline constants computed by these same
+    // functions, so only literal values catch a drift in the md5 helper
+    assert(Dedup.minhashParams(3) === Seq(
+      (1253933828L, 734533494L), (88079242L, 456301559L), (1787710480L, 199894994L)))
+    assert(Similarity.hyperplanes(2, 4).head.toSeq === Seq(0.12, -0.567, -0.777, -0.436))
   }
 
   test("reattachPastBroadcast derives from the live config, not a row-count constant") {

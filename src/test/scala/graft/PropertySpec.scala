@@ -71,7 +71,6 @@ class PropertySpec extends SparkSpec {
   }
 
   test("graft_capped_collect: exact sorted postings below cap, over-cap groups detectable") {
-    graft.plans.GraftExtensions.ensureRegistered(spark)
     // groups of varying size around the cap; repeated over many
     // partitions so partial-aggregation merges are exercised
     val cap = 8
@@ -115,7 +114,6 @@ class PropertySpec extends SparkSpec {
   }
 
   test("t-digest quantiles track exact percentiles across partial-agg merges") {
-    graft.plans.GraftExtensions.ensureRegistered(spark)
     // heavy-tailed deterministic data over many partitions so map-side
     // digests must merge; exact values from Spark's percentile()
     val df = (1 to 60000).map { i =>
@@ -205,7 +203,6 @@ class PropertySpec extends SparkSpec {
   }
 
   test("graft_tdigest accepts SQL-text decimal and integer percentile literals") {
-    graft.plans.GraftExtensions.ensureRegistered(spark)
     // 0.5 in SQL text parses as a DecimalType literal (Decimal payload,
     // not java.math.BigDecimal); 1 parses as an Int literal. Both must
     // build, and must agree with the lit(double) spelling.

@@ -93,7 +93,6 @@ class SamplingSpec extends SparkSpec {
   }
 
   test("graft_bottom_k accepts string keys and struct payloads (SQL)") {
-    graft.plans.GraftExtensions.ensureRegistered(spark)
     Seq(("bb", 2L, 20L), ("aa", 3L, 30L), ("aa", 1L, 10L), ("cc", 4L, 40L))
       .toDF("s", "id", "n").createOrReplaceTempView("bk_str_in")
     val got = spark.sql(
@@ -105,7 +104,6 @@ class SamplingSpec extends SparkSpec {
   }
 
   test("graft_bottom_k survives the partial-agg serialize path with string keys") {
-    graft.plans.GraftExtensions.ensureRegistered(spark)
     // many partitions force partial buffers through serialize/merge
     val df = spark.range(0, 2000, 1, 16)
       .selectExpr("concat('s', lpad(cast(id % 97 as string), 3, '0')) AS s", "id")
@@ -118,7 +116,6 @@ class SamplingSpec extends SparkSpec {
   }
 
   test("graft_bottom_k int key is accepted at analysis and value-correct") {
-    graft.plans.GraftExtensions.ensureRegistered(spark)
     Seq((3, 30L), (1, 10L), (2, 20L)).toDF("i", "id")
       .createOrReplaceTempView("bk_int_in")
     val got = spark.sql(
@@ -128,7 +125,6 @@ class SamplingSpec extends SparkSpec {
   }
 
   test("graft_bottom_k rejects unorderable keys at analysis") {
-    graft.plans.GraftExtensions.ensureRegistered(spark)
     Seq((1L, 2L)).toDF("a", "b").createOrReplaceTempView("bk_bad_in")
     val e = intercept[Exception] {
       spark.sql("SELECT graft_bottom_k(map(a, b), b, 2) FROM bk_bad_in").collect()
@@ -146,7 +142,6 @@ class SamplingSpec extends SparkSpec {
   }
 
   test("graft_bottom_k is SQL-callable and skips null keys/payloads") {
-    graft.plans.GraftExtensions.ensureRegistered(spark)
     Seq((Some(5L), Some(50L)), (None, Some(60L)), (Some(3L), None),
       (Some(1L), Some(10L)), (Some(2L), Some(20L)))
       .toDF("h", "id").createOrReplaceTempView("bk_in")

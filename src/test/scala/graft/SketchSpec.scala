@@ -15,7 +15,6 @@ class SketchSpec extends SparkSpec {
   import s.implicits._
 
   private def bloomOf(values: Seq[String], bits: Int, k: Int): Array[Long] = {
-    graft.plans.GraftExtensions.ensureRegistered(spark)
     values.toDF("v")
       .agg(call_function("graft_bloom", hash60("t", col("v")), lit(bits), lit(k)))
       .head().getSeq[Long](0).toArray
@@ -45,7 +44,6 @@ class SketchSpec extends SparkSpec {
   }
 
   test("bloom: out-of-domain longs are masked to the hash60 domain, never crash") {
-    graft.plans.GraftExtensions.ensureRegistered(spark)
     // A user feeding e.g. xxhash64 output passes negative longs; the
     // aggregate must mask to the documented 60-bit domain (a no-op for
     // hash60 inputs) instead of probing a negative bit position.
@@ -70,7 +68,6 @@ class SketchSpec extends SparkSpec {
   }
 
   test("bloom: partition-count invariance (partial aggregation path)") {
-    graft.plans.GraftExtensions.ensureRegistered(spark)
     val vals = (1 to 300).map(i => s"p-$i")
     def build(parts: Int) = vals.toDF("v").repartition(parts)
       .agg(call_function("graft_bloom", hash60("t", col("v")), lit(1024), lit(3)))
@@ -98,7 +95,6 @@ class SketchSpec extends SparkSpec {
   }
 
   test("kmv sketch: union-of-sketches equals sketch-of-union and estimator is exact on identical corpora") {
-    graft.plans.GraftExtensions.ensureRegistered(spark)
     val xs = (1 to 1000).map(i => s"tok-$i")
     def sk(vals: Seq[String]) = vals.toDF("t")
       .agg(call_function("graft_bottom_k", hash60("kmv", col("t")), col("t"), lit(64)))

@@ -429,7 +429,6 @@ class StreamingSpec extends SparkSpec {
     // positives) are dropped.
     import graft.functions.GraftFunctions.hash60
     import org.apache.spark.sql.functions.{col, element_at, lit, shiftrightunsigned, typedLit}
-    graft.plans.GraftExtensions.ensureRegistered(spark)
     val eval = Seq("the quick brown fox", "lorem ipsum dolor").toDF("v")
     val words = eval
       .agg(org.apache.spark.sql.functions.call_function("graft_bloom",
