@@ -1,17 +1,13 @@
 package graft.queries
 
-import java.nio.file.{Files, Paths}
-import java.nio.file.attribute.FileTime
-
 import graft.{Q, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.streaming.StreamReplay
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 
 /** Batch-equivalent ORACLE twins for the streaming rows that used to be
   * spec-only (SURVEY.md B33/B36/B37): each query REALLY runs a
   * Structured Streaming job — file source, checkpoint, stateful
-  * operator, Trigger.AvailableNow drain — and returns its sink content,
+  * operator, AvailableNow drain — and returns its sink content,
   * which a deterministic replay makes SQL-expressible over the same
   * parquet `events` table the stream consumed. The point: the driver's
   * DuckDB gate now hash-checks streaming ingest (exactly-once across a
@@ -19,49 +15,16 @@ import org.apache.spark.sql.streaming.{OutputMode, Trigger}
   * streaming dedup (state-backed distinct) — not just the green test
   * suite.
   *
-  * Determinism comes from three levers, each pinned below: the file
-  * replay is split by a pure predicate on `event_id`; processing order
-  * is forced by explicit file modification times + maxFilesPerTrigger=1
-  * (the file source lists by mod time); and every output is
+  * Determinism comes from three levers: the file replay is split by a
+  * pure predicate on a row id (or the event type); processing order is
+  * forced by explicit file modification times + maxFilesPerTrigger=1
+  * (the file source lists by mod time) — both pinned in
+  * [[graft.streaming.StreamReplay]], which also owns the scratch layout,
+  * the state-partition scope and the drains; and every output is
   * batch-boundary-insensitive (distinct sets, final aggregates) so WHICH
   * row of a duplicate group survives cannot leak into the hash.
   */
 object StreamTwinQueries {
-
-  /** Write `df` as exactly ONE flat parquet file `dir/name.parquet`
-    * (the file source does not recurse into non-partition subdirs) with
-    * a forced modification time `seq` seconds into a fixed base — the
-    * file source lists by mod time, so the replay order is the write
-    * order however fast the writes ran. */
-  private def writeReplayFile(df: DataFrame, dir: String, name: String, seq: Int): Unit = {
-    val stage = graft.Q.scratchDir(s"replay_$name")
-    df.coalesce(1).write.mode("overwrite").parquet(stage)
-    val part = Files.list(Paths.get(stage)).filter(_.getFileName.toString.endsWith(".parquet"))
-      .findFirst().orElseThrow(() => new IllegalStateException(s"no parquet part in $stage"))
-    val dest = Paths.get(dir, s"$name.parquet")
-    Files.move(part, dest)
-    Files.setLastModifiedTime(dest, FileTime.fromMillis(1700000000000L + seq * 1000L))
-  }
-
-  private def eventsSchema(s: SparkSession, dir: String) =
-    Tables.events(s, dir).schema
-
-  /** Run `body` with `spark.sql.shuffle.partitions` scoped down to `n`.
-    * A stateful streaming query snapshots its state-store partition count
-    * from the shuffle-partition conf at query START — at the session
-    * default of 32 these few-thousand-row twins checkpoint 32 state
-    * partitions (32 delta files + maintenance) per micro-batch, which is
-    * pure fixed cost. The twins' outputs are exact set/aggregate
-    * semantics, invariant to partitioning; only wall-clock changes. The
-    * previous value is always restored so batch queries keep the
-    * session-wide parallelism.
-    */
-  private def withStreamPartitions[T](s: SparkSession, n: Int)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, n.toString)
-    try body finally s.conf.set(key, prev)
-  }
 
   val qs: Seq[Q] = Seq(
 
@@ -77,24 +40,12 @@ object StreamTwinQueries {
       "q170_stream_restart_ingest",
       (s, dir) => {
         val ev = Tables.events(s, dir)
-        val tmp = graft.Q.scratchDir("stream_restart")
-        val src = s"$tmp/src"; Files.createDirectories(Paths.get(src))
-        val sink = s"$tmp/sink"; val ckpt = s"$tmp/ckpt"
-        def runDrain(): Unit = {
-          val q = s.readStream.schema(eventsSchema(s, dir)).parquet(src)
-            .writeStream.format("parquet")
-            .option("path", sink).option("checkpointLocation", ckpt)
-            .trigger(Trigger.AvailableNow()).outputMode(OutputMode.Append)
-            .start()
-          q.awaitTermination()
-        }
-        writeReplayFile(ev.filter(col("event_id") % 2 === 0), src, "half0", 0)
-        withStreamPartitions(s, 2) {
-          runDrain() // phase 1: consumes half0, commits offsets
-          writeReplayFile(ev.filter(col("event_id") % 2 === 1), src, "half1", 1)
-          runDrain() // phase 2: restart from checkpoint — must read ONLY half1
-        }
-        s.read.parquet(sink)
+        val rp = new StreamReplay(s, "stream_restart")
+        rp.write(StreamReplay.half(ev, "event_id", 0))
+        rp.drainAppend(rp.stream) // phase 1: consumes half 0, commits offsets
+        rp.write(StreamReplay.half(ev, "event_id", 1))
+        rp.drainAppend(rp.stream) // phase 2: restart from checkpoint — must read ONLY half 1
+        rp.sinkRows
           .groupBy("event_type")
           .agg(count(lit(1)).as("cnt"), sum(col("event_id")).as("id_sum"),
             countDistinct(col("event_id")).as("n_distinct"))
@@ -133,8 +84,7 @@ object StreamTwinQueries {
       (s, dir) => {
         import s.implicits._
         val ev = Tables.events(s, dir)
-        val tmp = graft.Q.scratchDir("stream_wm")
-        val src = s"$tmp/src"; Files.createDirectories(Paths.get(src))
+        val rp = new StreamReplay(s, "stream_wm")
         val onTime = ev.filter(col("event_id") % 10 =!= 0)
         val late = ev.filter(col("event_id") % 10 === 0)
         // One agg job for the corpus max ts (column-pruned scan), then
@@ -144,8 +94,8 @@ object StreamTwinQueries {
         val maxTs = ev.agg(max(col("ts"))).head().getTimestamp(0)
         val flushTs = java.sql.Timestamp.from(maxTs.toInstant.plus(java.time.Duration.ofDays(30)))
         val spacer = Seq((maxTs, "__flush")).toDF("ts", "event_type")
-        writeReplayFile(onTime.select("ts", "event_type"), src, "b0_ontime", 0)
-        writeReplayFile(spacer, src, "b1_spacer", 1)
+        rp.write(onTime.select("ts", "event_type"))
+        rp.write(spacer)
         // Late rows and the watermark-advancing flush row share the
         // FINAL micro-batch: the late-data filter uses the watermark
         // committed after the spacer batch (one behind the eviction
@@ -154,28 +104,15 @@ object StreamTwinQueries {
         // of pure fixed cost. The spacer stays load-bearing and separate:
         // it is what moves the on-time watermark into the filter before
         // the late rows arrive.
-        writeReplayFile(
-          late.select("ts", "event_type")
-            .unionAll(Seq((flushTs, "__flush")).toDF("ts", "event_type")),
-          src, "b2_late_flush", 2)
-        val sink = s"$tmp/sink"; val ckpt = s"$tmp/ckpt"
-        withStreamPartitions(s, 2) {
-          val q = s.readStream
-            .schema(onTime.select("ts", "event_type").schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-            .withWatermark("ts", "1 hour")
-            .groupBy(window(col("ts"), "1 day").as("w"), col("event_type"))
-            .agg(count(lit(1)).as("cnt"))
-            .select(date_format(col("w.start"), "yyyy-MM-dd").as("day"),
-              col("event_type"), col("cnt"))
-            .writeStream.format("parquet")
-            .option("path", sink).option("checkpointLocation", ckpt)
-            .trigger(Trigger.AvailableNow()).outputMode(OutputMode.Append)
-            .start()
-          q.awaitTermination()
-        }
-        s.read.parquet(sink)
+        rp.write(late.select("ts", "event_type")
+          .unionAll(Seq((flushTs, "__flush")).toDF("ts", "event_type")))
+        rp.drainAppend(rp.stream
+          .withWatermark("ts", "1 hour")
+          .groupBy(window(col("ts"), "1 day").as("w"), col("event_type"))
+          .agg(count(lit(1)).as("cnt"))
+          .select(date_format(col("w.start"), "yyyy-MM-dd").as("day"),
+            col("event_type"), col("cnt")))
+        rp.sinkRows
           .filter(col("event_type") =!= "__flush")
           .orderBy("day", "event_type")
       },
@@ -207,10 +144,7 @@ object StreamTwinQueries {
     Q(
       "q172_stream_dedup",
       (s, dir) => {
-        val events = Tables.events(s, dir)
-        val ev = events.select("user_id", "event_type")
-        val tmp = graft.Q.scratchDir("stream_dedup")
-        val src = s"$tmp/src"; Files.createDirectories(Paths.get(src))
+        val rp = new StreamReplay(s, "stream_dedup")
         // Two replay files, not four, split by EVENT id (not user id, the
         // old split, under which every dedup-key's duplicates rode in one
         // file): with row-level parity both files carry instances of most
@@ -219,22 +153,11 @@ object StreamTwinQueries {
         // all the cross-batch semantics needs; each extra file was a full
         // micro-batch of fixed cost. The output is a distinct SET —
         // invariant to how the corpus is batched.
-        (0 until 2).foreach { i =>
-          writeReplayFile(events.filter(pmod(col("event_id"), lit(2)) === i)
-            .select("user_id", "event_type"), src, s"part$i", i)
-        }
-        val sink = s"$tmp/sink"; val ckpt = s"$tmp/ckpt"
-        withStreamPartitions(s, 2) {
-          val q = s.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1).parquet(src)
-            .dropDuplicates("user_id", "event_type")
-            .writeStream.format("parquet")
-            .option("path", sink).option("checkpointLocation", ckpt)
-            .trigger(Trigger.AvailableNow()).outputMode(OutputMode.Append)
-            .start()
-          q.awaitTermination()
-        }
-        s.read.parquet(sink)
+        rp.writeHalves(Tables.events(s, dir).select("event_id", "user_id", "event_type"),
+          "event_id")
+        rp.drainAppend(rp.stream.select("user_id", "event_type")
+          .dropDuplicates("user_id", "event_type"))
+        rp.sinkRows
           .groupBy("event_type")
           .agg(count(lit(1)).as("n_users"), sum(col("user_id")).as("uid_sum"))
           .orderBy("event_type")
@@ -261,28 +184,17 @@ object StreamTwinQueries {
     Q(
       "q185_stream_drift_histogram",
       (s, dir) => {
-        val docs = Tables.documents(s, dir).select("doc_id", "n_chars")
-        val tmp = graft.Q.scratchDir("stream_drift")
-        val src = s"$tmp/src"; Files.createDirectories(Paths.get(src))
-        writeReplayFile(docs.filter(col("doc_id") % 2 === 0), src, "snap_a", 0)
-        writeReplayFile(docs.filter(col("doc_id") % 2 === 1), src, "snap_b", 1)
-        val table = s"drift_hist_${driftHistRuns.incrementAndGet()}"
-        withStreamPartitions(s, 2) {
-          val q = s.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1).parquet(src)
-            .withColumn("bin", expr("n_chars div 50"))
-            .withColumn("s1", col("doc_id") % 2 === 0)
-            .groupBy("bin")
-            .agg(
-              sum(when(col("s1"), 1L).otherwise(0L)).as("p"),
-              sum(when(col("s1"), 0L).otherwise(1L)).as("q"))
-            .writeStream.format("memory").queryName(table)
-            .trigger(Trigger.AvailableNow()).outputMode(OutputMode.Complete)
-            .start()
-          q.awaitTermination()
-        }
+        val rp = new StreamReplay(s, "stream_drift")
+        rp.writeHalves(Tables.documents(s, dir).select("doc_id", "n_chars"), "doc_id")
+        val hist = rp.drainComplete(rp.stream
+          .withColumn("bin", expr("n_chars div 50"))
+          .withColumn("s1", col("doc_id") % 2 === 0)
+          .groupBy("bin")
+          .agg(
+            sum(when(col("s1"), 1L).otherwise(0L)).as("p"),
+            sum(when(col("s1"), 0L).otherwise(1L)).as("q")))
         graft.operators.EvalMetrics
-          .ksTestCounts(s.table(table).select(col("bin").as("v"), col("p"), col("q")))
+          .ksTestCounts(hist.select(col("bin").as("v"), col("p"), col("q")))
           .withColumnRenamed("ks_at", "ks_at_bin")
       },
       Some("""
@@ -312,27 +224,16 @@ object StreamTwinQueries {
     Q(
       "q195_stream_tvd",
       (s, dir) => {
-        val docs = Tables.documents(s, dir).select("doc_id", "lang")
-        val tmp = graft.Q.scratchDir("stream_tvd")
-        val src = s"$tmp/src"; Files.createDirectories(Paths.get(src))
-        writeReplayFile(docs.filter(col("doc_id") % 2 === 0), src, "snap_a", 0)
-        writeReplayFile(docs.filter(col("doc_id") % 2 === 1), src, "snap_b", 1)
-        val table = s"tvd_hist_${tvdHistRuns.incrementAndGet()}"
-        withStreamPartitions(s, 2) {
-          val q = s.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1).parquet(src)
-            .withColumn("s1", col("doc_id") % 2 === 0)
-            .groupBy("lang")
-            .agg(
-              sum(when(col("s1"), 1L).otherwise(0L)).as("p"),
-              sum(when(col("s1"), 0L).otherwise(1L)).as("q"))
-            .writeStream.format("memory").queryName(table)
-            .trigger(Trigger.AvailableNow()).outputMode(OutputMode.Complete)
-            .start()
-          q.awaitTermination()
-        }
+        val rp = new StreamReplay(s, "stream_tvd")
+        rp.writeHalves(Tables.documents(s, dir).select("doc_id", "lang"), "doc_id")
+        val hist = rp.drainComplete(rp.stream
+          .withColumn("s1", col("doc_id") % 2 === 0)
+          .groupBy("lang")
+          .agg(
+            sum(when(col("s1"), 1L).otherwise(0L)).as("p"),
+            sum(when(col("s1"), 0L).otherwise(1L)).as("q")))
         graft.operators.EvalMetrics
-          .tvdCounts(s.table(table).select(col("lang").as("v"), col("p"), col("q")))
+          .tvdCounts(hist.select(col("lang").as("v"), col("p"), col("q")))
       },
       Some("""
         WITH t AS (SELECT doc_id % 2 = 0 AS s1, lang AS v FROM documents),
@@ -361,21 +262,10 @@ object StreamTwinQueries {
           substring(floor(col("o_totalprice")).cast("long").cast("string"), 1, 1)
             .cast("long").as("digit"),
           col("o_orderkey"))
-        val tmp = graft.Q.scratchDir("stream_benford")
-        val src = s"$tmp/src"; Files.createDirectories(Paths.get(src))
-        writeReplayFile(ords.filter(col("o_orderkey") % 2 === 0), src, "half_a", 0)
-        writeReplayFile(ords.filter(col("o_orderkey") % 2 === 1), src, "half_b", 1)
-        val table = s"benford_hist_${benfordRuns.incrementAndGet()}"
-        withStreamPartitions(s, 2) {
-          val q = s.readStream.schema(ords.schema)
-            .option("maxFilesPerTrigger", 1).parquet(src)
-            .groupBy("digit").agg(count(lit(1)).as("n_obs"))
-            .writeStream.format("memory").queryName(table)
-            .trigger(Trigger.AvailableNow()).outputMode(OutputMode.Complete)
-            .start()
-          q.awaitTermination()
-        }
-        val digits = s.table(table)
+        val rp = new StreamReplay(s, "stream_benford")
+        rp.writeHalves(ords, "o_orderkey")
+        val digits = rp.drainComplete(
+          rp.stream.groupBy("digit").agg(count(lit(1)).as("n_obs")))
         val tot = digits.agg(sum("n_obs").as("nn"))
         val expected = expr(
           "CASE digit WHEN 1 THEN 301030 WHEN 2 THEN 176091 WHEN 3 THEN 124939 " +
@@ -419,23 +309,13 @@ object StreamTwinQueries {
         val hashed = graft.operators.TableDigest.rowHashes(
           base, Seq("o_orderkey", "o_custkey", "o_orderstatus", "od"))
           .select(col("h"), col("o_orderkey"))
-        val tmp = graft.Q.scratchDir("stream_digest")
-        val src = s"$tmp/src"; Files.createDirectories(Paths.get(src))
-        writeReplayFile(hashed.filter(col("o_orderkey") % 2 === 0), src, "half_a", 0)
-        writeReplayFile(hashed.filter(col("o_orderkey") % 2 === 1), src, "half_b", 1)
-        val table = s"digest_stream_${digestRuns.incrementAndGet()}"
-        withStreamPartitions(s, 2) {
-          val q = s.readStream.schema(hashed.schema)
-            .option("maxFilesPerTrigger", 1).parquet(src)
+        val rp = new StreamReplay(s, "stream_digest")
+        rp.writeHalves(hashed, "o_orderkey")
+        rp.drainComplete(rp.stream
             .agg(count(lit(1)).as("n_rows"),
               expr("bit_xor(h)").as("xor_digest"),
-              sum(col("h") % 1000003L).as("modsum_digest"))
-            .writeStream.format("memory").queryName(table)
-            .trigger(Trigger.AvailableNow()).outputMode(OutputMode.Complete)
-            .start()
-          q.awaitTermination()
-        }
-        s.table(table).select(lit("replica_a").as("label"), col("n_rows"),
+              sum(col("h") % 1000003L).as("modsum_digest")))
+          .select(lit("replica_a").as("label"), col("n_rows"),
           col("xor_digest"), col("modsum_digest"))
       },
       Some("""
@@ -465,26 +345,16 @@ object StreamTwinQueries {
         val tok = Tables.documents(s, dir)
           .select(col("doc_id"),
             explode(graft.functions.GraftFunctions.tokens(col("text"))).as("t"))
-        val tmp = graft.Q.scratchDir("stream_countmin")
-        val src = s"$tmp/src"; Files.createDirectories(Paths.get(src))
-        writeReplayFile(tok.filter(col("doc_id") % 2 === 0).select("t"), src, "half_a", 0)
-        writeReplayFile(tok.filter(col("doc_id") % 2 === 1).select("t"), src, "half_b", 1)
-        val table = s"countmin_stream_${countMinRuns.incrementAndGet()}"
-        withStreamPartitions(s, 2) {
-          val q = s.readStream.schema(tok.select("t").schema)
-            .option("maxFilesPerTrigger", 1).parquet(src)
-            .select(explode(graft.operators.CountMin.coordArray(col("t"), 4, 512)).as("e"))
-            .groupBy(col("e.j").as("j"), col("e.bucket").as("bucket"))
-            .agg(count(lit(1)).as("c"))
-            .writeStream.format("memory").queryName(table)
-            .trigger(Trigger.AvailableNow()).outputMode(OutputMode.Complete)
-            .start()
-          q.awaitTermination()
-        }
+        val rp = new StreamReplay(s, "stream_countmin")
+        rp.writeHalves(tok, "doc_id")
+        val sketch = rp.drainComplete(rp.stream
+          .select(explode(graft.operators.CountMin.coordArray(col("t"), 4, 512)).as("e"))
+          .groupBy(col("e.j").as("j"), col("e.bucket").as("bucket"))
+          .agg(count(lit(1)).as("c")))
         val probes = tok.groupBy("t").agg(count(lit(1)).as("exact_n"))
           .orderBy(col("exact_n").desc, col("t")).limit(8)
         probes
-          .join(graft.operators.CountMin.estimate(s.table(table), probes, "t", 4, 512),
+          .join(graft.operators.CountMin.estimate(sketch, probes, "t", 4, 512),
             col("t") === col("key"))
           .select(col("t").as("token"), col("exact_n"), col("est"),
             (col("est") - col("exact_n")).as("overcount"))
@@ -518,25 +388,15 @@ object StreamTwinQueries {
         val ev = Tables.events(s, dir)
           .select(col("event_id"), (col("user_id") % 2 === 0).as("s1"),
             col("event_type"))
-        val tmp = graft.Q.scratchDir("stream_jsd")
-        val src = s"$tmp/src"; Files.createDirectories(Paths.get(src))
-        writeReplayFile(ev.filter(col("event_id") % 2 === 0), src, "half_a", 0)
-        writeReplayFile(ev.filter(col("event_id") % 2 === 1), src, "half_b", 1)
-        val table = s"jsd_hist_${jsdHistRuns.incrementAndGet()}"
-        withStreamPartitions(s, 2) {
-          val q = s.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1).parquet(src)
-            .groupBy("event_type")
-            .agg(
-              sum(when(col("s1"), 1L).otherwise(0L)).as("p"),
-              sum(when(col("s1"), 0L).otherwise(1L)).as("q"))
-            .writeStream.format("memory").queryName(table)
-            .trigger(Trigger.AvailableNow()).outputMode(OutputMode.Complete)
-            .start()
-          q.awaitTermination()
-        }
+        val rp = new StreamReplay(s, "stream_jsd")
+        rp.writeHalves(ev, "event_id")
+        val hist = rp.drainComplete(rp.stream
+          .groupBy("event_type")
+          .agg(
+            sum(when(col("s1"), 1L).otherwise(0L)).as("p"),
+            sum(when(col("s1"), 0L).otherwise(1L)).as("q")))
         graft.operators.EvalMetrics.jsCounts(
-          s.table(table).select(col("event_type").as("v"), col("p"), col("q")))
+          hist.select(col("event_type").as("v"), col("p"), col("q")))
       },
       Some("""
         WITH t AS (SELECT user_id % 2 = 0 AS s1, event_type AS v FROM events),
@@ -576,36 +436,26 @@ object StreamTwinQueries {
       "q272_stream_stream_join",
       (s, dir) => {
         val ev = Tables.events(s, dir)
-        val tmp = graft.Q.scratchDir("stream_ssj")
-        val src = s"$tmp/src"; Files.createDirectories(Paths.get(src))
+        val rp = new StreamReplay(s, "stream_ssj")
         val pick = ev.select(col("ts"), col("event_type"), col("event_id"), col("user_id"))
         val views = pick.filter(col("event_type") === "view")
         val purchases = pick.filter(col("event_type") === "purchase")
-        writeReplayFile(views, src, "b0_views", 0)
-        writeReplayFile(purchases, src, "b1_purchases", 1)
-        val sink = s"$tmp/sink"; val ckpt = s"$tmp/ckpt"
-        withStreamPartitions(s, 2) {
-          def side(tpe: String, idAs: String, tsAs: String, userAs: String) =
-            s.readStream.schema(pick.schema)
-              .option("maxFilesPerTrigger", 1).parquet(src)
-              .filter(col("event_type") === tpe)
-              .select(col("ts").as(tsAs), col("event_id").as(idAs),
-                col("user_id").as(userAs))
-              .withWatermark(tsAs, "1 hour")
-          val a = side("view", "a_id", "ats", "a_user")
-          val b = side("purchase", "b_id", "bts", "b_user")
-          val q = a
-            .join(b, expr(
-              "a_user = b_user AND bts >= ats AND bts <= ats + interval 1 day"))
-            .selectExpr("a_id", "b_id",
-              "(unix_micros(bts) - unix_micros(ats)) div 60000000 AS lag_min")
-            .writeStream.format("parquet")
-            .option("path", sink).option("checkpointLocation", ckpt)
-            .trigger(Trigger.AvailableNow()).outputMode(OutputMode.Append)
-            .start()
-          q.awaitTermination()
-        }
-        s.read.parquet(sink).orderBy("a_id", "b_id")
+        rp.write(views)
+        rp.write(purchases)
+        def side(tpe: String, idAs: String, tsAs: String, userAs: String) =
+          rp.stream
+            .filter(col("event_type") === tpe)
+            .select(col("ts").as(tsAs), col("event_id").as(idAs),
+              col("user_id").as(userAs))
+            .withWatermark(tsAs, "1 hour")
+        val a = side("view", "a_id", "ats", "a_user")
+        val b = side("purchase", "b_id", "bts", "b_user")
+        rp.drainAppend(a
+          .join(b, expr(
+            "a_user = b_user AND bts >= ats AND bts <= ats + interval 1 day"))
+          .selectExpr("a_id", "b_id",
+            "(unix_micros(bts) - unix_micros(ats)) div 60000000 AS lag_min"))
+        rp.sinkRows.orderBy("a_id", "b_id")
       },
       Some("""
         WITH a AS (SELECT event_id AS a_id, user_id, CAST(ts AS TIMESTAMP) AS ats
@@ -618,14 +468,4 @@ object StreamTwinQueries {
         WHERE b.bts >= a.ats AND b.bts <= a.ats + INTERVAL 1 DAY
         ORDER BY a_id, b_id"""))
   )
-
-  /** Memory-sink table names must be unique per drain within a session
-    * (Bench's min-of-2, the registry sweeps): a monotonic suffix, not a
-    * timestamp, so nothing data-affecting varies between runs. */
-  private val driftHistRuns = new java.util.concurrent.atomic.AtomicInteger(0)
-  private val tvdHistRuns = new java.util.concurrent.atomic.AtomicInteger(0)
-  private val benfordRuns = new java.util.concurrent.atomic.AtomicInteger(0)
-  private val digestRuns = new java.util.concurrent.atomic.AtomicInteger(0)
-  private val countMinRuns = new java.util.concurrent.atomic.AtomicInteger(0)
-  private val jsdHistRuns = new java.util.concurrent.atomic.AtomicInteger(0)
 }

@@ -19,6 +19,19 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object StreamingJobs {
 
+  /** The agmarknet-shaped CSV pages under `srcDir` as a stream, with the
+    * caller's own source `options`, cleaned in-stream by the same
+    * `normalize` + `dropInvalid` as a batch landing. */
+  private def agriCsvStream(
+      spark: SparkSession, srcDir: String, options: (String, String)*): DataFrame =
+    AgriPipeline.dropInvalid(AgriPipeline.normalize(spark.readStream
+      .option("header", "true")
+      .option("quote", "\"")
+      .option("escape", "\"")
+      .options(options.toMap)
+      .schema(AgriPipeline.rawSchema)
+      .csv(srcDir)))
+
   /** B33/A1+A3: checkpointed file-source ingest of agmarknet-shaped CSV
     * pages into the partitioned parquet layout. Restart-safe: the
     * checkpoint tracks consumed files; the file sink commits atomically.
@@ -28,15 +41,8 @@ object StreamingJobs {
       srcDir: String,
       outDir: String,
       checkpointDir: String): StreamingQuery = {
-    val raw = spark.readStream
-      .option("header", "true")
-      .option("quote", "\"")
-      .option("escape", "\"")
-      .option("maxFilesPerTrigger", 8)
-      .schema(AgriPipeline.rawSchema)
-      .csv(srcDir)
-    val cleaned = AgriPipeline.dropInvalid(AgriPipeline.normalize(raw))
-    cleaned.writeStream
+    agriCsvStream(spark, srcDir, "maxFilesPerTrigger" -> "8")
+      .writeStream
       .format("parquet")
       .option("path", outDir)
       .option("checkpointLocation", checkpointDir)
@@ -63,14 +69,7 @@ object StreamingJobs {
       srcDir: String,
       outDir: String,
       checkpointDir: String): StreamingQuery = {
-    val raw = spark.readStream
-      .option("header", "true")
-      .option("quote", "\"")
-      .option("escape", "\"")
-      .schema(AgriPipeline.rawSchema)
-      .csv(srcDir)
-    val cleaned = AgriPipeline.dropInvalid(AgriPipeline.normalize(raw))
-    cleaned.writeStream
+    agriCsvStream(spark, srcDir).writeStream
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         batch.withColumn("__batch_id", lit(batchId))
           .write.mode("overwrite")
@@ -84,16 +83,6 @@ object StreamingJobs {
       .start()
   }
 
-  /** A14 x B33: the reference's full workflow shape — every harvest run
-    * appends to the accumulated corpus and commits the WHOLE corpus as a
-    * retained snapshot (`run.yml:29-35` does this with `git add data/ &&
-    * commit`). Here each micro-batch unions into the previous published
-    * snapshot and commits a new [[graft.sinks.VersionedSink]] version, so
-    * any historical corpus state remains readable and restorable.
-    * Snapshot writes are full rewrites (exactly like the reference's git
-    * history) — for TB-scale accumulation pair the per-batch append sink
-    * with periodic snapshots instead.
-    */
   /** The foreachBatch body of [[ingestVersionedSnapshots]], reusable over
     * any source. Replay idempotence: a crash after commit but before the
     * checkpoint offset commit re-delivers this batchId; the marker stamped
@@ -163,19 +152,22 @@ object StreamingJobs {
     }
   }
 
+  /** A14 x B33: the reference's full workflow shape — every harvest run
+    * appends to the accumulated corpus and commits the WHOLE corpus as a
+    * retained snapshot (`run.yml:29-35` does this with `git add data/ &&
+    * commit`). Here each micro-batch unions into the previous published
+    * snapshot and commits a new [[graft.sinks.VersionedSink]] version, so
+    * any historical corpus state remains readable and restorable.
+    * Snapshot writes are full rewrites (exactly like the reference's git
+    * history) — for TB-scale accumulation pair the per-batch append sink
+    * with periodic snapshots instead.
+    */
   def ingestVersionedSnapshots(
       spark: SparkSession,
       srcDir: String,
       tableDir: String,
       checkpointDir: String): StreamingQuery = {
-    val raw = spark.readStream
-      .option("header", "true")
-      .option("quote", "\"")
-      .option("escape", "\"")
-      .schema(AgriPipeline.rawSchema)
-      .csv(srcDir)
-    val cleaned = AgriPipeline.dropInvalid(AgriPipeline.normalize(raw))
-    cleaned.writeStream
+    agriCsvStream(spark, srcDir).writeStream
       .foreachBatch(commitVersionedBatch(tableDir) _)
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())

@@ -6,7 +6,7 @@ import java.sql.Timestamp
 import graft.streaming.StreamingJobs
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQueryListener, Trigger}
 
 /** Streaming surface (B33-B38) exercised with Trigger.AvailableNow +
   * memory sinks — the batch-drain idiom the round harness can run
@@ -572,5 +572,44 @@ class StreamingSpec extends SparkSpec {
       .groupBy(_.user_id).map { case (k, v) => k -> v.maxBy(_.n_events) }
     assert(latest(1L).n_events === 3L && latest(1L).total_value === 15.0)
     assert(latest(2L).n_events === 1L && latest(2L).total_value === 5.0)
+  }
+
+  test("stream replay: the Append drain reads the files in call order, one per micro-batch") {
+    import scala.jdk.CollectionConverters._
+    import StreamingQueryListener._
+    val rp = new graft.streaming.StreamReplay(spark, "replay_order")
+    Seq(1, 2, 3).foreach(n => rp.write(spark.range(n).toDF("id")))
+    val started = java.util.concurrent.ConcurrentHashMap.newKeySet[java.util.UUID]()
+    val batches = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val done = new java.util.concurrent.CountDownLatch(1)
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit = started.add(e.id)
+      override def onQueryProgress(e: QueryProgressEvent): Unit =
+        if (started.contains(e.progress.id)) batches.add(e.progress.numInputRows)
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
+        if (started.contains(e.id)) done.countDown()
+    }
+    spark.streams.addListener(listener)
+    try {
+      rp.drainAppend(rp.stream)
+      // listener delivery is asynchronous; termination is the query's last
+      // event, so once it arrives every progress event has too
+      assert(done.await(300, java.util.concurrent.TimeUnit.SECONDS),
+        "no termination event within 300s")
+    } finally spark.streams.removeListener(listener)
+    assert(batches.asScala.filter(_ > 0).toSeq === Seq(1L, 2L, 3L))
+    assert(rp.sinkRows.count() === 6)
+  }
+
+  test("stream replay: the Complete drain repeats in one session") {
+    def drained() = {
+      val rp = new graft.streaming.StreamReplay(spark, "replay_complete")
+      rp.writeHalves(spark.range(10).withColumn("g", col("id") % 3), "id")
+      rp.drainComplete(rp.stream.groupBy("g").agg(count(lit(1)).as("n"), sum("id").as("s")))
+        .orderBy("g").collect().toSeq
+    }
+    val first = drained()
+    assert(first.map(_.getLong(1)) === Seq(4L, 3L, 3L))
+    assert(drained() === first)
   }
 }
