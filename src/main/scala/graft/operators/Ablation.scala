@@ -24,9 +24,6 @@ import org.apache.spark.sql.types.LongType
   * metric adds a column to the same scan, never a pass.
   */
 object Ablation {
-  private def guard(ok: Column, pass: Column, msg: Column): Column =
-    Guards(ok, pass, msg)
-
   def leaveOneOut(df: DataFrame, group: Column, metrics: Seq[(String, Column)]): DataFrame = {
     require(metrics.nonEmpty, "[ablation] no metrics given")
     require(metrics.map(_._1).distinct.size == metrics.size,
@@ -41,7 +38,7 @@ object Ablation {
     val k60 = Long.MaxValue / 1000
     perG.crossJoin(broadcast(tot))
       .select(col("g") +: col("n_g") +: metrics.flatMap { case (nm, _) =>
-        val full = guard(
+        val full = Guards(
           coalesce(col(s"min_$nm") >= 0L, lit(true)) && col(s"t_$nm") <= k60,
           expr(s"(1000 * t_$nm) div n"),
           concat(lit(s"[ablation] metric $nm needs non-negative values with 1000*sum < 2^63 (min="),

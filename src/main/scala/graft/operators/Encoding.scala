@@ -14,11 +14,6 @@ import org.apache.spark.sql.types.LongType
   */
 object Encoding {
 
-  /** In-plan refuse-loudly guard (the EvalMetrics idiom): rides a
-    * consumed column so Catalyst cannot prune it. */
-  private def guard(ok: Column, pass: Column, msg: Column): Column =
-    Guards(ok, pass, msg)
-
   /** Append exact-rational leave-one-out encoding columns
     * (`loo_num`, `loo_den`; the feature is their quotient) for `target`
     * within `category`. Singleton categories (n_c = 1) have no "other
@@ -38,7 +33,7 @@ object Encoding {
     val withC = df
       .withColumn("__c", category)
       .withColumn("__t",
-        guard(target.isNotNull, target.cast(LongType),
+        Guards(target.isNotNull, target.cast(LongType),
           lit("[encoding] looTargetEncode needs a non-null target (a null would " +
             "silently vanish from the category sum while still counting in n)")))
     val perC = withC.groupBy(col("__c").as("__cc"))
@@ -50,7 +45,7 @@ object Encoding {
       .withColumn("loo_num",
         when(col("__n") > 1L, col("__s") - col("__t"))
           .otherwise(
-            guard(col("__gn") > 1L, col("__gs") - col("__t"),
+            Guards(col("__gn") > 1L, col("__gs") - col("__t"),
               lit("[encoding] looTargetEncode needs at least 2 rows for the " +
                 "singleton-category global fallback"))))
       .withColumn("loo_den",

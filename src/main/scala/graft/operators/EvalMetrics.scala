@@ -27,10 +27,15 @@ import org.apache.spark.sql.functions._
   * null-vs-error); both guards follow the refuse-loudly house contract.
   *
   * Null predicate rows: a row whose `inFirst`/`positive` column evaluates
-  * to NULL counts toward sample 2 / the negative class — made explicit by
-  * the `coalesce(..., false)` at each entry point so the choice is
-  * visible and matches the SQL oracles' `CASE WHEN x THEN ... ELSE`
-  * treatment of NULL.
+  * to NULL counts toward sample 2 / the negative class — the one split
+  * rule of [[pq]], which every two-sample histogram goes through, and
+  * the SQL oracles' `CASE WHEN x THEN ... ELSE` treatment of NULL.
+  *
+  * The two-sample counts kernel: [[pq]]/[[twoSample]] build every
+  * `(key…, p, q)` histogram, [[boundedTotals]] is the guarded totals row
+  * of the two-sample statistics, [[floorSquareDiv]] the staged
+  * floor(d²/c) of chi-square and CvM, and [[groupCounts]] the `(g, v)`
+  * dictionary of the group-vs-rest statistics.
   *
   * Scale shape: both KS and AUC reduce the corpus to per-distinct-value
   * counts with one partial-aggregated shuffle, then take cumulative
@@ -40,12 +45,74 @@ import org.apache.spark.sql.functions._
   */
 object EvalMetrics {
 
-  /** In-plan validity guard: returns `pass` unchanged when `ok` holds
-    * (NULL counts as failed), raises `msg` otherwise. It rides INSIDE a
-    * consumed output column — a standalone guard column would be pruned
-    * away by Catalyst and never evaluate. */
-  private def guard(ok: Column, pass: Column, msg: Column): Column =
-    Guards(ok, pass, msg)
+  /** The two-sample split, written once: a row whose `flag` is true
+    * counts in sample 1 (`p`), every other row in sample 2 (`q`) — a
+    * NULL flag included, because `when(NULL, …)` takes the `otherwise`
+    * branch. The two LongType aggregate columns alone, for a caller's
+    * own (streaming) groupBy; [[twoSample]] is the grouped frame. */
+  private[graft] def pq(flag: Column): (Column, Column) = {
+    val s1 = flag.cast("boolean")
+    (sum(when(s1, 1L).otherwise(0L)).as("p"), sum(when(s1, 0L).otherwise(1L)).as("q"))
+  }
+
+  /** The `(key…, p, q)` histogram: `df` grouped by the named `keys`,
+    * counted by [[pq]], in one partial-aggregated shuffle. The flag is
+    * projected first, as `s1`: aggregating the raw flag expression lets
+    * the eager-aggregation rule push q187's histogram below its join,
+    * one more Exchange. */
+  private[graft] def twoSample(df: DataFrame, flag: Column, keys: Column*): DataFrame = {
+    val (p, q) = pq(col("s1"))
+    val flagged = df.select(flag.as("s1") +: keys: _*)
+    flagged.groupBy(flagged.columns.tail.map(col): _*).agg(p, q)
+  }
+
+  /** The totals row of a `(…, p, q)` histogram: n1 = Σp, n2 = Σq and the
+    * `extra` aggregates, with the exactness guard riding n1. It holds
+    * when both samples are non-empty (the statistic is 0/0 otherwise)
+    * and n1·n2 ≤ `lim`, or n1·n2·(n1+n2) ≤ `lim` when `withSum` —
+    * checked by floor division so the check itself cannot overflow. The
+    * refusal names the statistic, the `bound`, n1, n2 and the escape
+    * `hatch`. n1 carries `pass` once the guard holds: CaseWhen branches
+    * evaluate lazily, so a nested guard there only runs inside this
+    * bound. */
+  private def boundedTotals(
+      counts: DataFrame, stat: String, bound: String, lim: Long, hatch: String,
+      withSum: Boolean = false, extra: Seq[Column] = Nil,
+      pass: Column = col("n1")): DataFrame = {
+    val limit = if (withSum) s"(${lim}L div n2) div (n1 + n2)" else s"${lim}L div n2"
+    val tot = counts.agg(sum("p").as("n1"), (sum("q").as("n2") +: extra): _*)
+    tot.select(
+      Guards(
+        col("n1") > 0L && col("n2") > 0L && col("n1") <= expr(limit),
+        pass,
+        concat(
+          lit(s"[eval-metrics] $stat needs both samples non-empty and $bound (n1="),
+          coalesce(col("n1"), lit(0L)), lit(", n2="), coalesce(col("n2"), lit(0L)),
+          lit(s"); $hatch"))).as("n1") +:
+        tot.columns.tail.map(col): _*)
+  }
+
+  /** floor(d²/c) into column `out` without materializing d², which alone
+    * would cap d at 2^31.5: with d = qd·c + r (integer div/mod),
+    * floor(d²/c) = d·qd + (r·d) div c. Its intermediates d·qd ≤ d²/c and
+    * r·d < c·d stay under the caller's totals bound. */
+  private def floorSquareDiv(df: DataFrame, d: Column, c: String, out: String): DataFrame =
+    df.withColumn("d", d)
+      .withColumn("qd", expr(s"d div $c"))
+      .withColumn("r", col("d") % col(c))
+      .withColumn(out, col("d") * col("qd") + expr(s"(r * d) div $c"))
+
+  /** The group-vs-rest dictionary: `(g, v, c)` counts with their
+    * per-value `(v, cv)`, per-group `(g, n)` and total `(nn)` aggregates.
+    * The counts are persisted once because three consumers read them;
+    * uncached, each would re-scan the raw corpus. */
+  private def groupCounts(df: DataFrame, group: Column, value: Column)
+      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
+    val perGV = graft.Q.persistOnce(df.select(group.as("g"), value.as("v"))
+      .groupBy("g", "v").agg(count(lit(1)).as("c")))
+    val perV = perGV.groupBy("v").agg(sum("c").as("cv"))
+    (perGV, perV, perGV.groupBy("g").agg(sum("c").as("n")), perV.agg(sum("cv").as("nn")))
+  }
 
   /** Two-sample KS distance between rows where `inFirst` is true (sample
     * 1) and the rest (sample 2), over `value`. Output (one row):
@@ -54,12 +121,7 @@ object EvalMetrics {
     * the smaller value, making the row deterministic).
     */
   def ksTest(df: DataFrame, inFirst: Column, value: Column): DataFrame =
-    ksTestCounts(df
-      .select(coalesce(inFirst.cast("boolean"), lit(false)).as("s1"), value.as("v"))
-      .groupBy("v")
-      .agg(
-        sum(when(col("s1"), 1L).otherwise(0L)).as("p"),
-        sum(when(col("s1"), 0L).otherwise(1L)).as("q")))
+    ksTestCounts(twoSample(df, inFirst, value.as("v")))
 
   /** [[ksTest]] from PRE-AGGREGATED per-value counts `(v, p, q)` —
     * p/q non-null LongType counts of samples 1/2 at each distinct `v`.
@@ -70,21 +132,10 @@ object EvalMetrics {
     */
   def ksTestCounts(perV: DataFrame): DataFrame = {
     val cum = PrefixSum.runningSums(perV, Seq(col("v")), Seq("p", "q"))
-    // Exactness + degeneracy guard on the single totals row: both samples
-    // non-empty (D is 0/0 otherwise) and n1*n2 representable (the exact
-    // rational's denominator; integer-div comparison so the check itself
-    // cannot overflow). Beyond the bound, ksTestBinned is the contract.
-    val tot = cum.agg(sum("p").as("n1"), sum("q").as("n2"))
-      .select(
-        guard(
-          col("n1") > 0L && col("n2") > 0L &&
-            col("n1") <= expr(s"${Long.MaxValue}L div n2"),
-          col("n1"),
-          concat(
-            lit("[eval-metrics] ksTest needs both samples non-empty and n1*n2 < 2^63 (n1="),
-            coalesce(col("n1"), lit(0L)), lit(", n2="), coalesce(col("n2"), lit(0L)),
-            lit("); pre-bin with ksTestBinned beyond the exact bound"))).as("n1"),
-        col("n2"))
+    // n1*n2 is the exact rational's denominator; beyond the bound,
+    // ksTestBinned is the contract
+    val tot = boundedTotals(cum, "ksTest", "n1*n2 < 2^63", Long.MaxValue,
+      "pre-bin with ksTestBinned beyond the exact bound")
     // |F1(v) - F2(v)| cleared of denominators: |c1*n2 - c2*n1| over n1*n2.
     cum.crossJoin(broadcast(tot))
       .select(
@@ -117,16 +168,8 @@ object EvalMetrics {
     * n_g·(N−n_g) < 2^63, enforced in-plan per group.
     */
   def ksTestPerGroup(df: DataFrame, group: Column, value: Column): DataFrame = {
-    // persistOnce: the (g, v) count dictionary feeds THREE consumers
-    // (the value dictionary, the group sizes, the grid's left join) —
-    // uncached, each would re-scan the raw corpus; cached, the corpus
-    // is read once and the bounded aggregate serves the rest
-    val perGV = graft.Q.persistOnce(df.select(group.as("g"), value.as("v"))
-      .groupBy("g", "v").agg(count(lit(1)).as("c")))
-    val perV = perGV.groupBy("v").agg(sum("c").as("cv"))
+    val (perGV, perV, perG, tot) = groupCounts(df, group, value)
     val cumV = PrefixSum.runningSums(perV, Seq(col("v")), Seq("cv"))
-    val perG = perGV.groupBy("g").agg(sum("c").as("n"))
-    val tot = perV.agg(sum("cv").as("nn"))
     // dense bounded grid: every group at every distinct value, with the
     // group's cumulative count carried forward by a grouped window
     val grid = perG.crossJoin(broadcast(cumV.select(col("v"), col("c_cv"))))
@@ -141,7 +184,7 @@ object EvalMetrics {
         (col("c_cv") - col("cg")) * col("n"))).as("d_num"))
       .select(
         col("g"), col("n"), (col("nn") - col("n")).as("n_rest"),
-        guard(
+        Guards(
           col("n") > 0L && col("nn") > col("n") &&
             col("n") <= expr(s"${Long.MaxValue}L div (nn - n)"),
           col("d_num"),
@@ -159,12 +202,7 @@ object EvalMetrics {
     * 2U = Σ over distinct scores s of pos(s) * (2*negs_below(s) + neg(s)).
     */
   def rocAuc(df: DataFrame, positive: Column, score: Column): DataFrame =
-    rocAucCounts(df
-      .select(coalesce(positive.cast("boolean"), lit(false)).as("y"), score.as("s"))
-      .groupBy("s")
-      .agg(
-        sum(when(col("y"), 1L).otherwise(0L)).as("p"),
-        sum(when(col("y"), 0L).otherwise(1L)).as("q")))
+    rocAucCounts(twoSample(df, positive, score.as("s")))
 
   /** [[rocAuc]] from PRE-AGGREGATED per-score class counts `(s, p, q)` —
     * same guards and output columns as the row-level tier. */
@@ -181,7 +219,7 @@ object EvalMetrics {
         // 0/0 otherwise) and 2*n_pos*n_neg representable — the doubled-U
         // numerator is bounded by that product, so if the bound holds the
         // summation above cannot have wrapped either.
-        guard(
+        Guards(
           col("n_pos") > 0L && col("n_neg") > 0L &&
             col("n_pos") <= expr(s"${Long.MaxValue / 2}L div n_neg"),
           col("auc_num"),
@@ -207,13 +245,7 @@ object EvalMetrics {
     * because each group's sequence lives inside its own partition.
     */
   def rocAucPerGroup(df: DataFrame, group: Column, positive: Column, score: Column): DataFrame = {
-    val perGS = df
-      .select(group.as("g"),
-        coalesce(positive.cast("boolean"), lit(false)).as("y"), score.as("s"))
-      .groupBy("g", "s")
-      .agg(
-        sum(when(col("y"), 1L).otherwise(0L)).as("p"),
-        sum(when(col("y"), 0L).otherwise(1L)).as("q"))
+    val perGS = twoSample(df, positive, group.as("g"), score.as("s"))
     val wg = org.apache.spark.sql.expressions.Window
       .partitionBy("g").orderBy("s")
     perGS
@@ -225,7 +257,7 @@ object EvalMetrics {
         sum(col("p") * (lit(2L) * (col("cq") - col("q")) + col("q"))).as("auc_num"))
       .select(
         col("g"), col("n_pos"), col("n_neg"),
-        guard(
+        Guards(
           col("n_neg") === 0L || col("n_pos") <= expr(s"${Long.MaxValue / 2}L div n_neg"),
           col("auc_num"),
           concat(
@@ -319,12 +351,7 @@ object EvalMetrics {
     */
   def ksTestBinned(df: DataFrame, inFirst: Column, value: Column, bins: Int): DataFrame =
     ksTestCountsRescaled(
-      quantileBin(df, value, bins)
-        .select(coalesce(inFirst.cast("boolean"), lit(false)).as("s1"), col("bin").as("v"))
-        .groupBy("v")
-        .agg(
-          sum(when(col("s1"), 1L).otherwise(0L)).as("p"),
-          sum(when(col("s1"), 0L).otherwise(1L)).as("q")))
+      twoSample(quantileBin(df, value, bins), inFirst, col("bin").as("v")))
       .withColumnRenamed("ks_at", "ks_at_bin")
       .withColumn("bins", lit(bins))
 
@@ -339,12 +366,7 @@ object EvalMetrics {
     */
   def rocAucBinned(df: DataFrame, positive: Column, score: Column, bins: Int): DataFrame =
     rocAucCountsRescaled(
-      quantileBin(df, score, bins)
-        .select(coalesce(positive.cast("boolean"), lit(false)).as("y"), col("bin").as("s"))
-        .groupBy("s")
-        .agg(
-          sum(when(col("y"), 1L).otherwise(0L)).as("p"),
-          sum(when(col("y"), 0L).otherwise(1L)).as("q")))
+      twoSample(quantileBin(df, score, bins), positive, col("bin").as("s")))
       .withColumn("bins", lit(bins))
 
   /** Wasserstein-1 (earth-mover) distance between two samples of an
@@ -357,12 +379,7 @@ object EvalMetrics {
     * w1_num = Σ_i (v_{i+1} − v_i)·|D_i| with D_i = C1(v_i)·n2 − C2(v_i)·n1.
     */
   def wasserstein1(df: DataFrame, inFirst: Column, value: Column): DataFrame =
-    wasserstein1Counts(df
-      .select(coalesce(inFirst.cast("boolean"), lit(false)).as("s1"), value.as("v"))
-      .groupBy("v")
-      .agg(
-        sum(when(col("s1"), 1L).otherwise(0L)).as("p"),
-        sum(when(col("s1"), 0L).otherwise(1L)).as("q")))
+    wasserstein1Counts(twoSample(df, inFirst, value.as("v")))
 
   /** [[wasserstein1]] from PRE-AGGREGATED per-value counts `(v, p, q)`,
     * v LongType. No lead/lag pass is needed despite the gap weights:
@@ -386,36 +403,26 @@ object EvalMetrics {
     require(perV.schema("v").dataType == org.apache.spark.sql.types.LongType,
       s"wasserstein1 needs a LongType value column, got ${perV.schema("v").dataType}")
     val cum = PrefixSum.runningSums(perV, Seq(col("v")), Seq("p", "q"))
-    // nested guards so the inner n1*n2 product only evaluates once the
-    // outer bound has cleared it (CaseWhen branches evaluate lazily)
+    // the range guard rides the totals guard's pass branch, so its
+    // n1*n2 only evaluates once the outer bound has cleared it
     val k61 = Long.MaxValue / 4
-    val tot = cum.agg(
-        sum("p").as("n1"), sum("q").as("n2"),
-        min("v").as("vmin"), max("v").as("vmax"))
-      .select(
-        guard(
-          col("n1") > 0L && col("n2") > 0L && col("n1") <= expr(s"${k61}L div n2"),
-          guard(
-            // sign precheck FIRST: vmax - vmin itself wraps negative when
-            // the value domain spans more than 2^63 (vmin << 0 < vmax),
-            // and a wrapped (negative) range would sail under the bound —
-            // Long.MaxValue + vmin is wrap-free for vmin < 0, so the
-            // comparison detects exactly the overflowing case
-            (col("vmin") >= 0L || col("vmax") <= lit(Long.MaxValue) + col("vmin")) &&
-              col("vmax") - col("vmin") <= expr(s"${k61}L div (n1 * n2)"),
-            col("n1"),
-            concat(
-              lit("[eval-metrics] wasserstein1 needs (v_max-v_min)*n1*n2 < 2^61 (vmin="),
-              col("vmin"), lit(", vmax="), col("vmax"),
-              lit(", n1="), col("n1"), lit(", n2="), col("n2"),
-              lit("); coarsen the value grid (value div 2^m) to shrink the range"))),
-          concat(
-            lit("[eval-metrics] wasserstein1 needs both samples non-empty and "),
-            lit("n1*n2 < 2^61 (n1="), coalesce(col("n1"), lit(0L)),
-            lit(", n2="), coalesce(col("n2"), lit(0L)),
-            lit("); coarsen the value grid and pre-aggregate beyond the bound")))
-          .as("n1"),
-        col("n2"), col("vmin"))
+    val tot = boundedTotals(cum, "wasserstein1", "n1*n2 < 2^61", k61,
+      "coarsen the value grid and pre-aggregate beyond the bound",
+      extra = Seq(min("v").as("vmin"), max("v").as("vmax")),
+      pass = Guards(
+        // sign precheck FIRST: vmax - vmin itself wraps negative when
+        // the value domain spans more than 2^63 (vmin << 0 < vmax),
+        // and a wrapped (negative) range would sail under the bound —
+        // Long.MaxValue + vmin is wrap-free for vmin < 0, so the
+        // comparison detects exactly the overflowing case
+        (col("vmin") >= 0L || col("vmax") <= lit(Long.MaxValue) + col("vmin")) &&
+          col("vmax") - col("vmin") <= expr(s"${k61}L div (n1 * n2)"),
+        col("n1"),
+        concat(
+          lit("[eval-metrics] wasserstein1 needs (v_max-v_min)*n1*n2 < 2^61 (vmin="),
+          col("vmin"), lit(", vmax="), col("vmax"),
+          lit(", n1="), col("n1"), lit(", n2="), col("n2"),
+          lit("); coarsen the value grid (value div 2^m) to shrink the range"))))
     cum.crossJoin(broadcast(tot))
       .select(
         col("n1"), col("n2"),
@@ -449,45 +456,27 @@ object EvalMetrics {
     * Output (one row): n1, n2, cvm_num, t_den.
     */
   def cvmTest(df: DataFrame, inFirst: Column, value: Column): DataFrame =
-    cvmCounts(df
-      .select(coalesce(inFirst.cast("boolean"), lit(false)).as("s1"), value.as("v"))
-      .groupBy("v")
-      .agg(
-        sum(when(col("s1"), 1L).otherwise(0L)).as("p"),
-        sum(when(col("s1"), 0L).otherwise(1L)).as("q")))
+    cvmCounts(twoSample(df, inFirst, value.as("v")))
 
   /** [[cvmTest]] from PRE-AGGREGATED per-value counts `(v, p, q)` — same
     * scale shape as [[ksTestCounts]] (one [[PrefixSum.runningSums]] pass,
     * broadcast totals) minus its top-1 sort: the statistic is one plain
     * aggregate. The d² div (n1·n2) term never materializes d² (which
-    * alone would cap n1·n2 at 2^31.5): with d = q1·n1 + r1,
-    * floor(d²/n1) = d·q1 + (r1·d) div n1, and a second div by n2
-    * composes exactly (floor∘floor = floor of the product divisor).
-    * Guard: both samples non-empty and n1·n2·(n1+n2) < 2^63 — q1 ≤ n2
-    * bounds d·q1 ≤ n1·n2·n2 and r1·d < n1·n1·n2 (both under the bound),
-    * and Σ cc·t0 ≤ N·n1·n2 bounds the final aggregate. Beyond it,
+    * alone would cap n1·n2 at 2^31.5): [[floorSquareDiv]] takes
+    * floor(d²/n1) = d·qd + (r·d) div n1 with d = qd·n1 + r, and a second
+    * div by n2 composes exactly (floor∘floor = floor of the product
+    * divisor). Guard: both samples non-empty and n1·n2·(n1+n2) < 2^63 —
+    * qd ≤ n2 bounds d·qd ≤ n1·n2·n2 and r·d < n1·n1·n2 (both under the
+    * bound), and Σ cc·t0 ≤ N·n1·n2 bounds the final aggregate. Beyond it,
     * pre-aggregate and go through [[cvmCountsRescaled]].
     */
   def cvmCounts(perV: DataFrame): DataFrame = {
     val cum = PrefixSum.runningSums(perV, Seq(col("v")), Seq("p", "q"))
-    val tot = cum.agg(sum("p").as("n1"), sum("q").as("n2"))
-      .select(
-        guard(
-          col("n1") > 0L && col("n2") > 0L &&
-            col("n1") <= expr(s"(${Long.MaxValue}L div n2) div (n1 + n2)"),
-          col("n1"),
-          concat(
-            lit("[eval-metrics] cvmTest needs both samples non-empty and "),
-            lit("n1*n2*(n1+n2) < 2^63 (n1="), coalesce(col("n1"), lit(0L)),
-            lit(", n2="), coalesce(col("n2"), lit(0L)),
-            lit("); pre-aggregate and rescale with cvmCountsRescaled beyond the bound"))).as("n1"),
-        col("n2"))
-    cum.crossJoin(broadcast(tot))
-      .withColumn("cc", col("p") + col("q"))
-      .withColumn("d", abs(col("c_p") * col("n2") - col("c_q") * col("n1")))
-      .withColumn("q1", expr("d div n1"))
-      .withColumn("r1", col("d") % col("n1"))
-      .withColumn("t0", expr("(d * q1 + (r1 * d) div n1) div n2"))
+    val tot = boundedTotals(cum, "cvmTest", "n1*n2*(n1+n2) < 2^63", Long.MaxValue,
+      "pre-aggregate and rescale with cvmCountsRescaled beyond the bound", withSum = true)
+    floorSquareDiv(cum.crossJoin(broadcast(tot)).withColumn("cc", col("p") + col("q")),
+        abs(col("c_p") * col("n2") - col("c_q") * col("n1")), "n1", "t1")
+      .withColumn("t0", expr("t1 div n2"))
       .groupBy("n1", "n2")
       .agg(sum(col("cc") * col("t0")).as("cvm_num"))
       .select(
@@ -525,7 +514,7 @@ object EvalMetrics {
       .groupBy("g").agg(sum("c").as("n"), sum(col("c") * col("c")).as("s2"))
       .select(
         col("g"), col("n"),
-        guard(col("n") <= lit(3037000499L),
+        Guards(col("n") <= lit(3037000499L),
           col("n") * col("n") - col("s2"),
           concat(
             lit("[eval-metrics] concentrationPerGroup overflow: group "),
@@ -555,27 +544,13 @@ object EvalMetrics {
     * beyond the bound pre-aggregate and go through [[tvdCountsRescaled]].
     */
   def tvdTest(df: DataFrame, inFirst: Column, value: Column): DataFrame =
-    tvdCounts(df
-      .select(coalesce(inFirst.cast("boolean"), lit(false)).as("s1"), value.as("v"))
-      .groupBy("v")
-      .agg(
-        sum(when(col("s1"), 1L).otherwise(0L)).as("p"),
-        sum(when(col("s1"), 0L).otherwise(1L)).as("q")))
+    tvdCounts(twoSample(df, inFirst, value.as("v")))
 
   /** [[tvdTest]] from PRE-AGGREGATED per-category counts `(v, p, q)` —
     * same guards and output columns as the row-level tier. */
   def tvdCounts(perV: DataFrame): DataFrame = {
-    val tot = perV.agg(sum("p").as("n1"), sum("q").as("n2"))
-      .select(
-        guard(
-          col("n1") > 0L && col("n2") > 0L &&
-            col("n1") <= expr(s"${Long.MaxValue / 2}L div n2"),
-          col("n1"),
-          concat(
-            lit("[eval-metrics] tvdTest needs both samples non-empty and n1*n2 < 2^62 (n1="),
-            coalesce(col("n1"), lit(0L)), lit(", n2="), coalesce(col("n2"), lit(0L)),
-            lit("); pre-aggregate and rescale with tvdCountsRescaled beyond the bound"))).as("n1"),
-        col("n2"))
+    val tot = boundedTotals(perV, "tvdTest", "n1*n2 < 2^62", Long.MaxValue / 2,
+      "pre-aggregate and rescale with tvdCountsRescaled beyond the bound")
     perV.crossJoin(broadcast(tot))
       .withColumn("dev", abs(col("p") * col("n2") - col("q") * col("n1")))
       .groupBy("n1", "n2")
@@ -606,14 +581,7 @@ object EvalMetrics {
     * n_g·(N−n_g) < 2^62.
     */
   def tvdPerGroup(df: DataFrame, group: Column, value: Column): DataFrame = {
-    // persistOnce: the (g, v) dictionary feeds the category totals, the
-    // group sizes AND the deviation join — cached, the corpus is scanned
-    // once and the bounded aggregate serves all three
-    val perGV = graft.Q.persistOnce(df.select(group.as("g"), value.as("v"))
-      .groupBy("g", "v").agg(count(lit(1)).as("c")))
-    val perV = perGV.groupBy("v").agg(sum("c").as("cv"))
-    val perG = perGV.groupBy("g").agg(sum("c").as("n"))
-    val tot = perV.agg(sum("cv").as("nn"))
+    val (perGV, perV, perG, tot) = groupCounts(df, group, value)
     perGV.join(perV, "v")
       .join(perG, "g")
       .crossJoin(broadcast(tot))
@@ -624,7 +592,7 @@ object EvalMetrics {
         sum(col("cv")).as("sv"))
       .select(
         col("g"), col("n"), (col("nn") - col("n")).as("n_rest"),
-        guard(
+        Guards(
           col("n") > 0L && col("nn") > col("n") &&
             col("n") <= expr(s"${Long.MaxValue / 2}L div (nn - n)"),
           // categories absent from g contribute C_v·n_g each: their sum
@@ -662,36 +630,16 @@ object EvalMetrics {
     * to per-category counts plus a broadcast totals row.
     */
   def chiSquareTest(df: DataFrame, inFirst: Column, value: Column): DataFrame =
-    chiSquareCounts(df
-      .select(coalesce(inFirst.cast("boolean"), lit(false)).as("s1"), value.as("v"))
-      .groupBy("v")
-      .agg(
-        sum(when(col("s1"), 1L).otherwise(0L)).as("p"),
-        sum(when(col("s1"), 0L).otherwise(1L)).as("q")))
+    chiSquareCounts(twoSample(df, inFirst, value.as("v")))
 
   /** [[chiSquareTest]] from PRE-AGGREGATED per-category counts
     * `(v, p, q)` — same guards and output columns as the row-level
     * tier. */
   def chiSquareCounts(perV: DataFrame): DataFrame = {
-    val tot = perV.agg(sum("p").as("n1"), sum("q").as("n2"))
-      .select(
-        guard(
-          col("n1") > 0L && col("n2") > 0L &&
-            col("n1") <= expr(s"(${Long.MaxValue}L div n2) div (n1 + n2)"),
-          col("n1"),
-          concat(
-            lit("[eval-metrics] chiSquareTest needs both samples non-empty and "),
-            lit("n1*n2*(n1+n2) < 2^63 (n1="), coalesce(col("n1"), lit(0L)),
-            lit(", n2="), coalesce(col("n2"), lit(0L)),
-            lit("); pre-aggregate and rescale with chiSquareCountsRescaled beyond the bound"))).as("n1"),
-        col("n2"))
-    perV.crossJoin(broadcast(tot))
-      .withColumn("cc", col("p") + col("q"))
-      .withColumn("d", abs(col("p") * col("n2") - col("q") * col("n1")))
-      // floor(d^2/cc) without materializing d^2: d = qd*cc + r
-      .withColumn("qd", expr("d div cc"))
-      .withColumn("r", col("d") % col("cc"))
-      .withColumn("t", col("d") * col("qd") + expr("(r * d) div cc"))
+    val tot = boundedTotals(perV, "chiSquareTest", "n1*n2*(n1+n2) < 2^63", Long.MaxValue,
+      "pre-aggregate and rescale with chiSquareCountsRescaled beyond the bound", withSum = true)
+    floorSquareDiv(perV.crossJoin(broadcast(tot)).withColumn("cc", col("p") + col("q")),
+        abs(col("p") * col("n2") - col("q") * col("n1")), "cc", "t")
       .groupBy("n1", "n2")
       .agg(sum(col("t")).as("chi2_num"))
       .select(
@@ -712,7 +660,7 @@ object EvalMetrics {
     val tot = perV.groupBy("g")
       .agg(sum("p").as("n1t"), sum("q").as("n2"), (count(lit(1)) - 1L).as("dof"))
       .select(col("g"),
-        guard(
+        Guards(
           col("n1t") > 0L && col("n2") > 0L &&
             col("n1t") <= expr(s"(${Long.MaxValue}L div n2) div (n1t + n2)"),
           col("n1t"),
@@ -723,12 +671,8 @@ object EvalMetrics {
             lit(", n2="), coalesce(col("n2"), lit(0L)),
             lit("); pre-aggregate and rescale beyond the bound"))).as("n1"),
         col("n2"), col("dof"))
-    perV.join(tot, "g")
-      .withColumn("cc", col("p") + col("q"))
-      .withColumn("d", abs(col("p") * col("n2") - col("q") * col("n1")))
-      .withColumn("qd", expr("d div cc"))
-      .withColumn("r", col("d") % col("cc"))
-      .withColumn("t", col("d") * col("qd") + expr("(r * d) div cc"))
+    floorSquareDiv(perV.join(tot, "g").withColumn("cc", col("p") + col("q")),
+        abs(col("p") * col("n2") - col("q") * col("n1")), "cc", "t")
       .groupBy("g", "n1", "n2", "dof")
       .agg(sum(col("t")).as("chi2_num"))
       .select(col("g"), col("n1"), col("n2"), col("dof"), col("chi2_num"),
@@ -789,7 +733,7 @@ object EvalMetrics {
       // would be pruned away): m > maxRaters would make D/(m-1)
       // non-integral and silently corrupt every coincidence count
       .select(col("u"),
-        guard(col("m0") <= maxRaters, col("m0"),
+        Guards(col("m0") <= maxRaters, col("m0"),
           concat(lit(s"[eval-metrics] krippendorffAlpha: unit with more than maxRaters=$maxRaters ratings (unit "),
             col("u").cast("string"), lit(", m="), col("m0"), lit(")"))).as("m"))
       .filter(col("m") >= 2)
@@ -820,8 +764,8 @@ object EvalMetrics {
     units.crossJoin(broadcast(tot)).crossJoin(broadcast(doSum))
       .select(
         col("n_units"), col("n_pairable"), col("do_num"),
-        guard(col("nn") <= lit(3037000499L),
-          guard(sExpr > 0L,
+        Guards(col("nn") <= lit(3037000499L),
+          Guards(sExpr > 0L,
             sExpr - col("do_num") * (col("nn") - lit(dLcm)),
             lit("[eval-metrics] krippendorffAlpha undefined: every pairable rating " +
               "shares one category (expected disagreement 0)")),
@@ -835,13 +779,6 @@ object EvalMetrics {
 
   private def gcd(a: Long, b: Long): Long = if (b == 0) a else gcd(b, a % b)
 
-  /** Cohen's kappa from a confusion frame (`aCol` = rater/truth label,
-    * `bCol` = second rater/prediction, `cntCol` = pair count). Exact
-    * rational: kappa = (N*agree - Σ_k row_k*col_k) / (N² - Σ_k row_k*col_k).
-    * Output (one row): n, agree, kappa_num, kappa_den. Categories seen by
-    * only one rater contribute 0 to the expected-agreement term (their
-    * other marginal is 0), which the inner marginal join encodes.
-    */
   /** Jensen–Shannon divergence between the categorical distributions of
     * two corpus slices — the SYMMETRIC, always-finite drift statistic the
     * TVD/chi-square tiers can't be when a category exists on one side
@@ -876,12 +813,7 @@ object EvalMetrics {
     * insurance on the real corpora.
     */
   def jsDivergence(df: DataFrame, inFirst: Column, value: Column): DataFrame =
-    jsCounts(df
-      .select(coalesce(inFirst.cast("boolean"), lit(false)).as("s1"), value.as("v"))
-      .groupBy("v")
-      .agg(
-        sum(when(col("s1"), 1L).otherwise(0L)).as("p"),
-        sum(when(col("s1"), 0L).otherwise(1L)).as("q")))
+    jsCounts(twoSample(df, inFirst, value.as("v")))
 
   /** [[jsDivergence]] from PRE-AGGREGATED per-category counts `(v, p, q)`
     * — same guards and output columns as the row-level tier (the
@@ -910,17 +842,8 @@ object EvalMetrics {
         lit(s"per-category counts must be non-negative, got $c = "),
         col(c).cast("string"), lit(" - fix the caller-supplied histogram")))
     val perV = perV0.select(col("v"), nonNeg("p").as("p"), nonNeg("q").as("q"))
-    val tot = perV.agg(sum("p").as("n1"), sum("q").as("n2"))
-      .select(
-        guard(
-          col("n1") > 0L && col("n2") > 0L &&
-            col("n1") <= expr(s"${Long.MaxValue / 2}L div n2"),
-          col("n1"),
-          concat(
-            lit("[eval-metrics] jsDivergence needs both samples non-empty and 2*n1*n2 <= 2^63 (n1="),
-            coalesce(col("n1"), lit(0L)), lit(", n2="), coalesce(col("n2"), lit(0L)),
-            lit("); pre-aggregate and downscale the per-category counts beyond the bound"))).as("n1"),
-        col("n2"))
+    val tot = boundedTotals(perV, "jsDivergence", "2*n1*n2 <= 2^63", Long.MaxValue / 2,
+      "pre-aggregate and downscale the per-category counts beyond the bound")
     // |t| <= ln(2*max(n1,n2))*1e6 < 4.4e7; each per-term product is
     // division-guarded (the Dsir idiom) so a 2e11-row slice refuses
     // instead of wrapping; the guard reads the SAME materialized t
@@ -983,7 +906,7 @@ object EvalMetrics {
     graft.plans.GraftExtensions.ensureRegistered(df.sparkSession)
     val discArr = array(ndcgDiscounts(k).map(lit): _*)
     val g = df.select(grp.as("g"), item.cast("long").as("it"), score.as("sc"),
-      guard(
+      Guards(
         rel.cast("long") >= 0L && rel.cast("long") <= lit(Long.MaxValue / 2000000L),
         rel.cast("long"),
         concat(lit("[ndcg] relevance must sit in [0, 2^63/(2*10^6)] for the "),
@@ -1003,7 +926,7 @@ object EvalMetrics {
       .select(col("g"), col("n_items"),
         dcgOf(col("top")).as("dcg_micro"), dcgOf(col("ideal")).as("idcg_micro"))
       .select(col("g"), col("n_items"), col("dcg_micro"), col("idcg_micro"),
-        guard(
+        Guards(
           col("idcg_micro") > 0L &&
             col("dcg_micro") <= lit(Long.MaxValue / 1000000L),
           expr("(dcg_micro * 1000000) div idcg_micro"),
@@ -1044,7 +967,7 @@ object EvalMetrics {
         sum(when(col("y") && !col("yh"), 1L).otherwise(0L)).as("fn"),
         sum(when(!col("y") && !col("yh"), 1L).otherwise(0L)).as("tn"))
     conf.select(
-      guard(
+      Guards(
         col("n") > 0L && col("n") <= lit(3037000499L) && // isqrt(2^63)-ish
           (col("tp") + col("fp")) > 0L && (col("tp") + col("fn")) > 0L &&
           (col("tn") + col("fp")) > 0L && (col("tn") + col("fn")) > 0L,
@@ -1107,6 +1030,13 @@ object EvalMetrics {
     (1 to k).map(i =>
       math.floor(1e6 / (math.log(i + 1.0) / math.log(2.0))).toLong)
 
+  /** Cohen's kappa from a confusion frame (`aCol` = rater/truth label,
+    * `bCol` = second rater/prediction, `cntCol` = pair count). Exact
+    * rational: kappa = (N*agree - Σ_k row_k*col_k) / (N² - Σ_k row_k*col_k).
+    * Output (one row): n, agree, kappa_num, kappa_den. Categories seen by
+    * only one rater contribute 0 to the expected-agreement term (their
+    * other marginal is 0), which the inner marginal join encodes.
+    */
   def cohenKappa(confusion: DataFrame, aCol: String, bCol: String, cntCol: String): DataFrame = {
     val totals = confusion.agg(
       sum(col(cntCol)).as("n"),

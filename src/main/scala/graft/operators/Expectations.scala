@@ -45,12 +45,6 @@ import org.apache.spark.sql.functions._
   */
 object Expectations {
 
-  /** In-plan validity guard (the EvalMetrics idiom): returns `pass` when
-    * `ok` holds (NULL counts as failed), raises `msg` otherwise. Rides
-    * INSIDE a consumed output column so Catalyst can't prune it away. */
-  private def guard(ok: Column, pass: Column, msg: Column): Column =
-    Guards(ok, pass, msg)
-
   /** One declarative expectation; `name` keys the verdict row. */
   sealed trait Rule { def name: String }
 
@@ -188,13 +182,11 @@ object Expectations {
         // per-category counts over frame ∪ reference — ONE partial-agg'd
         // shuffle, then a broadcast totals attach (tvdCounts' shape with
         // verdict semantics instead of refuse-on-empty)
-        val perV = df.select(col(r.column).cast("string").as("v"), lit(true).as("s1"))
-          .unionByName(r.reference
-            .select(col(r.refColumn).cast("string").as("v"), lit(false).as("s1")))
-          .groupBy("v")
-          .agg(
-            sum(when(col("s1"), 1L).otherwise(0L)).as("p"),
-            sum(when(col("s1"), 0L).otherwise(1L)).as("q"))
+        val perV = EvalMetrics.twoSample(
+          df.select(col(r.column).cast("string").as("v"), lit(true).as("s1"))
+            .unionByName(r.reference
+              .select(col(r.refColumn).cast("string").as("v"), lit(false).as("s1"))),
+          col("s1"), col("v"))
         // the 2^62 product bound covers Σ|p·n2 − q·n1| ≤ 2·n1·n2 (the
         // tvdCounts guard); beyond it the statistic would be wrong, so
         // refuse loudly rather than verdict
@@ -202,7 +194,7 @@ object Expectations {
             coalesce(sum("p"), lit(0L)).as("n1"),
             coalesce(sum("q"), lit(0L)).as("n2"))
           .select(
-            guard(
+            Guards(
               col("n1") <= expr(s"${Long.MaxValue / 2}L div greatest(n2, 1L)"),
               col("n1"),
               concat(

@@ -515,10 +515,10 @@ object AnalysisQueries {
           scored.select((col("label") >= 5).as("y"), col("s")), col("s"), 64))
         val bauc = EvalMetrics.rocAuc(binned, col("y"), col("bin"))
           .select(col("auc_num").as("b_num"))
-        val tie = binned.groupBy("bin")
-          .agg(
-            sum(when(col("y"), 1L).otherwise(0L)).as("p"),
-            sum(when(col("y"), 0L).otherwise(1L)).as("q"))
+        // pq's columns on the cached frame's own groupBy: a twoSample
+        // projection would rename y over the cache scan
+        val (p, q) = EvalMetrics.pq(col("y"))
+        val tie = binned.groupBy("bin").agg(p, q)
           .agg(sum(col("p") * col("q")).as("tie_mass"))
         exact.crossJoin(broadcast(bauc)).crossJoin(broadcast(tie))
           .select(
@@ -955,14 +955,11 @@ object AnalysisQueries {
     Q(
       "q194_drift_panel",
       (s, dir) => {
-        val perLL = Q.persistOnce(Tables.documents(s, dir)
-          .select(
+        val perLL = Q.persistOnce(EvalMetrics.twoSample(
+          Tables.documents(s, dir).select(
             (col("doc_id") % 2 === 0).as("s1"),
-            length(col("text")).cast(LongType).as("len"), col("lang"))
-          .groupBy("len", "lang")
-          .agg(
-            sum(when(col("s1"), 1L).otherwise(0L)).as("p"),
-            sum(when(col("s1"), 0L).otherwise(1L)).as("q")))
+            length(col("text")).cast(LongType).as("len"), col("lang")),
+          col("s1"), col("len"), col("lang")))
         val perLen = perLL.groupBy(col("len").as("v"))
           .agg(sum("p").as("p"), sum("q").as("q"))
         val perLang = perLL.groupBy(col("lang").as("v"))
@@ -1244,11 +1241,8 @@ object AnalysisQueries {
               'orderstatus', o_orderstatus,
               'mktsegment', c_mktsegment,
               'nation', cast(c_nationkey as string)) AS (g, v)"""))
-        val perV = base.groupBy("g", "v")
-          .agg(
-            sum(when(col("y"), 1L).otherwise(0L)).as("p"),
-            sum(when(col("y"), 0L).otherwise(1L)).as("q"))
-        EvalMetrics.chiSquareCountsPerGroup(perV).orderBy("g")
+        EvalMetrics.chiSquareCountsPerGroup(
+          EvalMetrics.twoSample(base, col("y"), col("g"), col("v"))).orderBy("g")
       },
       Some("""
         WITH base AS (SELECT o_orderpriority, o_orderstatus, c_mktsegment,
@@ -1323,9 +1317,7 @@ object AnalysisQueries {
         val b = Tables.orders(s, dir).select(
           substring(col("o_orderpriority"), 1, 1).cast(LongType).as("i"),
           (floor(col("o_totalprice") * 100).cast(LongType) >= 15000000L).as("y"))
-        val c = b.groupBy("i").agg(
-          sum(when(col("y"), 1L).otherwise(0L)).as("p"),
-          sum(when(col("y"), 0L).otherwise(1L)).as("q"))
+        val c = EvalMetrics.twoSample(b, col("y"), col("i"))
         val t = c.agg(sum("p").as("n1"), sum("q").as("n2"))
         c.crossJoin(broadcast(t))
           .select(col("n1"), col("n2"),

@@ -554,7 +554,6 @@ object CurationQueries {
     Q(
       "q145_grouped_topk",
       (s, dir) => {
-        graft.plans.GraftExtensions.ensureRegistered(s)
         val picked = Tables.documents(s, dir)
           .groupBy(col("lang"))
           .agg(call_function("graft_bottom_k",
@@ -585,7 +584,6 @@ object CurationQueries {
     Q(
       "q146_grouped_topk_str",
       (s, dir) => {
-        graft.plans.GraftExtensions.ensureRegistered(s)
         val d = Tables.documents(s, dir)
           .select(col("lang"), substring(md5(col("text")), 1, 2).as("hb"),
             col("doc_id"), col("n_chars"))
@@ -1393,7 +1391,6 @@ object CurationQueries {
     Q(
       "q248_covisit_topk",
       (s, dir) => {
-        graft.plans.GraftExtensions.ensureRegistered(s)
         val k6 = Long.MaxValue / 1000000L
         val li = graft.Q.persistOnce(Tables.lineitem(s, dir)
           .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))

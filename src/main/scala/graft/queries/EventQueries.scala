@@ -255,7 +255,6 @@ object EventQueries {
     Q(
       "q109_tdigest_percentile",
       (s, dir) => {
-        graft.plans.GraftExtensions.ensureRegistered(s)
         Tables.lineitem(s, dir)
           .groupBy(col("l_returnflag"))
           .agg(

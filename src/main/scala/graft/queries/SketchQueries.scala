@@ -69,7 +69,6 @@ object SketchQueries {
     Q(
       "q156_bloom_registers",
       (s, dir) => {
-        graft.plans.GraftExtensions.ensureRegistered(s)
         evalShingles(Tables.documents(s, dir))
           .agg(call_function("graft_bloom",
             hash60("bl", col("sh")), lit(BloomBits), lit(BloomK)).as("regs"))
@@ -106,7 +105,6 @@ object SketchQueries {
     Q(
       "q157_bloom_decontaminate",
       (s, dir) => {
-        graft.plans.GraftExtensions.ensureRegistered(s)
         val docs = Tables.documents(s, dir)
         val words = evalShingles(docs)
           .agg(call_function("graft_bloom",
@@ -161,7 +159,6 @@ object SketchQueries {
     Q(
       "q158_kmv_jaccard",
       (s, dir) => {
-        graft.plans.GraftExtensions.ensureRegistered(s)
         val docs = Tables.documents(s, dir)
         def corpus(pred: Column): DataFrame =
           docs.filter(pred)
@@ -372,7 +369,6 @@ object SketchQueries {
     Q(
       "q252_sliding_hll",
       (s, dir) => {
-        graft.plans.GraftExtensions.ensureRegistered(s)
         val daily = Tables.events(s, dir)
           .groupBy(expr("datediff(to_date(ts), date'1970-01-01')")
             .cast("long").as("d"))

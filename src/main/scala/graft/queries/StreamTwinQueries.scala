@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{Q, Tables}
+import graft.operators.EvalMetrics
 import graft.streaming.StreamReplay
 import org.apache.spark.sql.functions._
 
@@ -186,15 +187,13 @@ object StreamTwinQueries {
       (s, dir) => {
         val rp = new StreamReplay(s, "stream_drift")
         rp.writeHalves(Tables.documents(s, dir).select("doc_id", "n_chars"), "doc_id")
+        val (p, q) = EvalMetrics.pq(col("s1"))
         val hist = rp.drainComplete(rp.stream
           .withColumn("bin", expr("n_chars div 50"))
           .withColumn("s1", col("doc_id") % 2 === 0)
           .groupBy("bin")
-          .agg(
-            sum(when(col("s1"), 1L).otherwise(0L)).as("p"),
-            sum(when(col("s1"), 0L).otherwise(1L)).as("q")))
-        graft.operators.EvalMetrics
-          .ksTestCounts(hist.select(col("bin").as("v"), col("p"), col("q")))
+          .agg(p, q))
+        EvalMetrics.ksTestCounts(hist.select(col("bin").as("v"), col("p"), col("q")))
           .withColumnRenamed("ks_at", "ks_at_bin")
       },
       Some("""
@@ -226,14 +225,12 @@ object StreamTwinQueries {
       (s, dir) => {
         val rp = new StreamReplay(s, "stream_tvd")
         rp.writeHalves(Tables.documents(s, dir).select("doc_id", "lang"), "doc_id")
+        val (p, q) = EvalMetrics.pq(col("s1"))
         val hist = rp.drainComplete(rp.stream
           .withColumn("s1", col("doc_id") % 2 === 0)
           .groupBy("lang")
-          .agg(
-            sum(when(col("s1"), 1L).otherwise(0L)).as("p"),
-            sum(when(col("s1"), 0L).otherwise(1L)).as("q")))
-        graft.operators.EvalMetrics
-          .tvdCounts(hist.select(col("lang").as("v"), col("p"), col("q")))
+          .agg(p, q))
+        EvalMetrics.tvdCounts(hist.select(col("lang").as("v"), col("p"), col("q")))
       },
       Some("""
         WITH t AS (SELECT doc_id % 2 = 0 AS s1, lang AS v FROM documents),
@@ -390,13 +387,11 @@ object StreamTwinQueries {
             col("event_type"))
         val rp = new StreamReplay(s, "stream_jsd")
         rp.writeHalves(ev, "event_id")
+        val (p, q) = EvalMetrics.pq(col("s1"))
         val hist = rp.drainComplete(rp.stream
           .groupBy("event_type")
-          .agg(
-            sum(when(col("s1"), 1L).otherwise(0L)).as("p"),
-            sum(when(col("s1"), 0L).otherwise(1L)).as("q")))
-        graft.operators.EvalMetrics.jsCounts(
-          hist.select(col("event_type").as("v"), col("p"), col("q")))
+          .agg(p, q))
+        EvalMetrics.jsCounts(hist.select(col("event_type").as("v"), col("p"), col("q")))
       },
       Some("""
         WITH t AS (SELECT user_id % 2 = 0 AS s1, event_type AS v FROM events),

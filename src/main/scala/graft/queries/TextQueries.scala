@@ -1486,7 +1486,6 @@ object TextQueries {
       "q257_pmi_collocations",
       (s, dir) => {
         import graft.operators.{Guards, KneserNey}
-        graft.plans.GraftExtensions.ensureRegistered(s)
         val bc = Tables.documents(s, dir)
           .select(explode(KneserNey.bigramsFromTokens(
             tokens(lower(col("text"))))).as("bg"))

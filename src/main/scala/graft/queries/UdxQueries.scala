@@ -93,7 +93,6 @@ object UdxQueries {
     Q(
       "q87_heavy_hitters",
       (s, dir) => {
-        graft.plans.GraftExtensions.ensureRegistered(s)
         Tables.events(s, dir).createOrReplaceTempView("events_hh")
         s.sql("""
           SELECT user_bucket, hh.value AS event_type, hh.cnt
@@ -124,7 +123,6 @@ object UdxQueries {
     Q(
       "q97_hll_distinct",
       (s, dir) => {
-        graft.plans.GraftExtensions.ensureRegistered(s)
         Tables.events(s, dir)
           .agg(
             call_function("graft_hll", GraftFunctions.hash60("hll", col("user_id"))).as("regs"),

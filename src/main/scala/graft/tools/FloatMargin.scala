@@ -168,11 +168,8 @@ object FloatMargin {
 
       // q256 grid: per event-type category, both JSD mixture ratios
       // (mden, 2·p·n2) and (mden, 2·q·n1) — the jsDivergence algebra
-      val ev = graft.Tables.events(spark, dir)
-        .select((col("user_id") % 2 === 0).as("s1"), col("event_type").as("v"))
-        .groupBy("v")
-        .agg(sum(when(col("s1"), 1L).otherwise(0L)).as("p"),
-          sum(when(col("s1"), 0L).otherwise(1L)).as("q"))
+      val ev = graft.operators.EvalMetrics.twoSample(graft.Tables.events(spark, dir),
+        col("user_id") % 2 === 0, col("event_type").as("v"))
       val evTot = ev.agg(sum("p").as("n1"), sum("q").as("n2"))
       val jsGrid = ev.crossJoin(broadcast(evTot))
         .withColumn("mden", col("p") * col("n2") + col("q") * col("n1"))

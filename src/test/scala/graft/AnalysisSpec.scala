@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.{EvalMetrics, PrefixSum, Triangles}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Property pins for the evaluation/monitoring wing (SURVEY.md B80-B84):
@@ -988,6 +989,32 @@ class AnalysisSpec extends SparkSpec {
     val viaCounts = EvalMetrics.jsCounts(counts.toDF("v", "p", "q"))
       .as[(Long, Long, Long, Long)].collect().head
     assert(viaRows == viaCounts, s"$viaRows vs $viaCounts")
+
+    // every counts tier against its row-level tier, on a frame with NULL
+    // flags: the one split rule puts a NULL-flag row in sample 2, so the
+    // hand-built histogram counts those rows in q
+    val flagged = Seq.fill(300)((
+      rng.nextInt(3) match { case 0 => None; case 1 => Some(true); case _ => Some(false) },
+      rng.nextInt(12).toLong))
+    assert(flagged.exists(_._1.isEmpty))
+    val df = flagged.toDF("s1", "v")
+    val hist = flagged.groupBy(_._2).toSeq.map { case (v, rs) =>
+      (v, rs.count(_._1.contains(true)).toLong, rs.count(!_._1.contains(true)).toLong)
+    }.toDF("v", "p", "q")
+    type RowTier = (DataFrame, Column, Column) => DataFrame
+    type CountsTier = DataFrame => DataFrame
+    val tiers: Seq[(String, RowTier, CountsTier)] = Seq(
+      ("ks", EvalMetrics.ksTest, EvalMetrics.ksTestCounts),
+      ("tvd", EvalMetrics.tvdTest, EvalMetrics.tvdCounts),
+      ("chi2", EvalMetrics.chiSquareTest, EvalMetrics.chiSquareCounts),
+      ("w1", EvalMetrics.wasserstein1, EvalMetrics.wasserstein1Counts),
+      ("cvm", EvalMetrics.cvmTest, EvalMetrics.cvmCounts),
+      ("js", EvalMetrics.jsDivergence, EvalMetrics.jsCounts))
+    for ((name, rowTier, countsTier) <- tiers) {
+      val fromRows = rowTier(df, col("s1"), col("v")).collect().toSeq
+      val fromCounts = countsTier(hist).collect().toSeq
+      assert(fromRows == fromCounts, s"$name: row-level $fromRows vs counts $fromCounts")
+    }
   }
 
   test("jsCounts refuses a malformed histogram with negative counts loudly") {
