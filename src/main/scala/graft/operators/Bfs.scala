@@ -3,110 +3,28 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Bounded-round frontier BFS: minimum hop counts from a source node
-  * over a directed edge table — the reachability/distance primitive next
-  * to [[PageRank]] (authority) and [[ConnectedComponents]] (clustering).
+/** Bounded-round BFS: minimum hop counts from a source node over a
+  * directed edge table — the reachability/distance primitive next to
+  * [[PageRank]] (authority) and [[ConnectedComponents]] (clustering).
   *
-  * Each round expands only the FRONTIER (nodes first reached last
-  * round) through one keyed equi-join, then folds new reachings into
-  * the distance table with a min-aggregate — the classic iterative BFS
-  * a Pregel engine runs, expressed as two shuffles per round on the
-  * node key. Rounds = O(graph diameter), each touching |frontier ⋈
-  * edges| rows, never all pairs; the distance table is persisted and
-  * swapped per round so lineage stays flat. Like q137's PageRank, hop
-  * counts are exact integers, so a SQL oracle can unroll the identical
-  * rounds as CTEs and match row-for-row.
+  * BFS is [[Sssp]] with every weight 1, and runs as exactly that: one
+  * frontier relaxation, one early-exit rule and one driver-local tier
+  * serve both. With w ≡ 1 a node's distance improves only in the round
+  * that first reaches it, so Sssp's "improved this round" frontier is the
+  * classic BFS frontier and its drained-frontier exit fires at the same
+  * round; each round still costs one materializing count job. Hop counts
+  * are exact integers, so a SQL oracle can unroll the identical rounds
+  * as CTEs and match row-for-row.
   */
 object Bfs {
 
   /** Min-hops from `src` within `rounds` rounds. `edges` must have
     * (src, dst) columns; returns (node, hops) for every node reached.
-    * Unreached nodes are absent (hops would be +inf).
-    *
-    * Early exit: a round that adds no new node leaves every later
-    * frontier empty (a node first reached in round i has hops = i, so
-    * an unchanged distance table means no node carries hops = r and the
-    * next frontier filter matches nothing) — the loop stops there
-    * instead of running `rounds` empty joins. The materializing
-    * `count()` each round already exists for the persist swap, so the
-    * exit test is free; on graphs whose diameter from `src` is below
-    * `rounds` the fixed-round and early-exit results are identical
-    * (pinned in GraphSpec). */
-  /** Size-guarded routing bound (the PageRank.runLocal posture): an edge
-    * list inside the bound walks on the driver at zero per-round job
-    * cost. Without it each round's frontier join RE-COMPUTES the
-    * caller's (possibly expensive — q162's is a 4-table join) edge
-    * derivation; the gate cache below fixes that for the distributed
-    * tier too. Local ≡ distributed pinned in LocalTierSpec. */
-  private val LocalEdgeLimit = 4L << 20
-
-  def hops(edges: DataFrame, src: Long, rounds: Int): DataFrame = {
-    val spark = edges.sparkSession
-    // cache BEFORE the rounds: each round's frontier join otherwise
-    // recomputes the caller's edge derivation from scratch. The driver
-    // tier widens integral endpoints to long, exactly like the union
-    // coercion.
-    val gate = new LocalTier(LocalEdgeLimit,
-      Seq(edges.schema("src").dataType, edges.schema("dst").dataType),
-      supported = LocalTier.integral(edges.schema("src").dataType))
-    val e = gate.cache(edges.select(col("src"), col("dst")))
-    gate.collect(e).foreach { case Seq(arr) =>
-      return runLocal(spark,
-        arr.map(r => (r.getAs[Number](0).longValue, r.getAs[Number](1).longValue)),
-        src, rounds)
-    }
-    var dist = graft.Q.persistOnce(spark.range(1)
-      .select(lit(src).as("node"), lit(0).cast("int").as("hops")))
-    var reachedCount = 1L
-    var r = 1
-    var drained = false
-    while (r <= rounds && !drained) {
-      val frontier = dist.filter(col("hops") === r - 1).select(col("node"))
-      val reached = frontier.join(e, col("node") === col("src"))
-        .select(col("dst").as("node"), lit(r).cast("int").as("hops"))
-      val next = graft.Q.persistOnce(dist.union(reached)
-        .groupBy("node").agg(min(col("hops")).as("hops")))
-      val n = next.count() // materialize before dropping the previous round
-      dist.unpersist()
-      dist = next
-      drained = n == reachedCount
-      reachedCount = n
-      r += 1
-    }
-    // the returned O(|V|) state is cache-backed and materialized; the
-    // O(|E|) edge cache is only a recompute fallback now — release it
-    // (guide §5: |E| >> |V| at scale)
-    gate.release()
-    dist
-  }
-
-  /** Driver tier: identical bounded-round min-hops on the collected edge
-    * list (endpoints widened to long exactly like the union coercion). */
-  private def runLocal(spark: org.apache.spark.sql.SparkSession,
-      e: Array[(Long, Long)], src: Long, rounds: Int): DataFrame = {
-    import scala.collection.mutable
-    import scala.jdk.CollectionConverters._
-    val adj = mutable.HashMap.empty[Long, mutable.ArrayBuffer[Long]]
-    e.foreach { case (s, d) => adj.getOrElseUpdate(s, mutable.ArrayBuffer.empty) += d }
-    val hops = mutable.LinkedHashMap[Long, Int](src -> 0)
-    var frontier = Array(src)
-    var r = 1
-    while (r <= rounds && frontier.nonEmpty) {
-      val next = mutable.ArrayBuffer.empty[Long]
-      frontier.foreach { v =>
-        adj.get(v).foreach(_.foreach { d =>
-          if (!hops.contains(d)) { hops(d) = r; next += d }
-        })
-      }
-      frontier = next.toArray
-      r += 1
-    }
-    spark.createDataFrame(
-      hops.iterator.map { case (n, h) => org.apache.spark.sql.Row(n, h) }.toSeq.asJava,
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("node",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("hops",
-          org.apache.spark.sql.types.IntegerType, nullable = false))))
-  }
+    * Unreached nodes are absent (hops would be +inf). A round that
+    * reaches no new node ends the loop early (pinned in GraphSpec);
+    * the driver-local tier widens integral endpoints to long, exactly
+    * like the distributed union coercion. */
+  def hops(edges: DataFrame, src: Long, rounds: Int): DataFrame =
+    Sssp.distances(edges.select(col("src"), col("dst"), lit(1L).as("w")), src, rounds)
+      .select(col("node"), col("dist").cast("int").as("hops"))
 }

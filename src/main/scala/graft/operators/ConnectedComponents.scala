@@ -30,10 +30,6 @@ import org.apache.spark.sql.types.{DecimalType, LongType}
   */
 object ConnectedComponents {
 
-  /** Components of the undirected graph `edges` (columns a, b) over the
-    * node set `nodes` (column `idCol`; includes isolated nodes).
-    * Returns (idCol, comp) where comp = the minimum node id reachable.
-    */
   /** Size-guarded routing bound (the PageRank.runLocal / Louvain
     * posture): a (nodes, edges) pair inside the bound iterates on the
     * driver at zero per-round job cost — each distributed round is ~4
@@ -45,6 +41,10 @@ object ConnectedComponents {
     * tiers); past the bound the join plan runs unchanged. */
   private val LocalEdgeLimit = 4L << 20
 
+  /** Components of the undirected graph `edges` (columns a, b) over the
+    * node set `nodes` (column `idCol`; includes isolated nodes).
+    * Returns (idCol, comp) where comp = the minimum node id reachable.
+    */
   def components(
       nodes: DataFrame,
       edges: DataFrame,
@@ -72,14 +72,10 @@ object ConnectedComponents {
         return runLocal(spark, nodeArr.map(_.getLong(0)),
           edgeArr.map(r => (r.getLong(0), r.getLong(1))), idCol, maxIter)
     }
-    // symmetrize in ONE pass over the CACHED pair frame: each pair fans
-    // out to both directions scan-stage, and the scan is the InMemoryTable
-    // the gate count already materialized — the expensive edge derivation
-    // runs exactly once on either routing outcome.
-    val sym = gate.cache(pe.select(explode(array(
-        struct(col("a").as("src"), col("b").as("dst")),
-        struct(col("b").as("src"), col("a").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst")))
+    // symmetrize the CACHED pair frame: the Generate's scan is the
+    // InMemoryTable the gate count already materialized, so the expensive
+    // edge derivation runs exactly once on either routing outcome.
+    val sym = gate.cache(EdgeIntake.symmetrize(pe))
     def labelSum(df: DataFrame): java.math.BigDecimal =
       df.agg(sum(col("comp").cast(DecimalType(38, 0)))).head().getDecimal(0)
     var labels = pn.select(col(idCol).as("id"), col(idCol).as("comp"))

@@ -21,12 +21,12 @@ import org.apache.spark.sql.types.{BooleanType, LongType, StructField, StructTyp
   * Scale shape per round: one partial-agg'd degree count plus two
   * semi-joins on the node key — all key-equi, no windows; the edge frame
   * shrinks-or-holds monotonically. Per-round state is cut with EAGER
-  * localCheckpoint (the LabelProp/ConnectedComponents contract): the
-  * round's frame has two consumers (the degree aggregate and the next
-  * round's semi-joins), and unlike persistOnce nothing accumulates in
-  * the shared-session CacheManager across rounds — superseded round
-  * frames become unreachable and their blocks are GC-swept, instead of
-  * pinning up to 16 cached frames for the session's lifetime.
+  * localCheckpoint (the LabelProp contract): the round's frame has two
+  * consumers (the degree aggregate and the next round's semi-joins),
+  * and unlike persistOnce nothing accumulates in the shared-session
+  * CacheManager across rounds — superseded round frames become
+  * unreachable and their blocks are GC-swept, instead of pinning up to
+  * 16 cached frames for the session's lifetime.
   *
   * Returns the surviving per-node degree plus the fixpoint witness
   * `(node, deg, converged)` (empty graph => empty output).
@@ -61,9 +61,7 @@ object KCore {
     gate.collect(ab).foreach { case Seq(arr) =>
       return runLocal(edges.sparkSession, arr.map(r => (r.get(0), r.get(1))), aType, k, rounds)
     }
-    var sym = ab.select(col("a").as("src"), col("b").as("dst"))
-      .unionByName(ab.select(col("b").as("src"), col("a").as("dst")))
-      .localCheckpoint(true)
+    var sym = EdgeIntake.symmetrize(ab).localCheckpoint(true)
     gate.release() // sym is materialized (eager checkpoint)
     for (_ <- 1 to rounds) {
       val keep = sym.groupBy("src").agg(count(lit(1)).as("c"))
@@ -81,7 +79,7 @@ object KCore {
 
   /** Driver tier: the identical fixed-round peel on the collected edge
     * list — the symmetrized multiset (parallel edges and self-loop
-    * copies count in degrees exactly like the union), Long degree
+    * copies count in degrees exactly like the symmetrize), Long degree
     * counting, the same converged witness. Early exit on a no-op round
     * is observationally identical: peeling a fixed point is the
     * identity. Bit-identical by OperatorsSpec pin. */

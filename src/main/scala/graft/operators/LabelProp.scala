@@ -18,18 +18,11 @@ import org.apache.spark.sql.types.{LongType, NumericType, StructField, StructTyp
   * current label. Each round is two partial-agg'd hash-aggregate
   * shuffles (vote counts grouped by (node, label) — bounded by the
   * label-set size per node — then an argmax struct-max per node) plus
-  * one state join; state is one row per node, lineage cut per round via
-  * eager localCheckpoint, the [[ConnectedComponents]] scale contract.
+  * one state join; state is one row per node (the [[ConnectedComponents]]
+  * scale contract), lineage cut per round via eager localCheckpoint.
   */
 object LabelProp {
 
-  /** Propagate `seeds` (node, lbl) over the undirected graph `edges`
-    * (a, b) restricted to `nodes` (node) for exactly `iters` synchronous
-    * rounds. Returns (node, lbl) with lbl null where no label reached
-    * the node. `lbl` may be any ORDERABLE type — numeric ratings take a
-    * single-aggregate argmax; strings/dates/etc. take an equivalent
-    * two-aggregate tie-break with identical semantics.
-    */
   /** Size-guarded routing bound (the PageRank.runLocal / Hits posture):
     * a graph whose edge AND node frames fit on the driver propagates in
     * memory at zero per-round job cost — each distributed round is ~3
@@ -47,6 +40,13 @@ object LabelProp {
   // below ~600k. The bound is the measured crossover, not host tuning.
   private val LocalEdgeLimit = 1L << 20
 
+  /** Propagate `seeds` (node, lbl) over the undirected graph `edges`
+    * (a, b) restricted to `nodes` (node) for exactly `iters` synchronous
+    * rounds. Returns (node, lbl) with lbl null where no label reached
+    * the node. `lbl` may be any ORDERABLE type — numeric ratings take a
+    * single-aggregate argmax; strings/dates/etc. take an equivalent
+    * two-aggregate tie-break with identical semantics.
+    */
   def propagate(nodes: DataFrame, edges: DataFrame, seeds: DataFrame, iters: Int): DataFrame = {
     // The key rule covers the node keys of nodes, edges and seeds (the
     // distributed joins would silently coerce, e.g. Integer edges against
@@ -73,22 +73,20 @@ object LabelProp {
           seedArr.map(r => (r.get(0), java.lang.Long.valueOf(r.getLong(1)))),
           pn.schema("node").dataType, iters)
     }
-    // one-pass symmetrize from the CACHED pair frame (same idiom as
-    // ConnectedComponents: don't run a possibly-expensive edge derivation
-    // twice for the two directions — or a third time after the gate count)
-    val sym = gate.cache(pe.select(explode(array(
-        struct(col("a").as("src"), col("b").as("dst")),
-        struct(col("b").as("src"), col("a").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst")))
+    // symmetrize the CACHED pair frame: a possibly-expensive edge
+    // derivation never runs again after the gate count
+    val sym = gate.cache(EdgeIntake.symmetrize(pe))
     // State carries the clamped seed alongside the current label so each
     // round is ONE left join against the vote winners — not a re-join of
-    // nodes x seeds x previous x pick. Checkpoints are EAGER (the
-    // ConnectedComponents contract): every round's state has TWO
-    // consumers in the final action's DAG — the vote derivation and the
-    // next state join — and with a lazy checkpoint those branches race
-    // to compute the same partitions concurrently, doing each round's
-    // work twice and landing duplicate block-puts. One driver-blocking
-    // job per round buys single evaluation.
+    // nodes x seeds x previous x pick. Checkpoints are EAGER: every
+    // round's state has TWO consumers in the final action's DAG — the
+    // vote derivation and the next state join — and with a lazy
+    // checkpoint those branches race to compute the same partitions
+    // concurrently, doing each round's work twice and landing duplicate
+    // block-puts. One driver-blocking job per round buys single
+    // evaluation. (ConnectedComponents' checkpoint is lazy: the
+    // label-sum action right after it materializes it before a second
+    // consumer reads it.)
     var state = pn.join(ps, Seq("node"), "left")
       .select(col("node"), col("lbl").as("seed_lbl"), col("lbl"))
       .localCheckpoint(true)

@@ -185,34 +185,12 @@ object Louvain {
     mapping.select(col("node"), col("com"), lit(allConverged).as("converged"))
   }
 
-  /** Level-1 intake: cast, refuse self-loops on the consumed b column,
-    * refuse duplicates through the weight column (w = 1 guarded by one
-    * raw-vs-distinct-canonical-pair count audit on a 1-row broadcast).
-    * The audited frame reads the inner cache `gate` owns only until the
-    * consumer's own cache or checkpoint materializes. */
+  /** Level-1 intake: the shared distinct-pair audit ([[EdgeIntake]]),
+    * w = 1 on every audited edge. */
   private[graft] def intake(edges: DataFrame,
-      gate: LocalTier = new LocalTier(LocalEdgeLimit)): DataFrame = {
-    val e = gate.cache(edges.select(
-      col("a").cast("long").as("a"),
-      Guards(col("b").cast("long") =!= col("a").cast("long"),
-        col("b").cast("long"),
-        Guards.msg("louvain",
-          lit("self-loop edge ("), col("a").cast("string"), lit(", "),
-          col("b").cast("string"),
-          lit(") - input must be distinct undirected pairs with a != b")))
-        .as("b")))
-    val audit = e.agg(count(lit(1)).as("__c"),
-      countDistinct(least(col("a"), col("b")),
-        greatest(col("a"), col("b"))).as("__d"))
-    e.crossJoin(broadcast(audit))
-      .select(col("a"), col("b"),
-        Guards(col("__c") === col("__d"), lit(1L),
-          Guards.msg("louvain",
-            lit("duplicate undirected edges ("), col("__c").cast("string"),
-            lit(" rows, "), col("__d").cast("string"),
-            lit(" distinct pairs) - duplicates silently skew m, degrees "),
-            lit("and every gain; distinct the edge list first"))).as("w"))
-  }
+      gate: LocalTier = new LocalTier(LocalEdgeLimit)): DataFrame =
+    EdgeIntake.distinctPairs(edges, gate, "louvain",
+      "duplicates silently skew m, degrees and every gain; distinct the edge list first")
 
   /** Size-guarded routing bound (the PageRank.runLocal posture): a
     * level whose EDGE LIST fits comfortably on the driver iterates in
@@ -242,10 +220,7 @@ object Louvain {
         "[louvain] total edge weight exceeds 2^30: the 2m-scaled gain " +
           "would overflow int64 - shard the graph").as("m"))
     val nonSelf = e.filter(col("a") =!= col("b"))
-    val sym = gate.cache(nonSelf.select(explode(array(
-        struct(col("a").as("src"), col("b").as("dst"), col("w")),
-        struct(col("b").as("src"), col("a").as("dst"), col("w")))).as("p"))
-      .select(col("p.src").as("src"), col("p.dst").as("dst"), col("p.w").as("w")))
+    val sym = gate.cache(EdgeIntake.symmetrize(nonSelf, "w"))
     // weighted degree: non-self edges once per endpoint, self-loops twice
     val deg = gate.cache(sym.select(col("dst").as("node"), col("w"))
       .unionByName(e.filter(col("a") === col("b"))

@@ -32,10 +32,9 @@ import org.apache.spark.sql.functions._
   * Isolated nodes produce length-0 walks (just the start row); the
   * symmetrized graph has no other dead ends.
   *
-  * Input contract (enforced like Louvain's): distinct undirected pairs
-  * (a, b), a ≠ b — self-loops refuse on the consumed edge column,
-  * duplicates through the count-vs-countDistinct audit (a duplicate
-  * edge would bias every choice toward its neighbor).
+  * Input contract (the [[EdgeIntake.distinctPairs]] audit Louvain
+  * shares): distinct undirected pairs (a, b), a ≠ b — a duplicate edge
+  * would bias every choice toward its neighbor.
   *
   * Output: (start, w, step, node) — step 0 is the start node itself;
   * one row per visited position.
@@ -64,32 +63,12 @@ object RandomWalk {
     require(seed.nonEmpty && !seed.contains(":"),
       "RandomWalk wants a non-empty seed without ':'")
     val spark = edges.sparkSession
-    // intake: cast + the Louvain refusals (self-loop on the consumed b,
-    // duplicates through a 1-row broadcast audit riding the w column).
-    // Keys are cast to long, so the gate needs no key rule.
+    // intake: the shared distinct-pair audit (self-loop on the consumed
+    // b, duplicates on the w column the symmetrize carries), endpoints
+    // cast to long, so the gate needs no key rule
     val gate = new LocalTier(LocalEdgeLimit)
-    val e0 = gate.cache(edges.select(
-      col("a").cast("long").as("a"),
-      Guards(col("b").cast("long") =!= col("a").cast("long"),
-        col("b").cast("long"),
-        Guards.msg("randomwalk",
-          lit("self-loop edge ("), col("a").cast("string"), lit(", "),
-          col("b").cast("string"), lit(") - input must be distinct "),
-          lit("undirected pairs with a != b"))).as("b")))
-    val audit = e0.agg(count(lit(1)).as("__c"),
-      countDistinct(least(col("a"), col("b")),
-        greatest(col("a"), col("b"))).as("__d"))
-    val sym = gate.cache(e0.crossJoin(broadcast(audit))
-      .select(col("a"), col("b"),
-        Guards(col("__c") === col("__d"), lit(1L),
-          Guards.msg("randomwalk",
-            lit("duplicate undirected edges ("), col("__c").cast("string"),
-            lit(" rows, "), col("__d").cast("string"),
-            lit(" distinct pairs) - duplicates bias every step choice"))).as("__w"))
-      .select(explode(array(
-        struct(col("a").as("src"), col("b").as("dst"), col("__w")),
-        struct(col("b").as("src"), col("a").as("dst"), col("__w")))).as("p"))
-      .select(col("p.src").as("src"), col("p.dst").as("dst")))
+    val sym = gate.cache(EdgeIntake.symmetrize(EdgeIntake.distinctPairs(edges, gate,
+      "randomwalk", "duplicates bias every step choice"), "w").select("src", "dst"))
     // collecting sym evaluates the intake guard columns it was built
     // from, so self-loop/duplicate refusals fire exactly as they do
     // under the distributed consumption

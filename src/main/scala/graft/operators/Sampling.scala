@@ -86,32 +86,6 @@ object Sampling {
       .limit(k)
   }
 
-  /** Exact weighted sampling with ONE ticket per row and fractional
-    * weights welcome: Efraimidis–Spirakis order sampling. Each row draws
-    * the uniform `u = (hash60(seed, id) + 1) / 2^60 ∈ (0, 1]` and the key
-    * `-ln(u) / w` — an Exponential(rate = w) variate, so the k smallest
-    * keys per group are the weighted-without-replacement sample in which
-    * every successive draw selects a row with probability proportional to
-    * its weight among the rows remaining (Efraimidis & Spirakis 2006,
-    * in the equivalent `u^(1/w)` max-key form). At k = 1 inclusion
-    * probability is exactly w / Σw; no ticket replication, so a
-    * weight-1000.5 row costs the same one ticket as a weight-1 row.
-    *
-    * Like [[bottomK]] this rides the native `graft_bottom_k` aggregate:
-    * each map task ships at most k (key, id) pairs per group, O(groups×k)
-    * shuffle whatever the table size, and the sample is a pure function
-    * of (seed, data) — reproducible across runs, engines and
-    * partitionings. The ranking key is the QUANTIZED race key
-    * [[esKeyMicro]] — floor((-ln(u)/w)·10⁶) with a hash-desc in-cell
-    * tie-break — so membership AND rank replay exactly in SQL from the
-    * same integer+floor arithmetic (q147's oracle); see esKeyMicro for
-    * why the raw double key's between-rows wobble channel is closed by
-    * construction rather than absorbed by measured gap headroom.
-    *
-    * Rows with weight <= 0 (or null weight/id) are excluded — zero weight
-    * means "never sample me", and a negative rate has no Exponential.
-    * Output: groupCols ++ (idCol, rk) with rk in 1..k by key order.
-    */
   /** The raw Efraimidis–Spirakis ticket key as a column expression —
     * `-ln((hash60(seed, id) + 1) / 2^60) / w`, an Exponential(rate = w)
     * draw that is a pure function of (seed, id, w).
@@ -193,6 +167,32 @@ object Sampling {
       (-h).as("tb"))
   }
 
+  /** Exact weighted sampling with ONE ticket per row and fractional
+    * weights welcome: Efraimidis–Spirakis order sampling. Each row draws
+    * the uniform `u = (hash60(seed, id) + 1) / 2^60 ∈ (0, 1]` and the key
+    * `-ln(u) / w` — an Exponential(rate = w) variate, so the k smallest
+    * keys per group are the weighted-without-replacement sample in which
+    * every successive draw selects a row with probability proportional to
+    * its weight among the rows remaining (Efraimidis & Spirakis 2006,
+    * in the equivalent `u^(1/w)` max-key form). At k = 1 inclusion
+    * probability is exactly w / Σw; no ticket replication, so a
+    * weight-1000.5 row costs the same one ticket as a weight-1 row.
+    *
+    * Like [[bottomK]] this rides the native `graft_bottom_k` aggregate:
+    * each map task ships at most k (key, id) pairs per group, O(groups×k)
+    * shuffle whatever the table size, and the sample is a pure function
+    * of (seed, data) — reproducible across runs, engines and
+    * partitionings. The ranking key is the QUANTIZED race key
+    * [[esKeyMicro]] — floor((-ln(u)/w)·10⁶) with a hash-desc in-cell
+    * tie-break — so membership AND rank replay exactly in SQL from the
+    * same integer+floor arithmetic (q147's oracle); see esKeyMicro for
+    * why the raw double key's between-rows wobble channel is closed by
+    * construction rather than absorbed by measured gap headroom.
+    *
+    * Rows with weight <= 0 (or null weight/id) are excluded — zero weight
+    * means "never sample me", and a negative rate has no Exponential.
+    * Output: groupCols ++ (idCol, rk) with rk in 1..k by key order.
+    */
   def weightedBottomK(
       df: DataFrame,
       groupCols: Seq[String],

@@ -16,18 +16,18 @@ import org.apache.spark.sql.functions._
   * cut (a cheaper-but-longer path ignored at K, taken at K+1) and the
   * converged equality.
   *
-  * Scale shape (the [[Bfs]]/[[LabelProp]] contract): each round relaxes
-  * only the FRONTIER — nodes whose distance improved last round — through
-  * ONE sid-keyed equi-join + a partial-agg'd min fold; a node whose
-  * distance did not improve re-propagates nothing (its out-edges were
-  * already relaxed at that distance in an earlier round — the classic
-  * delta-stepping argument), so round cost is |frontier ⋈ edges|, never
-  * |V ⋈ E|. The distance table is persisted and swapped per round to
-  * keep lineage flat, and a drained frontier exits the loop early. The
-  * improved-this-round mark rides the SAME min fold (min over
-  * struct(dist, round) — least dist wins, ties keep the EARLIEST round,
-  * so a re-found equal distance never re-enters the frontier); no extra
-  * join is spent detecting change.
+  * Scale shape: each round relaxes only the FRONTIER — nodes whose
+  * distance improved last round — through ONE sid-keyed equi-join + a
+  * partial-agg'd min fold; a node whose distance did not improve
+  * re-propagates nothing (its out-edges were already relaxed at that
+  * distance in an earlier round — the classic delta-stepping argument),
+  * so round cost is |frontier ⋈ edges|, never |V ⋈ E|. The distance
+  * table is persisted and swapped per round to keep lineage flat, and a
+  * drained frontier exits the loop early. The improved-this-round mark
+  * rides the SAME min fold (min over struct(dist, round) — least dist
+  * wins, ties keep the EARLIEST round, so a re-found equal distance
+  * never re-enters the frontier); no extra join is spent detecting
+  * change.
   *
   * Overflow posture: relaxation computes dist + w, which wraps silently
   * in non-ANSI int64 once path costs approach 2^63. The domain (w ≥ 0
@@ -39,21 +39,23 @@ import org.apache.spark.sql.functions._
   */
 object Sssp {
 
+  /** Size-guarded routing bound (the PageRank.runLocal posture): an edge
+    * list inside the bound relaxes on the driver at zero per-round job
+    * cost; the gate cache below also stops each distributed round's
+    * frontier join from re-computing the caller's edge derivation (q162's
+    * and q247's are 4-table joins). Local ≡ distributed pinned in
+    * LocalTierSpec. */
+  private val LocalEdgeLimit = 4L << 20
+
   /** Min path cost from `src` using ≤ `rounds` edges. `edges` must carry
     * (src, dst, w) with w a non-negative long; returns (node, dist) for
     * every node reachable in ≤ `rounds` hops. Unreached nodes are absent.
+    * [[Bfs.hops]] is this with w ≡ 1.
     */
-  /** Size-guarded routing bound (the Bfs.hops posture): an edge list
-    * inside the bound relaxes on the driver at zero per-round job cost;
-    * the gate cache below also stops each distributed round's frontier
-    * join from re-computing the caller's edge derivation (q247's is a
-    * 4-table join). Local ≡ distributed pinned in LocalTierSpec. */
-  private val LocalEdgeLimit = 4L << 20
-
   def distances(edges: DataFrame, src: Long, rounds: Int): DataFrame = {
     val spark = edges.sparkSession
-    // the driver tier widens integral endpoints to long (the Bfs.hops
-    // posture) and relaxes Long weights
+    // the driver tier widens integral endpoints to long, exactly like the
+    // union coercion, and relaxes Long weights
     val gate = new LocalTier(LocalEdgeLimit,
       Seq(edges.schema("src").dataType, edges.schema("dst").dataType),
       supported = LocalTier.integral(edges.schema("src").dataType) &&
@@ -75,7 +77,7 @@ object Sssp {
         lit("dist + w < 2^63); rescale weights to a coarser unit")))
     // persistOnce, not persist: deterministic re-runs of the final plan
     // (Bench min-of-2, Verify after tests) should reuse the cached copy,
-    // not re-persist it (see Bfs.hops).
+    // not re-persist it.
     var dist = graft.Q.persistOnce(spark.range(1)
       .select(lit(src).as("node"), lit(0L).as("dist"), lit(0).cast("int").as("r")))
     var r = 1

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.{Q, Tables}
 import graft.functions.GraftFunctions._
-import graft.operators.{Blocking, EvalMetrics, Triangles}
+import graft.operators.{Blocking, EdgeIntake, EvalMetrics, Triangles}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -1447,9 +1447,7 @@ object AnalysisQueries {
       (s, dir) => {
         val k62 = Long.MaxValue / 2
         val e = coPurchaseEdges(s, dir)
-        val sym = Q.persistOnce(
-          e.select(col("a").as("src"), col("b").as("dst"))
-            .unionByName(e.select(col("b").as("src"), col("a").as("dst"))))
+        val sym = Q.persistOnce(EdgeIntake.symmetrize(e))
         val deg = sym.groupBy(col("src").as("n")).agg(count(lit(1)).as("d"))
         sym
           .join(deg.select(col("n").as("src"), col("d").as("x")), "src")
@@ -1490,9 +1488,7 @@ object AnalysisQueries {
       (s, dir) => {
         val e = coPurchaseEdges(s, dir)
         val m = e.agg(count(lit(1)).as("m"))
-        val sym = Q.persistOnce(
-          e.select(col("a").as("src"), col("b").as("dst"))
-            .unionByName(e.select(col("b").as("src"), col("a").as("dst"))))
+        val sym = Q.persistOnce(EdgeIntake.symmetrize(e))
         val deg = sym.groupBy(col("src").as("n")).agg(count(lit(1)).as("d"))
         val com = Tables.part(s, dir).select(col("p_partkey").as("n"), col("p_brand").as("c"))
         val ec = e

@@ -151,7 +151,10 @@ object ScaleBench {
     // r15: the trigram posting-list build (corpus-linear in chars — the
     // write-side index cost) + probe join. q276 is one grouped scan, not
     // probe-worthy.
-    "q275_trigram_search")
+    "q275_trigram_search",
+    // the md5-argmin walk steps over the co-purchase adjacency, whose
+    // edge count grows with lineitem (the last graph operator unprobed)
+    "q277_random_walks")
 
   def main(args: Array[String]): Unit = {
     val small = args.lift(0).getOrElse("/root/testdata/sf0.1")

@@ -337,6 +337,24 @@ class GraphSpec extends SparkSpec {
     }
     assert(e2.getMessage.contains("[louvain]") &&
       e2.getMessage.contains("duplicate"), e2.getMessage)
+    // the full text of the shared audit's refusals — Louvain's tag and
+    // its own duplicate tail — on the local and the distributed route
+    val selfMsg = "[louvain] self-loop edge (3, 3) - input must be distinct " +
+      "undirected pairs with a != b"
+    val dupMsg = "[louvain] duplicate undirected edges (3 rows, 2 distinct pairs) - " +
+      "duplicates silently skew m, degrees and every gain; distinct the edge list first"
+    def refusal(df: org.apache.spark.sql.DataFrame, forced: Boolean): String = {
+      def run() = operators.Louvain.communities(df, 2).collect()
+      intercept[Exception] {
+        if (forced) operators.LocalTier.forcingDistributed(run()) else run()
+      }.getMessage
+    }
+    for (forced <- Seq(false, true)) {
+      val m1 = refusal(selfLoop, forced)
+      assert(m1.contains(selfMsg), s"forced=$forced: $m1")
+      val m2 = refusal(dup, forced)
+      assert(m2.contains(dupMsg), s"forced=$forced: $m2")
+    }
   }
 
   test("louvain: converged state is a fixed point - longer budgets change nothing") {

@@ -172,6 +172,21 @@ class LocalTierSpec extends SparkSpec {
       val dist = forcingDistributed(operators.Bfs.hops(edges, 0L, rounds))
       assertSame(local, dist, s"Bfs rounds=$rounds")
     }
+    // the same graph with Int endpoints: both routes widen to
+    // (node bigint, hops int) and return the Long-typed input's rows
+    val intEdges = edges.selectExpr("cast(src as int) as src", "cast(dst as int) as dst")
+    for (rounds <- Seq(2, 6)) {
+      val expected = operators.Bfs.hops(edges, 0L, rounds)
+      val local = operators.Bfs.hops(intEdges, 0L, rounds)
+      val dist = forcingDistributed(operators.Bfs.hops(intEdges, 0L, rounds))
+      for ((route, df) <- Seq("local" -> local, "distributed" -> dist)) {
+        assert(df.schema.map(f => (f.name, f.dataType)) === Seq(
+          "node" -> org.apache.spark.sql.types.LongType,
+          "hops" -> org.apache.spark.sql.types.IntegerType),
+          s"Bfs Int rounds=$rounds $route: ${df.schema}")
+        assertSame(expected, df, s"Bfs Int rounds=$rounds $route")
+      }
+    }
     val wedges = (1 to 200)
       .map(_ => (rng.nextInt(40).toLong, rng.nextInt(40).toLong, 1L + rng.nextInt(9)))
       .filter { case (a, b, _) => a != b }.distinct.toDF("src", "dst", "w")

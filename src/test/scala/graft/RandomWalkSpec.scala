@@ -59,6 +59,24 @@ class RandomWalkSpec extends SparkSpec {
       RandomWalk.walks(Seq((1L, 2L), (2L, 1L)).toDF("a", "b"), 1, 2, "s").collect()
     }
     assert(e2.getMessage.contains("duplicate"), e2.getMessage)
+    // the full text of the shared audit's refusals — RandomWalk's tag and
+    // its own duplicate tail — on the local and the distributed route
+    val selfMsg = "[randomwalk] self-loop edge (1, 1) - input must be distinct " +
+      "undirected pairs with a != b"
+    val dupMsg = "[randomwalk] duplicate undirected edges (2 rows, 1 distinct pairs) - " +
+      "duplicates bias every step choice"
+    def refusal(pairs: Seq[(Long, Long)], forced: Boolean): String = {
+      def run() = RandomWalk.walks(pairs.toDF("a", "b"), 1, 2, "s").collect()
+      intercept[Exception] {
+        if (forced) operators.LocalTier.forcingDistributed(run()) else run()
+      }.getMessage
+    }
+    for (forced <- Seq(false, true)) {
+      val m1 = refusal(Seq((1L, 1L)), forced)
+      assert(m1.contains(selfMsg), s"forced=$forced: $m1")
+      val m2 = refusal(Seq((1L, 2L), (2L, 1L)), forced)
+      assert(m2.contains(dupMsg), s"forced=$forced: $m2")
+    }
     intercept[IllegalArgumentException](RandomWalk.walks(trianglePlusTail, 0, 2, "s"))
     intercept[IllegalArgumentException](RandomWalk.walks(trianglePlusTail, 1, 17, "s"))
     intercept[IllegalArgumentException](RandomWalk.walks(trianglePlusTail, 1, 2, "a:b"))
