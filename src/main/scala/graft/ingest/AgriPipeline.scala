@@ -1,7 +1,7 @@
 package graft.ingest
 
 import graft.functions.GraftFunctions.safeName
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -22,8 +22,11 @@ import org.apache.spark.sql.types._
   *
   * Scale: the pipeline is a single narrow scan->project->filter chain (no
   * shuffle) until the partitioned write; dedup adds one hash shuffle on
-  * the natural key. Partition count on disk = commodity cardinality
-  * (~316 in the harvested corpus), each internally splittable parquet.
+  * the natural key, and the write one more on `commodity_key` into the
+  * session's `spark.sql.shuffle.partitions` writer tasks. Partition count
+  * on disk = commodity cardinality (~316 in the harvested corpus), one
+  * parquet file per partition per landing. A batch landing runs no job
+  * after its write: its row count comes from the write itself.
   */
 object AgriPipeline {
 
@@ -96,24 +99,43 @@ object AgriPipeline {
     df.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
   }
 
-  /** A8/A10: value-partitioned parquet sink (dir per commodity_key).
+  /** The one keyed-writer rule of every agmarknet landing: hash the rows
+    * on `commodity_key` into the session's `spark.sql.shuffle.partitions`
+    * tasks, so each key lands in exactly one task (one file per key per
+    * write) and the writers run in parallel.
     *
-    * The pre-write `repartition(commodity_key)` matters at scale: without
-    * it every one of N shuffle tasks opens a file for every key it sees
-    * (N x keys small files per batch — the classic partitionBy
-    * small-files failure). With it each key lands in one task, one file
-    * per key per batch. A pathologically hot key would then bottleneck
-    * one task — split it further by salting the repartition columns
-    * (cf. q36_salted_join) if the corpus develops one.
+    * Without the shuffle every task opens a file for every key it sees
+    * (tasks x keys small files per write — the classic partitionBy
+    * small-files failure). The count is explicit because AQE coalesces a
+    * by-column shuffle of small data into one task, which then writes
+    * every partition alone; AQE leaves a shuffle with an explicit count
+    * as it is. A pathologically hot key still bottlenecks its one task —
+    * salt the key (cf. q36_salted_join) if the corpus develops one.
     */
-  def writePartitioned(df: DataFrame, outDir: String, mode: String = "append"): Unit =
-    df.repartition(col("commodity_key"))
-      .write.mode(mode).partitionBy("commodity_key").parquet(outDir)
+  private[graft] def byCommodity(df: DataFrame): DataFrame =
+    df.repartition(
+      df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt, col("commodity_key"))
 
-  /** Full batch pass: read -> normalize -> filter -> dedup -> write. */
+  /** A8/A10: value-partitioned parquet sink (dir per commodity_key), one
+    * file per key per write through [[byCommodity]]. */
+  def writePartitioned(df: DataFrame, outDir: String, mode: String = "append"): Unit =
+    byCommodity(df).write.mode(mode).partitionBy("commodity_key").parquet(outDir)
+
+  /** Full batch pass: read -> normalize -> filter -> dedup -> write.
+    * Returns the rows the landing holds. Under static overwrite that is
+    * what the write wrote, counted by an observation on the written frame;
+    * under dynamic overwrite (`spark.sql.sources.partitionOverwriteMode`)
+    * partitions this write did not touch survive, so the landing is read
+    * back. A plan Spark proves empty emits no metric, so a missing count
+    * falls back to the read-back too. */
   def runBatch(spark: SparkSession, csvPath: String, outDir: String): Long = {
     val cleaned = dedupNaturalKey(dropInvalid(normalize(readCsv(spark, csvPath))))
-    writePartitioned(cleaned, outDir, mode = "overwrite")
-    spark.read.parquet(outDir).count()
+    val written = Observation("landed")
+    writePartitioned(cleaned.observe(written, count(lit(1)).as("rows")), outDir, mode = "overwrite")
+    // the explicit schema makes an empty landing read as 0 rows, where
+    // inference fails, and spares the read-back a schema job
+    def landed = spark.read.schema(cleaned.schema).parquet(outDir).count()
+    if (spark.conf.get("spark.sql.sources.partitionOverwriteMode").equalsIgnoreCase("dynamic")) landed
+    else written.get.get("rows").fold(landed)(_.asInstanceOf[Long])
   }
 }

@@ -4,11 +4,11 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
 /** Small-files compaction for parquet directories — the maintenance
-  * counterpart of `AgriPipeline.writePartitioned`'s note: every
-  * micro-batch of a streaming ingest appends at least one file per
-  * touched partition, so a 3-hourly harvest (the reference's cadence,
-  * `run.yml:5-6`) accumulates ~2,900 files/partition/year and scan
-  * planning starts to dominate query time long before data volume does.
+  * counterpart of `AgriPipeline.byCommodity`'s note: every micro-batch of
+  * a streaming ingest appends one file per touched partition, so a
+  * 3-hourly harvest (the reference's cadence, `run.yml:5-6`) accumulates
+  * ~2,900 files/partition/year and scan planning starts to dominate query
+  * time long before data volume does.
   *
   * `compact` rewrites a directory into ~`targetFileBytes` files (per
   * partition dir when `partitionBy` is given), staging into a sibling

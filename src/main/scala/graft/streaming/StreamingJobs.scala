@@ -33,15 +33,17 @@ object StreamingJobs {
       .csv(srcDir)))
 
   /** B33/A1+A3: checkpointed file-source ingest of agmarknet-shaped CSV
-    * pages into the partitioned parquet layout. Restart-safe: the
-    * checkpoint tracks consumed files; the file sink commits atomically.
+    * pages into the partitioned parquet layout, one file per commodity
+    * per micro-batch (the batch landing's keyed-writer rule,
+    * `AgriPipeline.byCommodity`). Restart-safe: the checkpoint tracks
+    * consumed files; the file sink commits atomically.
     */
   def ingestStream(
       spark: SparkSession,
       srcDir: String,
       outDir: String,
       checkpointDir: String): StreamingQuery = {
-    agriCsvStream(spark, srcDir, "maxFilesPerTrigger" -> "8")
+    AgriPipeline.byCommodity(agriCsvStream(spark, srcDir, "maxFilesPerTrigger" -> "8"))
       .writeStream
       .format("parquet")
       .option("path", outDir)
@@ -62,7 +64,8 @@ object StreamingJobs {
     * containing an already-seen commodity lands in fresh
     * (commodity, new-batch) partitions instead of silently deleting the
     * earlier batch's rows — the failure mode of overwriting on
-    * commodity_key alone.
+    * commodity_key alone. Writers follow `AgriPipeline.byCommodity`: one
+    * file per (commodity, batch) partition.
     */
   def ingestForeachBatch(
       spark: SparkSession,
@@ -71,7 +74,7 @@ object StreamingJobs {
       checkpointDir: String): StreamingQuery = {
     agriCsvStream(spark, srcDir).writeStream
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        batch.withColumn("__batch_id", lit(batchId))
+        AgriPipeline.byCommodity(batch.withColumn("__batch_id", lit(batchId)))
           .write.mode("overwrite")
           .option("partitionOverwriteMode", "dynamic")
           .partitionBy("commodity_key", "__batch_id")

@@ -2,7 +2,10 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import graft.ingest.AgriPipeline
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 /** Layer-A parity over the reference-shaped fixture: RFC-4180 quoted
@@ -125,5 +128,101 @@ class AgriPipelineSpec extends SparkSpec {
     // partition column round-trips on read
     val back = spark.read.parquet(out)
     assert(back.filter(col("commodity_key") === "apple").count() === 1)
+    // the count comes from the write, and must be what the landing holds
+    assert(n === back.count())
+    assert(partFiles(out) === dirs.filter(_.startsWith("commodity_key=")).map(_ -> 1).toMap)
+  }
+
+  /** Part files per `commodity_key=*` dir under a landing. */
+  private def partFiles(out: String): Map[String, Int] =
+    new java.io.File(out).listFiles().filter(d => d.isDirectory && d.getName.startsWith("commodity_key="))
+      .map(d => d.getName -> d.listFiles().count(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")))
+      .toMap
+
+  /** One agmarknet page file holding `rows` after the header. */
+  private def page(prefix: String, rows: String*): String = {
+    val dir = java.nio.file.Paths.get(graft.Q.scratchDir(prefix))
+    val header = AgriPipeline.rawSchema.fieldNames.mkString(",")
+    Files.writeString(dir.resolve("page.csv"), (header +: rows).mkString("\n") + "\n")
+    dir.resolve("page.csv").toString
+  }
+
+  private def withOverwriteMode[T](mode: String)(body: => T): T = {
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, mode)
+    try body finally spark.conf.set(key, prev)
+  }
+
+  /** `runBatch` under a timeout: a count that waits on a metric Spark
+    * never emits must fail the test, not hang the suite. */
+  private def runBatchWithin(csv: String, out: String): Long = {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    Await.result(Future(AgriPipeline.runBatch(spark, csv, out)), 120.seconds)
+  }
+
+  test("runBatch under dynamic overwrite counts the partitions an earlier landing left") {
+    withOverwriteMode("dynamic") {
+      val out = graft.Q.scratchDir("agri_dynamic")
+      assert(runBatchWithin(fixture, out) === 7)
+      // tomato is new; every commodity of the first landing is absent
+      // from this batch and survives the overwrite
+      val tomato = page("agri_tomato", "Goa,North Goa,Mapusa,Tomato,Local,FAQ,02/01/2020,900,1100,1000,65")
+      val n = runBatchWithin(tomato, out)
+      assert(n === 8)
+      assert(n === spark.read.parquet(out).count())
+    }
+  }
+
+  test("runBatch lands a page set with no valid rows as 0 rows, on both overwrite modes") {
+    val headerOnly = page("agri_header_only")
+    val noModal = page("agri_no_modal",
+      "Goa,North Goa,Mapusa,Tomato,Local,FAQ,02/01/2020,900,1100,,65",
+      "Goa,North Goa,Mapusa,Onion,Local,FAQ,02/01/2020,900,1100,N/A,23")
+    for (mode <- Seq("static", "dynamic"); csv <- Seq(headerOnly, noModal)) withOverwriteMode(mode) {
+      assert(runBatchWithin(csv, graft.Q.scratchDir("agri_empty")) === 0, s"$mode: $csv")
+    }
+    // an empty page set never reads as 0 where the landing holds rows
+    withOverwriteMode("dynamic") {
+      val out = graft.Q.scratchDir("agri_empty_after")
+      assert(runBatchWithin(fixture, out) === 7)
+      assert(runBatchWithin(headerOnly, out) === 7)
+    }
+  }
+
+  test("runBatch under static overwrite starts no job after its write job") {
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val p = Option(e.properties)
+        def prop(k: String) = p.flatMap(q => Option(q.getProperty(k))).getOrElse("")
+        jobs.add(prop("spark.jobGroup.id") -> prop("spark.sql.execution.root.id"))
+      }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      val out = graft.Q.scratchDir("agri_jobs")
+      withOverwriteMode("static") {
+        sc.setJobGroup("agri-run-batch", "runBatch", interruptOnCancel = false)
+        try assert(AgriPipeline.runBatch(spark, fixture, out) === 7) finally sc.clearJobGroup()
+      }
+      // the bus is asynchronous: a marker job's start arrives after every
+      // job runBatch started
+      sc.setJobGroup("agri-marker", "marker", interruptOnCancel = false)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30000000000L
+      while (!jobs.asScala.exists(_._1 == "agri-marker")) {
+        assert(System.nanoTime() < deadline, "listener bus never delivered the marker job")
+        Thread.sleep(10)
+      }
+      // every job runBatch starts belongs to the one SQL execution of the
+      // write: no listing, schema or count job reads the landing back
+      val roots = jobs.asScala.filter(_._1 == "agri-run-batch").map(_._2).toSeq
+      assert(roots.nonEmpty)
+      assert(roots.distinct.size === 1 && roots.head.nonEmpty, s"job execution roots: $roots")
+    } finally sc.removeSparkListener(listener)
   }
 }

@@ -45,6 +45,24 @@ class StreamingSpec extends SparkSpec {
     assert(spark.read.parquet(out).count() === 8)
   }
 
+  test("one ingestStream micro-batch leaves one part file per commodity dir") {
+    val src = tmp("stream1_src")
+    val fixture = java.nio.file.Paths.get(getClass.getResource("/agri_fixture.csv").getPath)
+    // two pages are two source tasks, and both hold every commodity
+    Seq("page0.csv", "page1.csv").foreach(f => Files.copy(fixture, java.nio.file.Paths.get(s"$src/$f")))
+    val out = tmp("stream1_out")
+    val q = StreamingJobs.ingestStream(spark, src, out, tmp("stream1_ckpt"))
+    awaitDone(q)
+    assert(q.recentProgress.count(_.numInputRows > 0) === 1)
+    assert(spark.read.parquet(out).count() === 16)
+    val dirs = new java.io.File(out).listFiles().filter(d => d.isDirectory && d.getName.startsWith("commodity_key="))
+    assert(dirs.length === 5)
+    dirs.foreach { d =>
+      val parts = d.listFiles().map(_.getName).filter(n => n.startsWith("part-") && n.endsWith(".parquet"))
+      assert(parts.length === 1, s"${d.getName}: ${parts.mkString(", ")}")
+    }
+  }
+
   test("foreachBatch sink lands dynamic-overwrite partitions") {
     val src = tmp("fb_src")
     val fixture = getClass.getResource("/agri_fixture.csv").getPath
