@@ -30,14 +30,17 @@ object Session {
       "spark.sql.legacy.parquet.nanosAsLong" -> "true") ++ extra)
   }
 
-  /** The harness session, logging at WARN with the known-unavoidable
-    * warners muted (see [[graft.tools.HarnessLog]]). */
+  /** The harness session, with the graft extensions registered and
+    * logging at WARN with the known-unavoidable warners muted (see
+    * [[graft.tools.HarnessLog]]). */
   def harness(): SparkSession = {
     graft.tools.HarnessLog.quietUnavoidableStreamingWarns()
     val (master, confs) = settings(sys.env)
     val spark = confs.foldLeft(SparkSession.builder().master(master)) {
       case (b, (k, v)) => b.config(k, v)
     }.getOrCreate()
+    // before any file-system use: binds the forkless `file:` FileSystem
+    graft.plans.GraftExtensions.ensureRegistered(spark)
     spark.sparkContext.setLogLevel("WARN")
     // re-assert: setLogLevel resets the root level these loggers inherit
     graft.tools.HarnessLog.quietUnavoidableStreamingWarns()

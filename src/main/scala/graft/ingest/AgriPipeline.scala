@@ -26,7 +26,12 @@ import org.apache.spark.sql.types._
   * session's `spark.sql.shuffle.partitions` writer tasks. Partition count
   * on disk = commodity cardinality (~316 in the harvested corpus), one
   * parquet file per partition per landing. A batch landing runs no job
-  * after its write: its row count comes from the write itself.
+  * after its write: its row count comes from the write itself. On a
+  * local disk the per-file cost is creation: each parquet file, its
+  * `.crc` file and its directory get their permission set, which stock
+  * Hadoop does by forking `chmod` when its native library is absent;
+  * the `file:` FileSystem that `GraftExtensions.ensureRegistered` binds
+  * ([[graft.sinks.ForklessLocalFileSystem]]) sets it in-process.
   */
 object AgriPipeline {
 

@@ -136,15 +136,6 @@ object Layout {
   def zFilter(zCol: Column, ranges: Seq[(Long, Long)]): Column =
     ranges.map { case (lo, hi) => zCol.between(lo, hi) }.reduce(_ || _)
 
-  /** File-skipping bookkeeping: per-zone min/max/count stats over a
-    * cluster column (the footer stats a reader consults before opening a
-    * file). `zoneCol` is whatever identifies a written unit — a z-value
-    * prefix, a partition value, a file id. */
-  def zoneStats(df: DataFrame, zoneCol: Column, statCol: Column): DataFrame =
-    df.groupBy(zoneCol.as("zone"))
-      .agg(min(statCol).as("zmin"), max(statCol).as("zmax"),
-        count(lit(1)).as("zrows"))
-
   /** Evaluate how well the zone layout skips for `statCol BETWEEN lo AND
     * hi`: a zone is read iff its [zmin, zmax] intersects [lo, hi]. Returns
     * one row — zones/rows total vs. scanned vs. actually matching — the

@@ -24,6 +24,12 @@ import org.apache.spark.sql.internal.StaticSQLConf
   * SparkContext conf wins. Spark reads the key once, when its
   * `CodeGenerator` first initializes, so the sizing has no effect in a
   * JVM that compiled generated code before the hook first ran.
+  *
+  * It binds `fs.file.impl` to [[graft.sinks.ForklessLocalFileSystem]]
+  * in the SparkContext's Hadoop conf, unless something is bound there
+  * already. Hadoop caches one `file:` FileSystem per JVM, so the binding
+  * holds only where the hook runs before the first `file:` path is used;
+  * every harness session calls it right after `getOrCreate`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -165,8 +171,13 @@ object GraftExtensions {
   /** Idempotent late registration into an already-built session, via the
     * public `experimental` hooks for the rules and the strategy (since
     * extensions can only be installed at session build time), plus the
-    * generated-class cache sizing. */
+    * generated-class cache sizing and the `file:` FileSystem binding. */
   def ensureRegistered(spark: SparkSession): Unit = {
+    // First: the sessionState access below qualifies the warehouse path,
+    // which caches the JVM's `file:` FileSystem.
+    val hadoop = spark.sparkContext.hadoopConfiguration
+    if (hadoop.get("fs.file.impl") == null)
+      hadoop.set("fs.file.impl", classOf[graft.sinks.ForklessLocalFileSystem].getName)
     val cacheKey = StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key
     // a static key set in the SparkContext conf is copied into every session conf
     if (!spark.sessionState.conf.contains(cacheKey))
