@@ -5,16 +5,16 @@ import java.nio.file.attribute.PosixFilePermission
 
 import org.apache.hadoop.fs.{LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
-import org.apache.hadoop.io.nativeio.NativeIO
 
 /** Hadoop's checksummed local file system (`.crc` files and all), whose
   * raw layer sets a permission in-process. Without the native Hadoop
   * library, `RawLocalFileSystem.setPermission` forks a `chmod` for every
   * file, `.crc` file and directory it creates: three processes per
   * landed parquet file. This sets the same mode bits (`toShort`, as
-  * stock does) with one `java.nio` call. It defers to stock where the
-  * native library is loaded, for a sticky bit (which `java.nio` cannot
-  * set) and on a file store without POSIX attributes.
+  * stock does) with one `java.nio` call: one syscall, as where the
+  * native library is loaded. It defers to stock for a sticky bit
+  * (which `java.nio` cannot set) and on a file store without POSIX
+  * attributes.
   * [[graft.plans.GraftExtensions.ensureRegistered]] binds it as
   * `fs.file.impl`. */
 class ForklessLocalFileSystem extends LocalFileSystem(new ForklessLocalFileSystem.Raw) {
@@ -30,7 +30,7 @@ object ForklessLocalFileSystem {
 
   private final class Raw extends RawLocalFileSystem {
     override def setPermission(p: Path, permission: FsPermission): Unit = {
-      if (NativeIO.isAvailable || permission.getStickyBit) super.setPermission(p, permission)
+      if (permission.getStickyBit) super.setPermission(p, permission)
       else {
         val mode = permission.toShort
         val bits = java.util.EnumSet.noneOf(classOf[PosixFilePermission])

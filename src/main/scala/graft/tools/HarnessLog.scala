@@ -13,7 +13,7 @@ package graft.tools
   */
 object HarnessLog {
 
-  private val UnavoidableStreamingWarners = Seq(
+  private[graft] val UnavoidableStreamingWarners = Seq(
     "org.apache.spark.sql.execution.streaming.runtime.ResolveWriteToStream",
     "org.apache.spark.sql.execution.streaming.runtime.MicroBatchExecution",
     "org.apache.spark.sql.execution.streaming.runtime.AsyncProgressTrackingMicroBatchExecution",

@@ -8,8 +8,10 @@ import scala.jdk.CollectionConverters._
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path}
 import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.logging.log4j.core.LoggerContext
 
 import graft.sinks.ForklessLocalFileSystem
+import graft.tools.HarnessLog
 
 /** The `file:` FileSystem that sets permissions through `java.nio`:
   * bound in every harness session, and leaving the same mode bits on
@@ -68,6 +70,24 @@ class ForklessLocalFileSystemSpec extends SparkSpec {
     org.apache.hadoop.util.ReflectionUtils.newInstance(
       FileSystem.getFileSystemClass("file", new Configuration()), conf), conf)
 
+  /** Runs `body`, then puts back the root log level and the loggers
+    * `Session.harness` mutes as they were, so later suites log as before. */
+  private def keepingLogLevels[A](body: => A): A = {
+    val ctx = LoggerContext.getContext(false)
+    val conf = ctx.getConfiguration
+    val root = conf.getRootLogger.getLevel
+    val own = HarnessLog.UnavoidableStreamingWarners.map(n => n -> Option(conf.getLoggers.get(n)).map(_.getLevel))
+    try body
+    finally {
+      conf.getRootLogger.setLevel(root)
+      own.foreach {
+        case (n, Some(level)) => conf.getLoggerConfig(n).setLevel(level)
+        case (n, None) => conf.removeLogger(n)
+      }
+      ctx.updateLoggers()
+    }
+  }
+
   test("the test session's file: FileSystem is the forkless one") {
     val fs = fileFs(spark)
     assert(fs.isInstanceOf[ForklessLocalFileSystem], fs.getClass.getName)
@@ -80,10 +100,12 @@ class ForklessLocalFileSystemSpec extends SparkSpec {
     // the harness re-applies its runtime confs to this shared session
     val saved = Session.settings(sys.env)._2.map(_._1).distinct.map(k => k -> spark.conf.getOption(k))
     hadoop.unset(FileImpl)
-    try {
+    try keepingLogLevels {
       val s = Session.harness()
       assert(s.sparkContext.hadoopConfiguration.get(FileImpl) === classOf[ForklessLocalFileSystem].getName)
-      assert(fileFs(s).isInstanceOf[ForklessLocalFileSystem])
+      // a new instance: the JVM's cached `file:` FileSystem predates this test
+      val fs = FileSystem.newInstance(new URI("file:///"), s.sessionState.newHadoopConf())
+      try assert(fs.isInstanceOf[ForklessLocalFileSystem], fs.getClass.getName) finally fs.close()
     } finally {
       bound.foreach(hadoop.set(FileImpl, _))
       saved.foreach { case (k, v) =>
