@@ -29,8 +29,8 @@ import graft.functions.GraftFunctions.tokens
   * The whole round is replayable in SQL (the q159 oracle unrolls
   * iterations as CTEs with this exact formulation), so learned merges
   * verify cross-engine, count-exact. The corpus is touched ONCE (word
-  * frequency dictionary); all rounds run over the vocab table, which is
-  * persisted and replaced per round.
+  * frequency dictionary); all rounds run over the vocab table, which
+  * [[Rounds.cut]] checkpoints per round.
   */
 object Bpe {
 
@@ -102,8 +102,8 @@ object Bpe {
     *
     * The returned vocab is a driver-built local relation on the local
     * route (so downstream dictionary joins broadcast for free) and a
-    * persisted distributed frame otherwise; `unpersist()` on the local
-    * result is a harmless no-op. */
+    * checkpointed distributed frame otherwise; neither holds a session
+    * cache entry, so `unpersist()` on either is a harmless no-op. */
   def train(vocab0: DataFrame, iters: Int): (Seq[(Int, String, String, Long)], DataFrame) = {
     val gate = new LocalTier(LocalWordLimit)
     val v = gate.cache(vocab0)
@@ -126,15 +126,14 @@ object Bpe {
         val r = best(0)
         val (a, b, cnt) = (r.getString(0), r.getString(1), r.getLong(2))
         merges += ((it, a, b, cnt))
-        val next = applyMerge(ex, a, b).persist()
-        next.count() // materialize before dropping the previous round
-        if (vocab eq v) gate.release() else vocab.unpersist()
-        vocab = next
+        vocab = Rounds.cut(applyMerge(ex, a, b))
+        gate.release() // no later round reads the input cache
       } else {
         it = iters // no pairs left (all words are single symbols)
       }
       it += 1
     }
+    gate.release() // when no round merged, the input is returned uncached
     (merges.toSeq, vocab)
   }
 

@@ -20,25 +20,26 @@ import org.apache.spark.sql.types.{DecimalType, LongType}
   * in practice 2-3 rounds close.
   *
   * Scale contract: state is one (id, comp) row per node — never
-  * collected; each round materializes via localCheckpoint to cut lineage
-  * (without it, round k's plan embeds all k-1 predecessors and the
-  * optimizer re-plans a growing tree). Labels only ever decrease
-  * (everything is a `least`), so convergence is detected by comparing
-  * the label sum across rounds — one scan-stage aggregate over the
-  * checkpointed state, no join against the previous round. The sum is
+  * collected; each round is cut by [[Rounds.cutWith]] (without a cut,
+  * round k's plan embeds all k-1 predecessors and the optimizer
+  * re-plans a growing tree). Labels only ever decrease (everything is a
+  * `least`), so convergence is detected by comparing the label sum
+  * across rounds — an aggregate taken by the job that materializes the
+  * round's state, no join against the previous round. The sum is
   * accumulated as DECIMAL(38,0) so billions of 64-bit ids can't wrap.
   */
 object ConnectedComponents {
 
   /** Size-guarded routing bound (the PageRank.runLocal / Louvain
     * posture): a (nodes, edges) pair inside the bound iterates on the
-    * driver at zero per-round job cost — each distributed round is ~4
-    * fixed-cost jobs (neighbor-min shuffle, jump join, checkpoint,
-    * label-sum probe) whatever the data volume. The local tier replays
-    * the IDENTICAL iteration (neighbor-min + pointer jump + label-sum
-    * convergence + the same maxIter cap), so even a truncated
-    * non-converged state matches bit-for-bit (LocalTierSpec pins the
-    * tiers); past the bound the join plan runs unchanged. */
+    * driver at zero per-round job cost — each distributed round is ~3
+    * fixed-cost jobs (neighbor-min shuffle, jump join, and the job that
+    * materializes the round and sums its labels) whatever the data
+    * volume. The local tier replays the IDENTICAL iteration (neighbor-min
+    * + pointer jump + label-sum convergence + the same maxIter cap), so
+    * even a truncated non-converged state matches bit-for-bit
+    * (LocalTierSpec pins the tiers); past the bound the join plan runs
+    * unchanged. */
   private val LocalEdgeLimit = 4L << 20
 
   /** Components of the undirected graph `edges` (columns a, b) over the
@@ -76,11 +77,9 @@ object ConnectedComponents {
     // InMemoryTable the gate count already materialized, so the expensive
     // edge derivation runs exactly once on either routing outcome.
     val sym = gate.cache(EdgeIntake.symmetrize(pe))
-    def labelSum(df: DataFrame): java.math.BigDecimal =
-      df.agg(sum(col("comp").cast(DecimalType(38, 0)))).head().getDecimal(0)
-    var labels = pn.select(col(idCol).as("id"), col(idCol).as("comp"))
-      .localCheckpoint()
-    var prevSum = labelSum(labels)
+    val labelSum = sum(col("comp").cast(DecimalType(38, 0)))
+    var (labels, prevSum) = Rounds.cutWith[java.math.BigDecimal](
+      pn.select(col(idCol).as("id"), col(idCol).as("comp")), labelSum)
     var iter = 0
     var converged = false
     while (!converged && iter < maxIter) {
@@ -98,12 +97,11 @@ object ConnectedComponents {
         .persist()
       // (2) pointer jump: comp := comp(comp) — halves label-chain depth,
       //     turning O(diameter) rounds into O(log diameter).
-      val next = stepped.as("l")
+      val (next, s) = Rounds.cutWith[java.math.BigDecimal](stepped.as("l")
         .join(stepped.select(col("id").as("comp"), col("comp").as("jump")).as("r"), Seq("comp"), "left")
-        .select(col("id"), least(col("comp"), coalesce(col("jump"), col("comp"))).as("comp"))
-        .localCheckpoint()
+        .select(col("id"), least(col("comp"), coalesce(col("jump"), col("comp"))).as("comp")),
+        labelSum)
       stepped.unpersist()
-      val s = labelSum(next)
       converged = s.compareTo(prevSum) == 0
       prevSum = s
       labels = next

@@ -37,11 +37,11 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * Scale shape per round: one partial-agg'd count by id over the
   * remaining (sampled) pairs, a top-1 TakeOrdered (never a global sort),
   * and one anti-join that removes the newly-covered elements — the frame
-  * shrinks-or-holds monotonically. Per-round state is cut with EAGER
-  * localCheckpoint (the LabelProp/KCore contract) so superseded rounds'
-  * blocks are GC-swept instead of accumulating in the shared-session
-  * CacheManager. The per-round driver touchpoint is a SINGLE row (the
-  * argmax), same bounded-collect posture as PageRank/BPE's driver tiers.
+  * shrinks-or-holds monotonically. Per-round state is cut by
+  * [[Rounds.cut]] (the LabelProp/KCore contract), so superseded rounds
+  * pin nothing in the session cache. The per-round driver touchpoint is
+  * a SINGLE row (the argmax), same bounded-collect posture as
+  * PageRank/BPE's driver tiers.
   * Rounds are FIXED (caller-chosen K), so run time never becomes
   * data-dependent.
   *
@@ -77,7 +77,7 @@ object Coverage {
     * posture): a deduped membership frame inside the bound selects on
     * the driver at zero per-round job cost — each distributed round is
     * ~3 fixed-cost jobs (gain aggregate + top-1 collect + anti-join
-    * checkpoint) whatever the data volume. The local tier replays the
+    * cut) whatever the data volume. The local tier replays the
     * identical greedy (same hash60 sampling via hash60Local, same
     * (gain desc, id asc) argmax, same exact-fallback rule) for LONG ids
     * (LocalTierSpec pins the tiers); past the bound the aggregate plan
@@ -88,15 +88,15 @@ object Coverage {
       rounds: Int, samplePpm: Option[Long]): DataFrame = {
     val spark = pairs.sparkSession
     val idType = pairs.schema(idCol).dataType
-    // The gate must not add a pass at scale: round 0's eager checkpoint
-    // of the deduped membership existed anyway, so checkpoint FIRST (one
+    // The gate must not add a pass at scale: round 0's cut of the
+    // deduped membership existed anyway, so cut FIRST (one
     // materialization, exactly as before), then gate on the materialized
     // blocks; both the local-tier collect and the distributed rounds
-    // read the same blocks. (The first cut persistOnce'd + counted
-    // pre-checkpoint — an extra cold materialization of the 6M string
+    // read the same blocks. (The first version persistOnce'd + counted
+    // before the cut — an extra cold materialization of the 6M string
     // rows at the 10x point: q226 big_s 9.6 -> 13.2s. Restored.)
-    var uncovered = pairs.select(col(idCol).as("id"), col(elemCol).as("elem"))
-      .distinct().localCheckpoint(true)
+    var uncovered = Rounds.cut(
+      pairs.select(col(idCol).as("id"), col(elemCol).as("elem")).distinct())
     // the driver tier keys elements in hash maps and is Long-id-specialized
     new LocalTier(LocalRowLimit, Seq(pairs.schema(elemCol).dataType),
       supported = idType == LongType)
@@ -126,8 +126,7 @@ object Coverage {
         total += g
         picks += Row(r.toLong, id, g, total)
         val covered = uncovered.filter(col("id") === lit(id)).select("elem")
-        uncovered = uncovered.join(covered, Seq("elem"), "left_anti")
-          .localCheckpoint(true)
+        uncovered = Rounds.cut(uncovered.join(covered, Seq("elem"), "left_anti"))
       }
     }
     spark.createDataFrame(

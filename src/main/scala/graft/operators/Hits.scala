@@ -30,9 +30,9 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * Scale shape per half-round: one equi-join of the edge frame against
   * the bounded per-node score frame and one partial-agg'd sum by node,
   * plus a one-row max attach (broadcast) — never a window, never a
-  * cartesian. Per-round state is cut with EAGER localCheckpoint (the
-  * LabelProp contract: each state frame has two consumers in the next
-  * round's DAG).
+  * cartesian. Per-round state is cut by [[Rounds.cut]] (the LabelProp
+  * contract: each state frame has two consumers in the next round's
+  * DAG).
   *
   * Returns `(node, hub_em, auth_em)` — scores on the 10^6 grid; nodes
   * with no outgoing edges have hub 0, no incoming edges auth 0 (they
@@ -44,7 +44,7 @@ object Hits {
     * posture): a deduped edge list inside the bound iterates on the
     * driver at zero per-half-round job cost — each distributed iteration
     * is ~6 fixed-cost jobs (two join+sum halves, two 1-row max attaches,
-    * two eager checkpoints) whatever the data volume. The local tier
+    * two cuts) whatever the data volume. The local tier
     * computes the identical scaled-integer recurrence, including the
     * ×10^6 wrap refusal (OperatorsSpec pins local ≡ distributed); past
     * the bound the join plan runs unchanged — at 100 TB that is the
@@ -53,34 +53,32 @@ object Hits {
 
   def run(edges: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1 && iters <= 8, s"Hits wants 1..8 iterations, got $iters")
-    // The gate MUST NOT add a pass at scale: the distributed tier eagerly
-    // checkpointed the distinct anyway, so checkpoint FIRST (one
-    // materialization, exactly as before), then gate on the materialized
-    // blocks (cheap) — the local-tier collect also reads blocks.
-    // (The first cut persistOnce'd + counted pre-checkpoint, which cost
-    // the 10x probe an extra cold materialization of the 4.5M-row
-    // distinct: q239 big_s 9.5 -> 14.4s. This shape restores it.)
-    val e = edges.select(col("src"), col("dst")).distinct().localCheckpoint(true)
+    // The gate MUST NOT add a pass at scale: the distributed tier cut
+    // the distinct anyway, so cut FIRST (one materialization, exactly as
+    // before), then gate on the materialized blocks (cheap) — the
+    // local-tier collect also reads blocks. (The first version
+    // persistOnce'd + counted before the cut, which cost the 10x probe an
+    // extra cold materialization of the 4.5M-row distinct: q239 big_s
+    // 9.5 -> 14.4s. This shape restores it.)
+    val e = Rounds.cut(edges.select(col("src"), col("dst")).distinct())
     val nodeType = edges.schema("src").dataType
     new LocalTier(LocalEdgeLimit, Seq(nodeType, edges.schema("dst").dataType))
       .collect(e).foreach { case Seq(arr) =>
         return runLocal(edges.sparkSession, arr.map(r => (r.get(0), r.get(1))), nodeType, iters)
       }
-    val nodes = e.select(col("src").as("node"))
-      .unionByName(e.select(col("dst").as("node"))).distinct()
-      .localCheckpoint(true)
-    var hub = nodes.select(col("node"), lit(1000000L).as("s"))
-      .localCheckpoint(true)
+    val nodes = Rounds.cut(e.select(col("src").as("node"))
+      .unionByName(e.select(col("dst").as("node"))).distinct())
+    var hub = Rounds.cut(nodes.select(col("node"), lit(1000000L).as("s")))
     var auth = hub
     for (_ <- 1 to iters) {
       // authority update: sum incoming hub scores, L∞-normalize floored
       val aRaw = e.join(hub.select(col("node").as("src"), col("s")), "src")
         .groupBy(col("dst").as("node")).agg(sum("s").as("raw"))
-      auth = normalize(aRaw).localCheckpoint(true)
+      auth = Rounds.cut(normalize(aRaw))
       // hub update from the NEW authorities (the standard half-step order)
       val hRaw = e.join(auth.select(col("node").as("dst"), col("s")), "dst")
         .groupBy(col("src").as("node")).agg(sum("s").as("raw"))
-      hub = normalize(hRaw).localCheckpoint(true)
+      hub = Rounds.cut(normalize(hRaw))
     }
     nodes
       .join(hub.select(col("node"), col("s").as("hub_em")), Seq("node"), "left")

@@ -20,13 +20,10 @@ import org.apache.spark.sql.types.{BooleanType, LongType, StructField, StructTyp
   *
   * Scale shape per round: one partial-agg'd degree count plus two
   * semi-joins on the node key — all key-equi, no windows; the edge frame
-  * shrinks-or-holds monotonically. Per-round state is cut with EAGER
-  * localCheckpoint (the LabelProp contract): the round's frame has two
-  * consumers (the degree aggregate and the next round's semi-joins),
-  * and unlike persistOnce nothing accumulates in the shared-session
-  * CacheManager across rounds — superseded round frames become
-  * unreachable and their blocks are GC-swept, instead of pinning up to
-  * 16 cached frames for the session's lifetime.
+  * shrinks-or-holds monotonically. Per-round state is cut by
+  * [[Rounds.cut]]: the round's frame has two consumers (the degree
+  * aggregate and the next round's semi-joins), and superseded rounds
+  * pin nothing in the session cache.
   *
   * Returns the surviving per-node degree plus the fixpoint witness
   * `(node, deg, converged)` (empty graph => empty output).
@@ -36,7 +33,7 @@ object KCore {
   /** Size-guarded routing bound (the PageRank.runLocal / Hits posture):
     * an edge list inside the bound peels on the driver at zero per-round
     * job cost — each distributed round is ~3 fixed-cost jobs (degree
-    * aggregate + two semi-joins + eager checkpoint) whatever the data
+    * aggregate + two semi-joins + cut) whatever the data
     * volume. The local tier computes the identical fixed-round peel
     * (OperatorsSpec pins local ≡ distributed); past the bound the
     * semi-join plan runs unchanged — at 100 TB that is the only tier. */
@@ -61,18 +58,15 @@ object KCore {
     gate.collect(ab).foreach { case Seq(arr) =>
       return runLocal(edges.sparkSession, arr.map(r => (r.get(0), r.get(1))), aType, k, rounds)
     }
-    var sym = EdgeIntake.symmetrize(ab).localCheckpoint(true)
-    gate.release() // sym is materialized (eager checkpoint)
+    var sym = Rounds.cut(EdgeIntake.symmetrize(ab))
+    gate.release() // sym is materialized
     for (_ <- 1 to rounds) {
-      val keep = sym.groupBy("src").agg(count(lit(1)).as("c"))
-        .filter(col("c") >= k).select(col("src").as("node"))
-        .localCheckpoint(true)
-      sym = sym.join(keep, sym("src") === keep("node"), "left_semi")
-        .join(keep, sym("dst") === keep("node"), "left_semi")
-        .localCheckpoint(true)
+      val keep = Rounds.cut(sym.groupBy("src").agg(count(lit(1)).as("c"))
+        .filter(col("c") >= k).select(col("src").as("node")))
+      sym = Rounds.cut(sym.join(keep, sym("src") === keep("node"), "left_semi")
+        .join(keep, sym("dst") === keep("node"), "left_semi"))
     }
-    val deg = sym.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
-      .localCheckpoint(true)
+    val deg = Rounds.cut(sym.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg")))
     val conv = deg.agg(coalesce(min("deg") >= k, lit(true)).as("converged"))
     deg.crossJoin(broadcast(conv))
   }

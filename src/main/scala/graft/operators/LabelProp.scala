@@ -19,7 +19,7 @@ import org.apache.spark.sql.types.{LongType, NumericType, StructField, StructTyp
   * shuffles (vote counts grouped by (node, label) — bounded by the
   * label-set size per node — then an argmax struct-max per node) plus
   * one state join; state is one row per node (the [[ConnectedComponents]]
-  * scale contract), lineage cut per round via eager localCheckpoint.
+  * scale contract), lineage cut per round by [[Rounds.cut]].
   */
 object LabelProp {
 
@@ -27,7 +27,7 @@ object LabelProp {
     * a graph whose edge AND node frames fit on the driver propagates in
     * memory at zero per-round job cost — each distributed round is ~3
     * fixed-cost jobs (vote aggregate, argmax aggregate, state join +
-    * eager checkpoint) whatever the data volume. The local tier computes
+    * cut) whatever the data volume. The local tier computes
     * the identical synchronous clamped-seed recurrence for LONG labels
     * (OperatorsSpec pins local ≡ distributed; other label types and
     * null/duplicate-key inputs keep the distributed tier's join
@@ -78,18 +78,11 @@ object LabelProp {
     val sym = gate.cache(EdgeIntake.symmetrize(pe))
     // State carries the clamped seed alongside the current label so each
     // round is ONE left join against the vote winners — not a re-join of
-    // nodes x seeds x previous x pick. Checkpoints are EAGER: every
-    // round's state has TWO consumers in the final action's DAG — the
-    // vote derivation and the next state join — and with a lazy
-    // checkpoint those branches race to compute the same partitions
-    // concurrently, doing each round's work twice and landing duplicate
-    // block-puts. One driver-blocking job per round buys single
-    // evaluation. (ConnectedComponents' checkpoint is lazy: the
-    // label-sum action right after it materializes it before a second
-    // consumer reads it.)
-    var state = pn.join(ps, Seq("node"), "left")
-      .select(col("node"), col("lbl").as("seed_lbl"), col("lbl"))
-      .localCheckpoint(true)
+    // nodes x seeds x previous x pick. Every round's state has two
+    // consumers (the vote derivation and the next state join) and no
+    // driver scalar, so it takes the eager cut.
+    var state = Rounds.cut(pn.join(ps, Seq("node"), "left")
+      .select(col("node"), col("lbl").as("seed_lbl"), col("lbl")))
     // The fast single-aggregate tie-break (max(struct(c, -lbl))) only
     // negates NUMERIC labels; for any other orderable label type (string
     // domain tags, dates) Spark's implicit double-cast of the unary minus
@@ -114,25 +107,17 @@ object LabelProp {
           .agg(max(struct(col("c"), (-col("lbl")).as("neg"))).as("m"))
           .select(col("node"), (-col("m.neg")).as("voted"))
         else {
-          // checkpoint the vote frame EAGERLY: its two consumers (both
-          // join sides) otherwise race to compute the same lazy
-          // checkpoint partitions concurrently — doing the edge-state
-          // join twice and landing duplicate block-puts (the
-          // "Block rdd_N already exists" WARN). Unlike the single-consumer
-          // state frame below, a two-consumer frame is strictly cheaper
-          // materialized up front; unlike persistOnce, nothing
-          // accumulates in the CacheManager across rounds
-          val v = votes.localCheckpoint(true)
+          // the vote frame feeds both join sides: cut it once
+          val v = Rounds.cut(votes)
           v.join(v.groupBy("node").agg(max(col("c")).as("c")), Seq("node", "c"))
             .groupBy("node")
             .agg(min(col("lbl")).as("voted"))
         }
-      state = state.join(pick, Seq("node"), "left")
+      state = Rounds.cut(state.join(pick, Seq("node"), "left")
         .select(col("node"), col("seed_lbl"),
-          coalesce(col("seed_lbl"), col("voted"), col("lbl")).as("lbl"))
-        .localCheckpoint(true)
+          coalesce(col("seed_lbl"), col("voted"), col("lbl")).as("lbl")))
     }
-    // every state round is an eager checkpoint, so nothing downstream
+    // every state round is a materialized cut, so nothing downstream
     // re-reads sym or the gate caches — release them (guide §5)
     gate.release()
     state.select(col("node"), col("lbl"))

@@ -57,8 +57,9 @@ import org.apache.spark.sql.functions._
   * rounds: that state is a fixed point for both directions, every
   * further round is the identity, and a fixed-round CTE oracle of any
   * longer unroll reproduces the early-exited state verbatim. The
-  * moveless test is one cheap job over the round's already-checkpointed
-  * state (the SSSP drained-frontier posture); dead rounds cost nothing.
+  * moveless test is the round's moved count, taken by the job that
+  * materializes the round's state (the SSSP drained-frontier posture);
+  * dead rounds cost nothing.
   *
   * == Phase 2: contraction ([[communitiesMultiLevel]]) ==
   *
@@ -76,9 +77,9 @@ import org.apache.spark.sql.functions._
   * Scale shape: per round ONE (node, com) vote sum off the symmetrized
   * edge list (partial-agg'd, bounded by the distinct neighbor-community
   * count per node), one |communities|-row Σtot aggregate, one argmax
-  * aggregate, one state join and one moveless probe — the
+  * aggregate, and one state join whose cut counts the moved nodes — the
   * LabelProp/KCore posture. State is one row per node, lineage cut per
-  * round via eager localCheckpoint; m rides a 1-row broadcast.
+  * round by [[Rounds]]; m rides a 1-row broadcast.
   * Contraction is one join + one grouped sum; each level's graph is no
   * larger than the last. No driver-side state, no all-pairs anything.
   *
@@ -164,11 +165,10 @@ object Louvain {
       val (st, conv) = localMoves(ew, maxRoundsPerLevel)
       allConverged = allConverged && conv
       mapping =
-        if (lvl == 1) st.localCheckpoint(true)
-        else mapping.select(col("node"), col("com").as("__prev"))
+        if (lvl == 1) st // already a cut round state
+        else Rounds.cut(mapping.select(col("node"), col("com").as("__prev"))
           .join(st.select(col("node").as("__prev"), col("com")), "__prev")
-          .select(col("node"), col("com"))
-          .localCheckpoint(true)
+          .select(col("node"), col("com")))
       if (lvl < levels) {
         val stA = st.select(col("node").as("a"), col("com").as("__ca"))
         val stB = st.select(col("node").as("b"), col("com").as("__cb"))
@@ -178,7 +178,7 @@ object Louvain {
           .groupBy("a", "b").agg(sum("w").as("w"))
       }
     }
-    // mapping is an eager checkpoint per level and the last contraction
+    // mapping is a materialized cut per level and the last contraction
     // has been consumed by the final localMoves — the level-1 caches are
     // never read again (guide §5)
     gate.release()
@@ -195,13 +195,13 @@ object Louvain {
   /** Size-guarded routing bound (the PageRank.runLocal posture): a
     * level whose EDGE LIST fits comfortably on the driver iterates in
     * memory at zero per-round job cost — each distributed round is ~3
-    * fixed-cost jobs (votes/sigma/argmax + checkpoint + moveless
-    * probe) whatever the data volume, which made an 8-round two-level
-    * run the most expensive bench entry on a graph of a few thousand
-    * edges. Contracted levels are ≤ the previous level by construction,
-    * so level 2+ of any graph that contracts well lands here even when
-    * level 1 ran distributed. Both tiers compute the identical integer
-    * recurrence (GraphSpec pins local ≡ distributed on random weighted
+    * fixed-cost jobs (votes/sigma/argmax + the job that materializes
+    * the round and counts its moves) whatever the data volume, which
+    * made an 8-round two-level run the most expensive bench entry on a
+    * graph of a few thousand edges. Contracted levels are ≤ the previous
+    * level by construction, so level 2+ of any graph that contracts well
+    * lands here even when level 1 ran distributed. Both tiers compute
+    * the identical integer recurrence (GraphSpec pins local ≡ distributed on random weighted
     * graphs, the PageRank contract). */
   private val LocalEdgeLimit = 4L << 20
 
@@ -227,8 +227,7 @@ object Louvain {
         .select(col("a").as("node"), (col("w") * 2).as("w")))
       .groupBy("node").agg(sum("w").as("k")))
 
-    var state = deg.select(col("node"), col("node").as("com"))
-      .localCheckpoint(true)
+    var state = Rounds.cut(deg.select(col("node"), col("node").as("com")))
     var converged = false
     var prevMoveless = false
     var r = 1
@@ -272,18 +271,16 @@ object Louvain {
         if (r % 2 == 1) col("picked") < col("own") else col("picked") > col("own")
       val applied: Column =
         when(progressive, col("picked")).otherwise(col("own"))
-      val next = pick
-        .select(col("node"), applied.as("com"),
-          (applied =!= col("own")).as("__moved"))
-        .localCheckpoint(true)
-      // moveless probe: one bounded job over the checkpointed round state
-      val moveless = next.filter(col("__moved")).isEmpty
-      state = next.drop("__moved")
+      val (next, moved) = Rounds.cutWith[Long](
+        pick.select(col("node"), applied.as("com"), col("own")),
+        count(when(col("com") =!= col("own"), 1)))
+      val moveless = moved == 0L
+      state = next.drop("own")
       if (moveless && prevMoveless) converged = true
       prevMoveless = moveless
       r += 1
     }
-    // every round's state is an eager checkpoint — the returned frame
+    // every round's state is a materialized cut — the returned frame
     // never re-reads the edge/adjacency/degree caches (guide §5)
     gate.release()
     (state.select(col("node"), col("com")), converged)

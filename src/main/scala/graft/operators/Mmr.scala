@@ -27,9 +27,10 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * integer weights keep the algebra on int64.
   *
   * Scale shape (the Coverage contract): the grid view, the intake
-  * guards and the relevance dot are computed ONCE and localCheckpoint'd
-  * (eager — one corpus scan); each of the ≤ k rounds is then one scan
-  * of that checkpointed frame with the picked vectors folded in as
+  * guards and the relevance dot are computed ONCE and cut by
+  * [[Rounds.cut]] (eager — one corpus scan); each of the ≤ k rounds is
+  * then one scan of that checkpointed frame with the picked vectors
+  * folded in as
   * LITERAL arrays (a ≤ k·dims constant — the broadcast of a k-row dim
   * table collapsed into the plan), a top-1 TakeOrderedAndProject (never
   * a global sort), and a SINGLE row crossing to the driver. No shuffle
@@ -99,13 +100,12 @@ object Mmr {
     // silently merge two vectors into one pick slot)
     val idAudit = cands.select(col(idCol).as("id"))
       .agg((count(lit(1)) === count_distinct(col("id"))).as("ids_ok"))
-    val base = cands
+    val base = Rounds.cut(cands
       .select(col(idCol).as("id"), grid(col(vecCol)).as("g"))
       .crossJoin(broadcast(idAudit))
       .withColumn("rel", Guards(col("ids_ok"), guardedRel,
         Guards.msg("mmr", lit("duplicate candidate ids on intake"))))
-      .select("id", "g", "rel")
-      .localCheckpoint(true)
+      .select("id", "g", "rel"))
 
     val picks = scala.collection.mutable.ArrayBuffer.empty[Row]
     var selected = List.empty[Array[Long]] // picked grid vectors, newest first

@@ -25,8 +25,8 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * that derived the edges. Larger graphs run the distributed loop: per
   * iteration, scores ⋈ out-degrees ⋈ edges shuffled on src, one
   * partial-agg'd shuffle on dst, left-join back to the node set; each
-  * round's result is cached and the previous unpersisted so the plan
-  * does not grow with iterations. Both routes compute the identical
+  * round's scores are cut by [[Rounds.cut]], so the plan does not grow
+  * with iterations. Both routes compute the identical
   * integer recurrence, and the global rank is the personalized one
   * with every node seeded.
   *
@@ -124,7 +124,7 @@ object PageRank {
         iters, scale, dampNum, dampDen)
     case _ =>
       val out = runDistributed(e, gate, seedSet, iters, scale, dampNum, dampDen)
-      gate.release() // the final scores are cached and materialized
+      gate.release() // the final scores are checkpointed
       out
   }
 
@@ -185,7 +185,6 @@ object PageRank {
     var scores = nodes
       .select(col("node"),
         when(col("is_seed"), lit(scale / k)).otherwise(lit(0L)).as("score"))
-    var previous: Option[DataFrame] = None
     for (_ <- 0 until iters) {
       val contrib = e
         .join(scores.withColumnRenamed("node", "src"), "src")
@@ -195,16 +194,11 @@ object PageRank {
         .select(col("dst"),
           expr(s"(score * $dampNum) div $dampDen div outdeg").as("c"))
         .groupBy("dst").agg(sum(col("c")).as("in_mass"))
-      val next = nodes
+      scores = Rounds.cut(nodes
         .join(contrib.withColumnRenamed("dst", "node"), Seq("node"), "left")
         .select(col("node"),
           (when(col("is_seed"), lit(base)).otherwise(lit(0L)) +
-            coalesce(col("in_mass"), lit(0L))).as("score"))
-        .cache()
-      next.count() // materialize before unpersisting the parent
-      previous.foreach(_.unpersist())
-      previous = Some(next)
-      scores = next
+            coalesce(col("in_mass"), lit(0L))).as("score")))
     }
     scores
   }

@@ -139,7 +139,7 @@ object PrefixFilterJoin {
     // prefix filter is lossless under ANY total element order (the
     // pigeonhole needs only a consistent order; rarity still drives
     // selectivity since the rank stays (df, elem)); outputs carry only
-    // set ids and counts. The dict is eagerly localCheckpoint'd so
+    // set ids and counts. The dict is cut eagerly ([[Rounds.cut]]) so
     // monotonically_increasing_id assigns ids exactly once. ONE shared
     // dictionary over probe ∪ corpus: probe-only elements must still get
     // an id — they carry szx weight and simply intersect nothing,
@@ -149,10 +149,9 @@ object PrefixFilterJoin {
     val st = org.apache.spark.sql.types.StringType
     val (px, py) =
       if (px0.schema("elem").dataType == st && py0.schema("elem").dataType == st) {
-        val dict = px0.select(col("elem")).unionByName(py0.select(col("elem")))
+        val dict = Rounds.cut(px0.select(col("elem")).unionByName(py0.select(col("elem")))
           .distinct()
-          .withColumn("eid", monotonically_increasing_id())
-          .localCheckpoint(true)
+          .withColumn("eid", monotonically_increasing_id()))
         (graft.Q.persistOnce(px0.join(dict, "elem")
             .select(col("xid"), col("eid").as("elem"))),
           graft.Q.persistOnce(py0.join(dict, "elem")

@@ -28,7 +28,7 @@ import org.apache.spark.sql.functions._
   * aggregate (the LabelProp idiom — never a raw-row window), and the
   * result unions into the output lineage; `steps` is caller-bounded so
   * run time never becomes data-dependent. Frontier lineage is cut per
-  * step with eager localCheckpoint (the Louvain/KCore contract).
+  * step by [[Rounds.cut]] (the Louvain/KCore contract).
   * Isolated nodes produce length-0 walks (just the start row); the
   * symmetrized graph has no other dead ends.
   *
@@ -44,7 +44,7 @@ object RandomWalk {
   /** Size-guarded routing bound (the PageRank.runLocal / Louvain
     * posture): a symmetrized adjacency inside the bound walks on the
     * driver at zero per-step job cost — each distributed step is ~2
-    * fixed-cost jobs (frontier join+argmax, eager checkpoint) and, more
+    * fixed-cost jobs (frontier join+argmax, cut) and, more
     * importantly, the md5 choice hash evaluates through the interpreted
     * conv(substring(md5)) expression chain per candidate row, where the
     * local tier's allocation-free digest is ~20x cheaper per candidate
@@ -78,10 +78,9 @@ object RandomWalk {
 
     val nodes = sym.select(col("src").as("start")).distinct()
     val walkIds = (0 until walksPerNode).map(lit(_))
-    var frontier = nodes
+    var frontier = Rounds.cut(nodes
       .select(col("start"), explode(array(walkIds: _*)).as("w"))
-      .withColumn("node", col("start"))
-      .localCheckpoint(true)
+      .withColumn("node", col("start")))
     var out = frontier.select(col("start"), col("w"), lit(0).as("step"), col("node"))
     for (s <- 1 to steps) {
       // argmin_u hash60(seed:w:s:node:u) per (start, w) — one equi-join
@@ -89,18 +88,17 @@ object RandomWalk {
       val h = graft.functions.GraftFunctions.hash60(
         concat(lit(seed + ":"), col("w").cast("string"), lit(s":$s:"),
           col("node").cast("string"), lit(":"), col("dst").cast("string")))
-      val next = frontier
+      val next = Rounds.cut(frontier
         .join(sym, col("node") === col("src"))
         .select(col("start"), col("w"), h.as("h"), col("dst"))
         .groupBy("start", "w")
         .agg(max(struct((-col("h")).as("nh"), (-col("dst")).as("nd"))).as("mx"))
-        .select(col("start"), col("w"), (-col("mx.nd")).as("node"))
-        .localCheckpoint(true)
+        .select(col("start"), col("w"), (-col("mx.nd")).as("node")))
       out = out.unionByName(
         next.select(col("start"), col("w"), lit(s).as("step"), col("node")))
       frontier = next
     }
-    // every step is an eager checkpoint, so the result lineage never
+    // every step is a materialized cut, so the result lineage never
     // re-reads the intake or adjacency caches — release them (guide §5)
     gate.release()
     out

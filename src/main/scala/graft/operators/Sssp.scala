@@ -21,9 +21,10 @@ import org.apache.spark.sql.functions._
   * partial-agg'd min fold; a node whose distance did not improve
   * re-propagates nothing (its out-edges were already relaxed at that
   * distance in an earlier round — the classic delta-stepping argument),
-  * so round cost is |frontier ⋈ edges|, never |V ⋈ E|. The distance
-  * table is persisted and swapped per round to keep lineage flat, and a
-  * drained frontier exits the loop early. The improved-this-round mark
+  * so round cost is |frontier ⋈ edges|, never |V ⋈ E|. Each round's
+  * distance table is cut by [[Rounds.cutWith]], whose materializing job
+  * also counts the frontier, and a drained frontier exits the loop early.
+  * The improved-this-round mark
   * rides the SAME min fold (min over struct(dist, round) — least dist
   * wins, ties keep the EARLIEST round, so a re-found equal distance
   * never re-enters the frontier); no extra join is spent detecting
@@ -75,32 +76,25 @@ object Sssp {
         lit(" with upstream dist "), col("dist").cast("string"),
         lit(" leaves the int64 relaxation domain (w must be >= 0 and "),
         lit("dist + w < 2^63); rescale weights to a coarser unit")))
-    // persistOnce, not persist: deterministic re-runs of the final plan
-    // (Bench min-of-2, Verify after tests) should reuse the cached copy,
-    // not re-persist it.
-    var dist = graft.Q.persistOnce(spark.range(1)
-      .select(lit(src).as("node"), lit(0L).as("dist"), lit(0).cast("int").as("r")))
+    var dist = spark.range(1)
+      .select(lit(src).as("node"), lit(0L).as("dist"), lit(0).cast("int").as("r"))
     var r = 1
     var drained = false
     while (r <= rounds && !drained) {
       val frontier = dist.filter(col("r") === r - 1).select("node", "dist")
       val reached = frontier.join(e, col("node") === col("src"))
         .select(col("dst").as("node"), relaxed.as("dist"), lit(r).cast("int").as("r"))
-      val next = graft.Q.persistOnce(dist.union(reached)
+      val (next, improved) = Rounds.cutWith[Long](dist.union(reached)
         .groupBy("node")
         .agg(min(struct(col("dist"), col("r"))).as("best"))
-        .select(col("node"), col("best.dist").as("dist"), col("best.r").as("r")))
-      // one materializing job per round (needed for the persist swap);
-      // its frontier-size filter doubles as the free early-exit test
-      val improved = next.filter(col("r") === r).count()
-      dist.unpersist()
+        .select(col("node"), col("best.dist").as("dist"), col("best.r").as("r")),
+        count(when(col("r") === r, 1)))
       dist = next
       drained = improved == 0L
       r += 1
     }
-    // the returned O(|V|) state is cache-backed and materialized; the
-    // O(|E|) edge cache is only a recompute fallback now — release it
-    // (guide §5: |E| >> |V| at scale)
+    // the returned O(|V|) state is checkpointed; the O(|E|) edge cache is
+    // never read again (guide §5: |E| >> |V| at scale)
     gate.release()
     dist.select("node", "dist")
   }

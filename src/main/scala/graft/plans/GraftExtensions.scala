@@ -41,28 +41,26 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
 object GraftExtensions {
 
-  val dotFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_dot"),
-    new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
-    (children: Seq[Expression]) => {
+  /** One native function's registration: its SQL name, the expression
+    * class `DESCRIBE FUNCTION` reports, and its builder. */
+  private def fn(name: String, cls: Class[_])(builder: Seq[Expression] => Expression)
+      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
+    (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), builder)
+
+  /** Every native function, optimizer rule and planner strategy, listed
+    * once in registration order. */
+  private val functions = Seq(
+    fn("graft_dot", classOf[DotProduct]) { children =>
       require(children.size == 2, "graft_dot takes exactly 2 arguments")
       DotProduct(children.head, children(1))
-    })
-
-  /** graft_dot_i8(a, b) — int8 dot product (quantized ANN kernel). */
-  val dotI8Function: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_dot_i8"),
-    new ExpressionInfo(classOf[IntDotProduct].getName, "graft_dot_i8"),
-    (children: Seq[Expression]) => {
+    },
+    // graft_dot_i8(a, b) — int8 dot product (quantized ANN kernel)
+    fn("graft_dot_i8", classOf[IntDotProduct]) { children =>
       require(children.size == 2, "graft_dot_i8 takes exactly 2 arguments")
       IntDotProduct(children.head, children(1))
-    })
-
-  /** graft_top_k(col, k[, capacity]) — Space-Saving heavy hitters. */
-  val topKFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_top_k"),
-    new ExpressionInfo(classOf[SpaceSavingTopK].getName, "graft_top_k"),
-    (children: Seq[Expression]) => {
+    },
+    // graft_top_k(col, k[, capacity]) — Space-Saving heavy hitters
+    fn("graft_top_k", classOf[SpaceSavingTopK]) { children =>
       def intLit(e: Expression, what: String): Int = e match {
         case Literal(v: Int, _) => v
         case other => throw new IllegalArgumentException(s"graft_top_k $what must be an int literal, got $other")
@@ -74,33 +72,26 @@ object GraftExtensions {
           SpaceSavingTopK(c, intLit(k, "k"), intLit(cap, "capacity")).toAggregateExpression()
         case _ => throw new IllegalArgumentException("graft_top_k takes (col, k[, capacity])")
       }
-    })
-
-  /** graft_capped_collect(idCol, capPlus1) — bounded-buffer id collector. */
-  val cappedCollectFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_capped_collect"),
-    new ExpressionInfo(classOf[CappedCollect].getName, "graft_capped_collect"),
-    (children: Seq[Expression]) => children match {
+    },
+    // graft_hll(hash60Col) — HyperLogLog register array (64 ints)
+    fn("graft_hll", classOf[HllRegisters]) { children =>
+      require(children.size == 1, "graft_hll takes exactly 1 argument (a 60-bit hash column)")
+      HllRegisters(children.head).toAggregateExpression()
+    },
+    // graft_capped_collect(idCol, capPlus1) — bounded-buffer id collector
+    fn("graft_capped_collect", classOf[CappedCollect]) {
       case Seq(c, Literal(cap: Int, _)) => CappedCollect(c, cap).toAggregateExpression()
       case _ => throw new IllegalArgumentException(
         "graft_capped_collect takes (col, capPlus1: int literal)")
-    })
-
-  /** graft_simhash(hvCol, bits) — single-buffer SimHash fold. */
-  val simhashFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_simhash"),
-    new ExpressionInfo(classOf[SimhashAgg].getName, "graft_simhash"),
-    (children: Seq[Expression]) => children match {
+    },
+    // graft_simhash(hvCol, bits) — single-buffer SimHash fold
+    fn("graft_simhash", classOf[SimhashAgg]) {
       case Seq(c, Literal(bits: Int, _)) => SimhashAgg(c, bits).toAggregateExpression()
       case _ => throw new IllegalArgumentException(
         "graft_simhash takes (hvCol, bits: int literal)")
-    })
-
-  /** graft_tdigest(col, p...) — t-digest quantile estimates. */
-  val tdigestFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_tdigest"),
-    new ExpressionInfo(classOf[TDigestAgg].getName, "graft_tdigest"),
-    (children: Seq[Expression]) => {
+    },
+    // graft_tdigest(col, p...) — t-digest quantile estimates
+    fn("graft_tdigest", classOf[TDigestAgg]) { children =>
       require(children.size >= 2, "graft_tdigest takes (col, p1[, p2, ...])")
       // SQL-text percentiles parse as DecimalType literals carrying
       // o.a.s.sql.types.Decimal (graft_tdigest(x, 0.5)); integer literals
@@ -115,49 +106,27 @@ object GraftExtensions {
           s"graft_tdigest percentiles must be numeric literals, got $other")
       }
       TDigestAgg(children.head, ps).toAggregateExpression()
-    })
-
-  /** graft_bottom_k(keyCol, payloadCol, k[, desc]) — k smallest (or, with
-    * desc = true, largest) (key, payload) pairs per group over any
-    * orderable key/payload types: the one-shuffle coordinated-sampling
-    * and grouped-top-k kernel. */
-  val bottomKFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_bottom_k"),
-    new ExpressionInfo(classOf[BottomKAgg].getName, "graft_bottom_k"),
-    (children: Seq[Expression]) => children match {
+    },
+    // graft_bottom_k(keyCol, payloadCol, k[, desc]) — k smallest (or, with
+    // desc = true, largest) (key, payload) pairs per group over any
+    // orderable key/payload types: the one-shuffle coordinated-sampling
+    // and grouped-top-k kernel
+    fn("graft_bottom_k", classOf[BottomKAgg]) {
       case Seq(key, payload, Literal(k: Int, _)) =>
         BottomKAgg(key, payload, k).toAggregateExpression()
       case Seq(key, payload, Literal(k: Int, _), Literal(desc: Boolean, _)) =>
         BottomKAgg(key, payload, k, desc).toAggregateExpression()
       case _ => throw new IllegalArgumentException(
         "graft_bottom_k takes (keyCol, payloadCol, k: int literal[, desc: boolean literal])")
-    })
-
-  /** graft_bloom(hash60Col, bits, k) — deterministic Bloom filter word
-    * array (bits/64 longs, elementwise-OR mergeable). */
-  val bloomFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_bloom"),
-    new ExpressionInfo(classOf[BloomAgg].getName, "graft_bloom"),
-    (children: Seq[Expression]) => children match {
+    },
+    // graft_bloom(hash60Col, bits, k) — deterministic Bloom filter word
+    // array (bits/64 longs, elementwise-OR mergeable)
+    fn("graft_bloom", classOf[BloomAgg]) {
       case Seq(c, Literal(bits: Int, _), Literal(k: Int, _)) =>
         BloomAgg(c, bits, k).toAggregateExpression()
       case _ => throw new IllegalArgumentException(
         "graft_bloom takes (hash60Col, bits: int literal, k: int literal)")
     })
-
-  /** graft_hll(hash60Col) — HyperLogLog register array (64 ints). */
-  val hllFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_hll"),
-    new ExpressionInfo(classOf[HllRegisters].getName, "graft_hll"),
-    (children: Seq[Expression]) => {
-      require(children.size == 1, "graft_hll takes exactly 1 argument (a 60-bit hash column)")
-      HllRegisters(children.head).toAggregateExpression()
-    })
-
-  /** Every native function, optimizer rule and planner strategy, listed
-    * once in registration order. */
-  private val functions = Seq(dotFunction, dotI8Function, topKFunction, hllFunction,
-    cappedCollectFunction, simhashFunction, tdigestFunction, bottomKFunction, bloomFunction)
   private val rules: Seq[Rule[LogicalPlan]] =
     Seq(RewriteDotProduct, RewriteIntersectOverlap, PushAggThroughJoin)
   private val strategies: Seq[SparkStrategy] = Seq(AsOfJoinStrategy)

@@ -464,9 +464,11 @@ class PlanQualitySpec extends SparkSpec with RegistrySweep {
     val spSyn = spark.range(300).selectExpr(
       "id % 40 as src", "(id * 7) % 40 as dst", "1L + id % 9 as w")
       .filter("src <> dst")
-    val spQe = graft.operators.LocalTier.forcingDistributed(graft.operators.Sssp
-      .distances(spSyn, 0L, 3)).queryExecution
-    val spDist = spQe.executedPlan.toString + cachedFinalText(spQe)
+    // Each round's state is a checkpoint, so the returned frame plans as
+    // a scan: read the executed plans of the call's round jobs instead.
+    val (_, spActions) = ActionPlans.during(spark)(graft.operators.LocalTier
+      .forcingDistributed(graft.operators.Sssp.distances(spSyn, 0L, 3)))
+    val spDist = spActions.map { case (_, qe) => qe.executedPlan.toString }.mkString("\n")
     assert(!spDist.contains("CartesianProduct"),
       s"Sssp distributed tier went cartesian:\n$spDist")
     assert(spDist.contains("partial_min"),
@@ -702,22 +704,15 @@ class PlanQualitySpec extends SparkSpec with RegistrySweep {
       p.contains("BroadcastHashJoin"), s"no equi-join found:\n$p")
   }
 
-  test("every size-gated operator evaluates its input exactly once on both routes") {
-    // The LocalTier gate must add no pass over the input on either route:
-    // the gate count fills the cache (or eager checkpoint) that the
-    // local-tier collect AND the distributed plan read. A distributed
-    // plan built from the raw input instead of the gate frame would
-    // compute a possibly expensive derivation twice big-side (q133/q274's
-    // edges are exact similarity self-joins; cache lookup is by
-    // canonicalized subtree, and a raw frame with any extra column does
-    // not match the cached narrowing projection). Count evaluations with
-    // an accumulator-bearing filter in each operator's input: exactly
-    // one per input row, per call, on each route. The payload column
-    // makes every operator projection NARROWING — with exactly the
-    // projected columns a trivial Project canonicalizes away and even a
-    // broken shape accidentally cache-matches, which is what hid this in
-    // r15. It also differs per call, so no call reads another call's
-    // pinned gate cache.
+  /** Every size-gated operator's call over a fresh input. Each input
+    * counts its evaluations with an accumulator-bearing filter: exactly
+    * one per input row, per call, on each route. The payload column
+    * makes every operator projection NARROWING — with exactly the
+    * projected columns a trivial Project canonicalizes away and even a
+    * broken shape accidentally cache-matches, which is what hid this in
+    * r15. It also differs per call, so no call reads another call's
+    * pinned gate cache. */
+  private object gated {
     import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.functions.{col, udf}
     import graft.operators._
@@ -727,20 +722,23 @@ class PlanQualitySpec extends SparkSpec with RegistrySweep {
     // does not serve evaluates it too), and nondeterministic, so the
     // optimizer never copies it as an inferred constraint onto the other
     // side of a join over a checkpoint of the input
-    val tick = udf { (a: Long) => evals.add(1L); a >= 0L }.asNondeterministic()
-    var tag = 0L
-    def input(ticked: String, exprs: String*)(): DataFrame = {
+    private val tick = {
+      val acc = evals // capture the accumulator, not this object
+      udf { (a: Long) => acc.add(1L); a >= 0L }.asNondeterministic()
+    }
+    private var tag = 0L
+    private def input(ticked: String, exprs: String*)(): DataFrame = {
       tag += 1
       spark.range(n).selectExpr(exprs :+ s"id + $tag as payload": _*)
         .filter(tick(col(ticked)))
     }
-    val events = input("sid", "id % 40 as sid", "cast(id % 5 as string) as e",
+    private val events = input("sid", "id % 40 as sid", "cast(id % 5 as string) as e",
       "id div 40 + 1 as pos") _
-    val edges = input("a", "id % 40 as a", "(id * 13) % 40 as b") _
-    val pairs = input("a", "id div 20 as a", "20 + id % 20 as b") _ // distinct, a != b
-    val arcs = input("src", "id % 40 as src", "(id * 7 + 1) % 40 as dst") _
-    val nodes = spark.range(40).selectExpr("id as node")
-    val seeds = nodes.selectExpr("node", "node % 3 as lbl").filter("node % 7 = 0")
+    private val edges = input("a", "id % 40 as a", "(id * 13) % 40 as b") _
+    private val pairs = input("a", "id div 20 as a", "20 + id % 20 as b") _ // distinct, a != b
+    private val arcs = input("src", "id % 40 as src", "(id * 7 + 1) % 40 as dst") _
+    private val nodes = spark.range(40).selectExpr("id as node")
+    private val seeds = nodes.selectExpr("node", "node % 3 as lbl").filter("node % 7 = 0")
     val cases = Seq[(String, () => DataFrame, DataFrame => DataFrame)](
       ("PrefixSpan", events, PrefixSpan.frequentPatterns(_, 30, 3)),
       ("PrefixSpan max-gap", events, PrefixSpan.frequentPatternsMaxGap(_, 25, 3, 2)),
@@ -766,6 +764,20 @@ class PlanQualitySpec extends SparkSpec with RegistrySweep {
           "1 + id % 5 as freq",
           "transform(sequence(1, length(word)), i -> substring(word, i, 1)) as toks"),
         Bpe.train(_, 3)._2))
+  }
+
+  test("every size-gated operator evaluates its input exactly once on both routes") {
+    // The LocalTier gate must add no pass over the input on either route:
+    // the gate count fills the cache (or eager checkpoint) that the
+    // local-tier collect AND the distributed plan read. A distributed
+    // plan built from the raw input instead of the gate frame would
+    // compute a possibly expensive derivation twice big-side (q133/q274's
+    // edges are exact similarity self-joins; cache lookup is by
+    // canonicalized subtree, and a raw frame with any extra column does
+    // not match the cached narrowing projection).
+    import org.apache.spark.sql.DataFrame
+    import graft.operators.LocalTier
+    import gated._
     def evaluations(out: => DataFrame): Long = {
       evals.reset()
       out.collect()
@@ -785,6 +797,37 @@ class PlanQualitySpec extends SparkSpec with RegistrySweep {
           s"$name dropped the caller's persisted input")
       } finally mine.unpersist()
     }
+  }
+
+  test("the distributed iterative loops leave no session cache entry behind") {
+    // Round state is checkpointed (operators.Rounds), never cached, and
+    // each gate releases the caches it made: a forced-distributed call
+    // adds no CacheManager entry, and keeps a caller-persisted input.
+    // PrefixSpan and Apriori are left out: their per-level persistOnce
+    // chains are not round state.
+    import graft.operators.LocalTier
+    import gated._
+    def added(run: => Unit): Int = {
+      val before = org.apache.spark.sql.GraftTestBus.cachedEntries(spark)
+      run
+      org.apache.spark.sql.GraftTestBus.cachedEntries(spark) - before
+    }
+    val left = cases
+      .filterNot { case (name, _, _) => name.startsWith("PrefixSpan") || name == "Apriori" }
+      .flatMap { case (name, mk, op) =>
+        val fresh = added(LocalTier.forcingDistributed(op(mk())).collect())
+        val mine = mk().persist()
+        try {
+          val kept = added(LocalTier.forcingDistributed(op(mine)).collect())
+          assert(mine.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
+            s"$name dropped the caller's persisted input")
+          Seq(("fresh input", fresh), ("persisted input", kept)).collect {
+            case (in, k) if k != 0 => s"$name, $in: $k entries"
+          }
+        } finally mine.unpersist()
+      }
+    assert(left.isEmpty,
+      s"distributed routes left cache entries behind:\n${left.mkString("\n")}")
   }
 
   test("no registered query cartesian-joins two unbounded sides") {
